@@ -6,40 +6,28 @@ import org.apache.spark.sql.functions._
 /** Focused profiler for the streaming near-dup dedup path — the round-5
   * headline (STREAMBENCH_r4 measured 168 docs/s, two orders below the
   * batch twin). Runs ONLY the dedup segment of [[StreamBench]], with
-  * per-batch progress metrics always on, so engine/store/band variants
+  * per-batch progress metrics always on, so band and corpus variants
   * can be compared in minutes instead of a full StreamBench lap.
   *
-  * {{{ sbt "runMain graft.DedupProfile [nDocs] [batches] [bands] [engine] [store]" }}}
-  *
-  * engine: tws (default) | fmgws
-  * store:  rocksdb (default) | hdfs
+  * {{{ sbt "runMain graft.DedupProfile [nDocs] [batches] [bands]" }}}
   */
 object DedupProfile {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toInt).getOrElse(20000)
     val batches = args.lift(1).map(_.toInt).getOrElse(4)
     val bands = args.lift(2).map(_.toInt).getOrElse(16)
-    val engine = args.lift(3).getOrElse("tws")
-    val store = args.lift(4).getOrElse("rocksdb")
-    // transformWithState only runs on the RocksDB provider; a tws+hdfs
-    // request would fail at query start with Spark's provider check, so
-    // fail fast with the actionable combination instead.
-    require(engine != "tws" || store == "rocksdb",
-      "engine=tws requires store=rocksdb (transformWithState rejects the " +
-        "HDFS-backed state store); use engine=fmgws to A/B the hdfs store")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.local.dir", SessionTuning.localDir)
       .config("spark.sql.optimizer.excludedRules", SessionTuning.excludedRules)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    if (store == "rocksdb") builder
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    val spark = builder.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val t0 = 1650557501028L
@@ -61,10 +49,8 @@ object DedupProfile {
           concat_ws(" ", template: _*))
           .otherwise(concat_ws(" ", words: _*)).as("text"))
     val bandedDocs = graft.streaming.StreamingDedup.banded(docFrame, bands = bands)
-    val out = (engine match {
-      case "fmgws" => graft.streaming.StreamingDedup.run(bandedDocs)
-      case _ => graft.streaming.StreamingDedup.runTws(bandedDocs)
-    }).toDF().writeStream.format("noop").outputMode("append")
+    val out = graft.streaming.StreamingDedup.run(bandedDocs)
+      .toDF().writeStream.format("noop").outputMode("append")
     val q = out.start()
     val start = System.nanoTime()
     try {
@@ -85,7 +71,7 @@ object DedupProfile {
       }
     } finally q.stop()
     val secs = (System.nanoTime() - start) / 1e9
-    println(f"""{"metric":"dedup_profile","docs":$nDocs,"batches":$batches,"bands":$bands,"engine":"$engine","store":"$store","secs":$secs%.1f,"docs_per_sec":${nDocs / secs}%.0f}""")
+    println(f"""{"metric":"dedup_profile","docs":$nDocs,"batches":$batches,"bands":$bands,"secs":$secs%.1f,"docs_per_sec":${nDocs / secs}%.0f}""")
     spark.stop()
   }
 }

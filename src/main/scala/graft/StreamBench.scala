@@ -81,20 +81,15 @@ object StreamBench {
         case "planAll" =>
           graft.cep.CepQuery.planAll(metricFrame, ruleDF)
             .writeStream.format("noop").outputMode("update")
-        case "fmgws" =>
-          StatefulCep.run(StatefulCep.fanOut(metricFrame, ruleDF))
-            .toDF()
-            .writeStream.format("noop").outputMode("append")
         case "dynamic" =>
           // Zero-downtime path: rules resolved per task from the
           // published snapshot instead of a plan-frozen broadcast.
-          graft.streaming.TransformCep.run(
+          StatefulCep.run(
             graft.streaming.DynamicRules.fanOut(metricFrame, dynRuleDir))
             .toDF()
             .writeStream.format("noop").outputMode("append")
         case _ =>
-          graft.streaming.TransformCep.run(
-            StatefulCep.fanOut(metricFrame, ruleDF))
+          StatefulCep.run(StatefulCep.fanOut(metricFrame, ruleDF))
             .toDF()
             .writeStream.format("noop").outputMode("append")
       }
@@ -135,7 +130,7 @@ object StreamBench {
           when(pmod(col("id"), lit(16)) === 0,
             concat_ws(" ", template: _*))
             .otherwise(concat_ws(" ", words: _*)).as("text"))
-      val out = graft.streaming.StreamingDedup.runTws(
+      val out = graft.streaming.StreamingDedup.run(
         graft.streaming.StreamingDedup.banded(docFrame, bands = dedupBands)).toDF()
         .writeStream.format("noop").outputMode("append")
       val q = out.start()
@@ -236,11 +231,9 @@ object StreamBench {
     }
 
     // Rule-SWAP cost: process the same event volume while the rule
-    // book changes between micro-batches — dynamic mode (snapshot
-    // publish, query running) vs restart mode (stop + start on the
-    // stable checkpoint, the pre-dynamic pickup path). The throughput
-    // gap IS the downtime the zero-downtime mode removes.
-    def runWithSwaps(dynamic: Boolean): Double = {
+    // book changes between micro-batches — each upsert is a snapshot
+    // publish with the dynamic query running.
+    def runWithSwaps(): Double = {
       val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Int]
       val per = nEvents / batches
       val metricFrame = () => mem.toDF()
@@ -258,8 +251,7 @@ object StreamBench {
         graft.streaming.StreamingEngine.SinkConfig(format = "noop",
           outputMode = "append", checkpointRoot = Some(s"$tmp/ckpt")))
       val ruleDir = s"$tmp/rules"
-      if (dynamic) engine.startOnePassDynamic(ruleDir)
-      else engine.startOnePassStateful()
+      engine.startOnePassDynamic(ruleDir)
       val start = System.nanoTime()
       try {
         (0 until batches).foreach { b =>
@@ -268,10 +260,8 @@ object StreamBench {
           // One rule upsert between every pair of micro-batches.
           val changed = rules.head.copy(ruleId = 1000 + b)
           book.applyChanges(Seq(Metrics.toRow(changed)))
-          if (dynamic)
-            graft.streaming.DynamicRules.persist(
-              spark, ruleDir, book.version, book.activeRules)
-          else { engine.startOnePassStateful(); () }
+          graft.streaming.DynamicRules.persist(
+            spark, ruleDir, book.version, book.activeRules)
         }
         mem.addData(batches)
         engine.awaitQuiescence()
@@ -295,7 +285,7 @@ object StreamBench {
 
     // Warm-up lap (JIT, codegen cache, state-store init) — streaming
     // micro-benchmarks are meaningless cold.
-    run("planAll"); run("stateful"); run("fmgws"); run("dynamic"); runDedup()
+    run("planAll"); run("stateful"); run("dynamic"); runDedup()
     Bench.calibLap(); Bench.calibLap() // JIT the calibration loop
 
     class RowAcc {
@@ -312,21 +302,20 @@ object StreamBench {
           s""""lap_calib_ratios":${ratios.map(r => f"$r%.3f").mkString("[", ",", "]")}}"""
       }
     }
-    val engines = Seq("planAll", "stateful", "fmgws", "dynamic")
+    val engines = Seq("planAll", "stateful", "dynamic")
     val acc = engines.map(e => e -> new RowAcc).toMap
     for (_ <- 0 until throughputLaps; e <- engines) acc(e).add(run(e))
 
     // Heavy rows (swap / dedup / big-book), same interleaving at
     // `heavyLaps`.
-    val swapDynAcc = new RowAcc; val swapRstAcc = new RowAcc
+    val swapDynAcc = new RowAcc
     val dedupAcc = new RowAcc; val enrichAcc = new RowAcc
     val big64Acc = new RowAcc; val big1024Acc = new RowAcc
     var nDocs = 0L
     var small64PlanMs = 0L; var big1024PlanMs = 0L
     runBigBook(64); runEnrich() // warm-up for the heavy shapes
     for (_ <- 0 until heavyLaps) {
-      swapDynAcc.add(runWithSwaps(dynamic = true))
-      swapRstAcc.add(runWithSwaps(dynamic = false))
+      swapDynAcc.add(runWithSwaps())
       val (d, nd) = runDedup(); nDocs = nd; dedupAcc.add(d)
       val (en, _) = runEnrich(); enrichAcc.add(en)
       val (s64, p64) = runBigBook(64); small64PlanMs = p64; big64Acc.add(s64)
@@ -334,19 +323,18 @@ object StreamBench {
       big1024Acc.add(b1024)
     }
 
-    val allRatios = (engines.map(acc) ++ Seq(swapDynAcc, swapRstAcc,
+    val allRatios = (engines.map(acc) ++ Seq(swapDynAcc,
       dedupAcc, enrichAcc, big64Acc, big1024Acc)).flatMap(_.ratios)
     val calibJson =
       s"""{"ref_sec":${Bench.CalibRefSec},""" +
         f""""ratio":${allRatios.min}%.3f,"ratio_max":${allRatios.max}%.3f}"""
     val rowsJson = (engines.map(e => s""""$e":${acc(e).json}""") ++ Seq(
       s""""swap_dynamic":${swapDynAcc.json}""",
-      s""""swap_restart":${swapRstAcc.json}""",
       s""""dedup":${dedupAcc.json}""",
       s""""enrich":${enrichAcc.json}""",
       s""""bigbook_64":${big64Acc.json}""",
       s""""bigbook_1024":${big1024Acc.json}""")).mkString("{", ",", "}")
-    println(f"""{"metric":"stream_throughput","unit":"events_per_sec","n_events":$nEvents,"n_rules":$nRules,"laps_per_row":$throughputLaps,"planAll_update":${acc("planAll").best}%.0f,"stateful_append":${acc("stateful").best}%.0f,"fmgws_append":${acc("fmgws").best}%.0f,"dynamic_append":${acc("dynamic").best}%.0f,"swap_per_batch_dynamic":${swapDynAcc.best}%.0f,"swap_per_batch_restart":${swapRstAcc.best}%.0f,"dedup_docs":$nDocs,"dedup_docs_per_sec":${dedupAcc.best}%.0f,"enrich_docs_per_sec":${enrichAcc.best}%.0f,"bigbook_64_rules_ev_per_sec":${big64Acc.best}%.0f,"bigbook_1024_rules_ev_per_sec":${big1024Acc.best}%.0f,"bigbook_64_plan_ms":$small64PlanMs,"bigbook_1024_plan_ms":$big1024PlanMs,"rows":$rowsJson,"calib":$calibJson}""")
+    println(f"""{"metric":"stream_throughput","unit":"events_per_sec","n_events":$nEvents,"n_rules":$nRules,"laps_per_row":$throughputLaps,"planAll_update":${acc("planAll").best}%.0f,"stateful_append":${acc("stateful").best}%.0f,"dynamic_append":${acc("dynamic").best}%.0f,"swap_per_batch_dynamic":${swapDynAcc.best}%.0f,"dedup_docs":$nDocs,"dedup_docs_per_sec":${dedupAcc.best}%.0f,"enrich_docs_per_sec":${enrichAcc.best}%.0f,"bigbook_64_rules_ev_per_sec":${big64Acc.best}%.0f,"bigbook_1024_rules_ev_per_sec":${big1024Acc.best}%.0f,"bigbook_64_plan_ms":$small64PlanMs,"bigbook_1024_plan_ms":$big1024PlanMs,"rows":$rowsJson,"calib":$calibJson}""")
     spark.stop()
   }
 }

@@ -235,9 +235,9 @@ object CepQuery {
     * so the plan still shuffles exactly once.
     *
     * Batch path (streaming forbids plain window functions): on streams,
-    * first-event alignment lives in the stateful engines —
-    * [[graft.streaming.StatefulCep]] / TransformCep with
-    * `Alignment.FirstEvent`, whose per-key anchor is the same grid. */
+    * first-event alignment lives in the stateful engine —
+    * [[graft.streaming.StatefulCep]] with `Alignment.FirstEvent`,
+    * whose per-key anchor is the same grid. */
   def planAllFirstAligned(metricFrame: DataFrame, ruleFrame: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val prepared = prepareFanned(fanOutJoin(metricFrame, ruleFrame))

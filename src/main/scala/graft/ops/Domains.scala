@@ -569,8 +569,13 @@ object Domains {
     // (and outdeg, and nodes) — without the checkpoint each iteration
     // re-runs the whole upstream edge-building plan (HTML extraction,
     // domain resolution, the count shuffle) from the source.
+    // An edge with a null endpoint has no node to carry rank: drop it
+    // here, before the path dispatch, so the in-memory loop (where null
+    // is an ordinary map key) and the distributed loop (whose
+    // equi-joins never match null) see the same graph.
     val e = edges.select(col("src_domain").cast("string").as("src"),
-      col("dst_domain").cast("string").as("dst")).distinct()
+      col("dst_domain").cast("string").as("dst"))
+      .where(col("src").isNotNull && col("dst").isNotNull).distinct()
       .localCheckpoint()
     // SMALL-GRAPH FAST PATH (r15, the [[Dedup.components]] trade): a
     // domain graph at or under `maxDriverEdges` rows — known from a

@@ -60,7 +60,7 @@ object CepRunner {
     * testing without external feeders: each tick becomes a metric in
     * the engine's canonical shape (`nGroups` round-robin tag groups,
     * value cycling 0..99), directly consumable by CepQuery plans and
-    * the stateful engines. */
+    * the stateful engine. */
   def rateMetrics(spark: SparkSession, rowsPerSecond: Int,
       nGroups: Int = 8): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -74,22 +74,20 @@ object CepRunner {
   }
 
   /** args: [host] [metricPort] [rulePort] [mode]; mode `per-rule`
-    * (default — one query per ACTIVE rule, update-mode console),
-    * `one-pass` (ONE append-mode transformWithState query over the
-    * whole rule book, restarted on rule changes, checkpointed so
-    * window state survives restarts), or `dynamic` (the production
-    * default: same one-pass stateful query, but rule changes are
-    * published as [[DynamicRules]] snapshots and take effect on the
-    * next micro-batch with the query running — zero downtime, the
-    * reference's broadcast-state semantics).
+    * (default — one query per ACTIVE rule, update-mode console) or
+    * `dynamic` (the production default: ONE append-mode
+    * transformWithState query over the whole rule book, checkpointed;
+    * rule changes are published as [[DynamicRules]] snapshots and take
+    * effect on the next micro-batch with the query running — zero
+    * downtime, the reference's broadcast-state semantics).
     *
     * Global (All-window) rules: use `per-rule`. A global window never
-    * closes, so the append-mode stateful engines (`one-pass`,
-    * `dynamic`) never emit for it — matching the reference's
-    * observable behavior (its global trigger never fires, SURVEY
-    * §2.4); the per-rule declarative path runs global rules in UPDATE
-    * mode, emitting the running aggregate per micro-batch, which is
-    * the output a user deploying a global rule actually wants. */
+    * closes, so the append-mode stateful engine (`dynamic`) never
+    * emits for it — matching the reference's observable behavior (its
+    * global trigger never fires, SURVEY §2.4); the per-rule
+    * declarative path runs global rules in UPDATE mode, emitting the
+    * running aggregate per micro-batch, which is the output a user
+    * deploying a global rule actually wants. */
   def main(args: Array[String]): Unit = {
     val host = args.headOption.getOrElse("localhost")
     val metricPort = args.lift(1).map(_.toInt).getOrElse(9999)
@@ -98,6 +96,7 @@ object CepRunner {
     val spark = SparkSession.builder()
       .master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
+      .config("spark.sql.optimizer.excludedRules", graft.SessionTuning.excludedRules)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -106,26 +105,20 @@ object CepRunner {
     val book = new RuleBook
     val metricSource =
       () => Parsers.parseMetrics(socketLines(spark, host, metricPort))
-    def statefulEngine(): StreamingEngine = {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_one_pass_").toString
-      new StreamingEngine(spark, metricSource, book,
-        StreamingEngine.SinkConfig(format = "console",
-          outputMode = "append", checkpointRoot = Some(ckpt)))
-    }
     val control = mode match {
       case "dynamic" =>
-        val engine = statefulEngine()
+        spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+        val ckpt = java.nio.file.Files
+          .createTempDirectory("graft_one_pass_").toString
+        val engine = new StreamingEngine(spark, metricSource, book,
+          StreamingEngine.SinkConfig(format = "console",
+            outputMode = "append", checkpointRoot = Some(ckpt)))
         val ruleDir = java.nio.file.Files
           .createTempDirectory("graft_dyn_rules_").toString
         engine.startOnePassDynamic(ruleDir)
         engine.attachRuleStreamDynamic(
           socketLines(spark, host, rulePort), ruleDir)
-      case "one-pass" =>
-        val engine = statefulEngine()
-        engine.attachRuleStreamOnePass(socketLines(spark, host, rulePort))
       case _ =>
         val engine = new StreamingEngine(spark, metricSource, book,
           StreamingEngine.SinkConfig(format = "console", outputMode = "update"))

@@ -2,11 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.model._
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
-/** Per-event, per-(rule,group) stateful window engine on
-  * `flatMapGroupsWithState` — the faithful rebuild of the reference's
+/** Per-event, per-(rule,group) stateful window engine on Spark 4's
+  * `transformWithState` — the faithful rebuild of the reference's
   * imperative processing model (reference: engine/CEPEngine.java:36-64:
   * one `WindowAssigner` per groupId owning open windows;
   * engine/window/Window.java:40-47: per-event fold into running
@@ -33,15 +32,29 @@ import graft.model._
   * `originValues` buffer; the reference's unbounded TreeMap leak,
   * SURVEY §2.4 #1, is structurally impossible here). Keys are
   * (rule_id, group values), identical to the reference's
-  * `keyBy(groupId)` partitioning.
+  * `keyBy(groupId)` partitioning. State lives in a named, typed
+  * [[ValueState]] and firing is timer-driven: each key keeps ONE
+  * event-time timer at its earliest open window end, and
+  * `handleExpiredTimer` fires and re-arms. Requires the RocksDB state
+  * store provider (`spark.sql.streaming.stateStore.providerClass`).
+  *
+  * Retention note: Spark's native state TTL (`TTLConfig`) is
+  * processing-time based and is REJECTED in `TimeMode.EventTime`
+  * ([STATEFUL_PROCESSOR_INCORRECT_TIME_MODE_TO_ASSIGN_TTL]), so this
+  * engine deliberately exposes no TTL knob. It does not need one for
+  * boundedness: every open window's end carries a timer, and a key's
+  * state is cleared entirely once no window remains open — a group's
+  * state cannot outlive the watermark passing its last window. The
+  * residual operational case (a permanently stalled watermark) stalls
+  * ALL event-time processing, not just state cleanup.
   */
 object StatefulCep {
 
   /** One fanned-out event: metric × matched rule (the output of the
     * broadcast rule-match join, CepQuery.planAll steps 1-2).
     * `eventTime` carries the watermark into the stateful operator
-    * (Spark's event-time-timeout check requires the watermarked column
-    * to reach it); `ev_ms` is its millisecond twin for arithmetic. */
+    * (Spark's event-time mode requires the watermarked column to reach
+    * it); `ev_ms` is its millisecond copy for arithmetic. */
   final case class CepEvent(
       rule_id: Int, group_id: String, eventTime: java.sql.Timestamp,
       ev_ms: Long, v: Double,
@@ -57,7 +70,7 @@ object StatefulCep {
   final case class WindowAgg(
       ws_ms: Long, sum: BigDecimal, cnt: Long, mn: Double, mx: Double)
 
-  /** Window-grid alignment of the stateful engines. [[Epoch]] matches
+  /** Window-grid alignment of the stateful engine. [[Epoch]] matches
     * the declarative [[graft.cep.CepQuery.planAll]]/planRule plans;
     * [[FirstEvent]] matches the reference assigners — tumbling windows
     * tile from the group's first event, the sliding grid anchors at
@@ -95,7 +108,7 @@ object StatefulCep {
       result: Double)
 
   /** Window starts covering `ev_ms` on the grid with origin `anchor`
-    * (0 = epoch alignment — the arithmetic twin of the reference's
+    * (0 = epoch alignment — the same arithmetic as the reference's
     * assigners, see [[Alignment]]). */
   private[graft] def windowStarts(e: CepEvent, anchor: Long = 0L): Seq[Long] =
     e.window_type match {
@@ -151,10 +164,7 @@ object StatefulCep {
     * (SURVEY §2.3). Rules are upsertable at runtime: the state adopts
     * the latest event's rule parameters, so firing/eviction agrees
     * with window assignment after a rule's width changes. Returns null
-    * when no state existed and no event survived.
-    *
-    * Pure state transition — shared by the flatMapGroupsWithState and
-    * transformWithState engines, which must stay semantically twins. */
+    * when no state existed and no event survived. */
   private[graft] def foldEvents(st0: KeyState, events: Iterator[CepEvent],
       wm: Long, align: Alignment = Epoch): KeyState = {
     var st = st0
@@ -184,7 +194,7 @@ object StatefulCep {
     * Trigger.trigger + evict, Trigger.java:14-19), in window order,
     * applying the threshold (HAVING) at fire time. Returns the
     * emissions and the surviving state (open windows only, eviction
-    * frontier advanced). Pure — shared by both stateful engines. */
+    * frontier advanced). */
   private[graft] def fireReady(
       key: (Int, String), st: KeyState, wm: Long): (List[CepResult], KeyState) = {
     val (toFire, open) = st.windows.partition(w => w.ws_ms + st.w_ms <= wm)
@@ -199,50 +209,18 @@ object StatefulCep {
     (out, st.copy(windows = open, closedBelow = closedBelow))
   }
 
-  private[graft] def processKey(align: Alignment)(
-      key: (Int, String),
-      events: Iterator[CepEvent],
-      state: GroupState[KeyState]): Iterator[CepResult] = {
-    // 0 = "no watermark yet"; real event times dwarf it, so a plain
-    // <=/> comparison does the right thing in every phase.
-    val wm = state.getCurrentWatermarkMs()
-    val st = foldEvents(state.getOption.orNull, events, wm, align)
-    if (st == null) { state.remove(); return Iterator.empty }
-
-    val (out, kept) = fireReady(key, st, wm)
-
-    // Keep only open windows; wake up when the earliest can fire.
-    if (kept.windows.isEmpty) {
-      state.remove()
-    } else {
-      state.update(kept)
-      state.setTimeoutTimestamp(kept.windows.map(_.ws_ms + kept.w_ms).min)
-    }
-    out.iterator
-  }
-
   /** Metric frame × rule frame → fanned-out [[CepEvent]] columns: the
     * broadcast rule-match join (CepQuery.planAll steps 1-2 — the
-    * hash-joinable pivot-key fan-out, shared via CepQuery.fanOutJoin).
-    * The watermark is applied on the retained `eventTime` column AFTER
-    * the projection, so the event-time-timeout check finds the
-    * watermarked attribute in the stateful operator's input. */
+    * hash-joinable pivot-key fan-out, shared via CepQuery.fanOutJoin),
+    * with the rule set frozen at plan time. Streams whose rules change
+    * at runtime fan out through [[DynamicRules.fanOut]], which specs
+    * pin to this one. The watermark is applied on the retained
+    * `eventTime` column AFTER the projection, so the event-time timers
+    * find the watermarked attribute in the stateful operator's
+    * input. */
   def fanOut(metricFrame: DataFrame, ruleFrame: DataFrame,
       watermarkDelay: String = "0 seconds"): DataFrame =
-    projectEvents(graft.cep.CepQuery.fanOutJoin(metricFrame, ruleFrame),
-      watermarkDelay)
-
-  /** [[fanOut]] with driver-resident rule rows (the engine path):
-    * identical plan, but pivot statistics come from plain Scala over
-    * the rows — building it runs no Spark job (see
-    * [[graft.cep.CepQuery.planAllRows]]). */
-  def fanOutRows(metricFrame: DataFrame, rows: Seq[graft.cep.Metrics.RuleRow],
-      watermarkDelay: String = "0 seconds"): DataFrame =
-    projectEvents(graft.cep.CepQuery.fanOutJoinRows(metricFrame, rows),
-      watermarkDelay)
-
-  private def projectEvents(joined: DataFrame, watermarkDelay: String): DataFrame =
-    joined
+    graft.cep.CepQuery.fanOutJoin(metricFrame, ruleFrame)
       .select(
         col("rule_id"),
         concat_ws("_", col("rule_id").cast("string"),
@@ -257,19 +235,76 @@ object StatefulCep {
         col("agg_type"), col("cmp_op"), col("limit"))
       .withWatermark("eventTime", watermarkDelay)
 
+  /** One per-key timer at the earliest open window end: timers fire
+    * when the EVENT-TIME watermark passes them (TimeMode.EventTime).
+    * Events arriving after the watermark already passed a window's
+    * end fire it inline. */
+  private class CepProcessor(align: Alignment)
+      extends StatefulProcessor[(Int, String), CepEvent, CepResult] {
+
+    @transient private var state: ValueState[KeyState] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      state = getHandle.getValueState[KeyState](
+        "cepWindows", Encoders.product[KeyState], TTLConfig.NONE)
+
+    private def currentOrNull: KeyState =
+      if (state.exists()) state.get() else null
+
+    /** Persist survivors + re-arm the timer, or clear everything. */
+    private def commit(kept: KeyState, oldTimer: Option[Long]): Unit = {
+      oldTimer.foreach(getHandle.deleteTimer)
+      if (kept == null || kept.windows.isEmpty) {
+        state.clear()
+      } else {
+        state.update(kept)
+        getHandle.registerTimer(kept.windows.map(_.ws_ms + kept.w_ms).min)
+      }
+    }
+
+    private def existingTimer: Option[Long] = {
+      val st = currentOrNull
+      if (st == null || st.windows.isEmpty) None
+      else Some(st.windows.map(_.ws_ms + st.w_ms).min)
+    }
+
+    override def handleInputRows(
+        key: (Int, String), rows: Iterator[CepEvent],
+        tv: TimerValues): Iterator[CepResult] = {
+      val wm = tv.getCurrentWatermarkInMs()
+      val oldTimer = existingTimer
+      val st = foldEvents(currentOrNull, rows, wm, align)
+      if (st == null) return Iterator.empty
+      val (out, kept) = fireReady(key, st, wm)
+      commit(kept, oldTimer)
+      out.iterator
+    }
+
+    override def handleExpiredTimer(
+        key: (Int, String), tv: TimerValues,
+        timer: ExpiredTimerInfo): Iterator[CepResult] = {
+      val st = currentOrNull
+      if (st == null) return Iterator.empty
+      // The expired timer IS the one we registered; no delete needed.
+      val (out, kept) = fireReady(key, st, tv.getCurrentWatermarkInMs())
+      commit(kept, None)
+      out.iterator
+    }
+  }
+
   /** Wire the stateful engine over a fanned-out event stream.
     * `fannedOut` must be watermarked on an `eventTime` timestamp column
-    * and carry the [[CepEvent]] columns. Output mode: Append.
-    * `align` picks the window grid (see [[Alignment]]). */
+    * and carry the [[CepEvent]] columns ([[fanOut]] or
+    * [[DynamicRules.fanOut]]). Output mode: Append. `align` picks the
+    * window grid (see [[Alignment]]). */
   def run(fannedOut: DataFrame, align: Alignment = Epoch): Dataset[CepResult] = {
     implicit val eEnc = Encoders.product[CepEvent]
-    implicit val sEnc = Encoders.product[KeyState]
     implicit val rEnc = Encoders.product[CepResult]
     implicit val kEnc = Encoders.tuple(Encoders.scalaInt, Encoders.STRING)
     fannedOut
       .as[CepEvent]
       .groupByKey(e => (e.rule_id, e.group_id))
-      .flatMapGroupsWithState[KeyState, CepResult](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(processKey(align))
+      .transformWithState(new CepProcessor(align),
+        TimeMode.EventTime(), OutputMode.Append())
   }
 }

@@ -2,20 +2,21 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Ingest-time NEAR-duplicate detection over a document firehose —
-  * the streaming twin of [[graft.ops.Dedup.minhashLshPairs]], for the
-  * curation stage where waiting for the nightly batch dedup means a
-  * day of duplicate storage and training-shard churn.
+  * the streaming counterpart of [[graft.ops.Dedup.minhashLshPairs]],
+  * for the curation stage where waiting for the nightly batch dedup
+  * means a day of duplicate storage and training-shard churn.
   *
   * Pipeline: per-doc MinHash signature (one native pass,
   * [[graft.functions.minhash_signature]]) → banded LSH keys (the SAME
   * band arithmetic as the batch path, so a document lands in the same
   * buckets at ingest and in batch re-dedup) → a stateful bucket store
-  * (`flatMapGroupsWithState` keyed by (band_idx, band_hash)) that
-  * compares each arriving doc's signature against the docs currently
-  * resident in its buckets and emits a [[NearDupHit]] per match.
+  * (`transformWithState` keyed by (band_idx, band_hash), RocksDB state
+  * store) that compares each arriving doc's signature against the docs
+  * currently resident in its buckets and emits a [[NearDupHit]] per
+  * match.
   *
   * Similarity here is the SIGNATURE-estimated Jaccard (fraction of
   * agreeing components — the textbook MinHash estimator, unbiased,
@@ -60,8 +61,6 @@ object StreamingDedup {
     * expiry), signature (for the estimator). */
   final case class SeenDoc(doc_id: Long, ev_ms: Long, sig: Array[Long])
 
-  final case class BucketState(docs: List[SeenDoc])
-
   /** An emitted near-dup candidate: `id_a` < `id_b`, `est_jaccard`
     * the signature-estimated similarity, `eventTime` the later doc's
     * arrival (so downstream watermarked ops keep working). */
@@ -100,14 +99,14 @@ object StreamingDedup {
 
   /** Result of folding one batch of arrivals into a bucket: the hits
     * to emit, the surviving residents, the residents appended this
-    * fold, and whether the cap evicted anyone (engines use the last
+    * fold, and whether the cap evicted anyone (the engine uses the last
     * two to pick an append-only state write). */
   private[graft] final case class BucketFold(
       hits: List[NearDupHit], kept: List[SeenDoc], added: List[SeenDoc],
       capEvicted: Boolean)
 
-  /** The pure per-bucket transition, shared by both engines (they must
-    * stay semantic twins — same contract as StatefulCep.foldEvents):
+  /** The pure per-bucket transition (the StatefulCep.foldEvents
+    * pattern: state logic kept apart from the state API):
     * compare each in-horizon arrival, in deterministic (time, id)
     * order, against current residents; append it; if the bucket
     * exceeds `cap`, evict the OLDEST resident ((ev_ms, doc_id) min).
@@ -169,69 +168,18 @@ object StreamingDedup {
         else h :: removeFirst(t, x)
     }
 
-  private def processBucket(minEst: Double, cap: Int)(
-      key: (Int, Long), events: Iterator[BandEvent],
-      state: GroupState[BucketState]): Iterator[NearDupHit] = {
-    // 0 = "no watermark yet"; real event times dwarf it.
-    val wm = state.getCurrentWatermarkMs()
-    // Expire residents the watermark has passed — also what a pure
-    // timeout invocation (no events) does.
-    val live = state.getOption.map(_.docs).getOrElse(Nil).filter(_.ev_ms >= wm)
-    val fold = foldBucket(live, events, wm, minEst, cap)
-    if (fold.kept.isEmpty) state.remove()
-    else {
-      state.update(BucketState(fold.kept))
-      // Wake when the watermark passes the oldest resident, to evict
-      // it (+1: the timeout timestamp must exceed the watermark).
-      state.setTimeoutTimestamp(fold.kept.map(_.ev_ms).min + 1)
-    }
-    fold.hits.iterator
-  }
-
-  /** Wire the stateful bucket store over a [[banded]] stream. Output
-    * mode: Append (hits are final the moment they are emitted).
-    *
-    * SCALE CAVEAT: `flatMapGroupsWithState` with a timeout configured
-    * scans EVERY state key at each micro-batch to find timed-out ones,
-    * so per-batch cost grows with total resident buckets, not batch
-    * size (measured: linear batch-time growth in StreamBench).
-    * [[runTws]] is the production engine — `transformWithState` timers
-    * are indexed by expiry, so eviction costs O(expired). This variant
-    * stays as the semantics twin (parity spec-pinned). */
-  def run(bandedDocs: DataFrame, minEstJaccard: Double = 0.5,
-      maxBucketResidents: Int = 512): Dataset[NearDupHit] = {
-    implicit val eEnc = Encoders.product[BandEvent]
-    implicit val sEnc = Encoders.product[BucketState]
-    implicit val hEnc = Encoders.product[NearDupHit]
-    implicit val kEnc = Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong)
-    bandedDocs
-      .as[BandEvent]
-      .groupByKey(e => (e.band_idx, e.band_hash))
-      .flatMapGroupsWithState[BucketState, NearDupHit](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        processBucket(minEstJaccard, maxBucketResidents))
-  }
-
-  /** `transformWithState` production twin of [[run]]: residents live
-    * in a typed [[org.apache.spark.sql.streaming.ListState]]; each
+  /** The bucket store: residents live in a typed [[ListState]]; each
     * bucket keeps ONE event-time timer at its oldest resident's expiry,
     * and the no-expiry input path APPENDS new residents without
-    * rewriting the bucket. Timers are range-scanned by expiry, so a
-    * quiet micro-batch pays for the buckets it touches — not a full
-    * state scan (the fMGWS engine's per-batch cost, see [[run]]).
-    * Identical hit emission by construction (shared comparison loop);
-    * parity is spec-pinned. Requires the RocksDB state store. */
+    * rewriting the bucket. */
   private class DedupProcessor(minEst: Double, cap: Int)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        (Int, Long), BandEvent, NearDupHit] {
+      extends StatefulProcessor[(Int, Long), BandEvent, NearDupHit] {
 
-    @transient private var docs:
-      org.apache.spark.sql.streaming.ListState[SeenDoc] = _
+    @transient private var docs: ListState[SeenDoc] = _
 
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       docs = getHandle.getListState[SeenDoc]("bucketDocs",
-        Encoders.product[SeenDoc], org.apache.spark.sql.streaming.TTLConfig.NONE)
+        Encoders.product[SeenDoc], TTLConfig.NONE)
 
     /** Rewrite the bucket (or clear it) and keep exactly one armed
       * timer at the oldest survivor's expiry. */
@@ -247,7 +195,7 @@ object StreamingDedup {
 
     override def handleInputRows(
         key: (Int, Long), rows: Iterator[BandEvent],
-        tv: org.apache.spark.sql.streaming.TimerValues): Iterator[NearDupHit] = {
+        tv: TimerValues): Iterator[NearDupHit] = {
       val wm = tv.getCurrentWatermarkInMs()
       val resident = docs.get().toList
       val live = resident.filter(_.ev_ms >= wm)
@@ -270,8 +218,8 @@ object StreamingDedup {
     }
 
     override def handleExpiredTimer(
-        key: (Int, Long), tv: org.apache.spark.sql.streaming.TimerValues,
-        timer: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[NearDupHit] = {
+        key: (Int, Long), tv: TimerValues,
+        timer: ExpiredTimerInfo): Iterator[NearDupHit] = {
       val wm = tv.getCurrentWatermarkInMs()
       // The expired timer IS the armed one — no delete needed.
       commit(docs.get().toList.filter(_.ev_ms >= wm), None)
@@ -279,10 +227,18 @@ object StreamingDedup {
     }
   }
 
-  /** Wire the [[DedupProcessor]] over a [[banded]] stream — the
-    * production engine for long streams (see [[run]]'s scale caveat).
-    * Output mode: Append. */
-  def runTws(bandedDocs: DataFrame, minEstJaccard: Double = 0.5,
+  /** Wire the stateful bucket store over a [[banded]] stream. Output
+    * mode: Append (hits are final the moment they are emitted).
+    * Requires the RocksDB state store.
+    *
+    * SCALE: timers are range-scanned by expiry, so eviction costs
+    * O(expired) and a quiet micro-batch pays only for the buckets it
+    * touches. A group-state timeout instead scans EVERY state key per
+    * micro-batch — per-batch cost grows with total resident buckets,
+    * not batch size (measured as linear batch-time growth in
+    * StreamBench) — which is why this store is built on
+    * `transformWithState`. */
+  def run(bandedDocs: DataFrame, minEstJaccard: Double = 0.5,
       maxBucketResidents: Int = 512): Dataset[NearDupHit] = {
     implicit val eEnc = Encoders.product[BandEvent]
     implicit val hEnc = Encoders.product[NearDupHit]
@@ -291,7 +247,7 @@ object StreamingDedup {
       .as[BandEvent]
       .groupByKey(e => (e.band_idx, e.band_hash))
       .transformWithState(new DedupProcessor(minEstJaccard, maxBucketResidents),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
+        TimeMode.EventTime(), OutputMode.Append())
   }
 
   // ---- Ingest-time sentence-level dedup ------------------------------
@@ -338,9 +294,9 @@ object StreamingDedup {
         md5(col("sentence")).as("sent_hash"), col("sentence"))
       .withWatermark("eventTime", watermarkDelay)
 
-  /** The pure per-sentence transition, shared by both engines (the
-    * [[foldBucket]] contract): arrivals fold in deterministic
-    * (time, doc, idx) order; the first in-horizon occurrence of a
+  /** The pure per-sentence transition (the [[foldBucket]] pattern):
+    * arrivals fold in deterministic (time, doc, idx) order; the first
+    * in-horizon occurrence of a
     * sentence takes the claim and is `kept`, every later one within
     * the horizon is a duplicate of that claim. Late arrivals (behind
     * the watermark) are dropped. With ordered arrival (event time
@@ -368,19 +324,47 @@ object StreamingDedup {
     (out.result(), cur)
   }
 
-  private def processSentences(key: String, events: Iterator[SentArrival],
-      state: GroupState[SentClaim]): Iterator[SentVerdict] = {
-    val wm = state.getCurrentWatermarkMs()
-    val (verdicts, kept) = foldSentences(state.getOption, events, wm)
-    kept match {
-      case Some(c) =>
-        state.update(c)
-        // Wake when the watermark passes the claim, to release it
-        // (+1: the timeout timestamp must exceed the watermark).
-        state.setTimeoutTimestamp(c.ev_ms + 1)
-      case None => if (state.exists) state.remove()
+  /** The claim lives in a typed ValueState with ONE event-time timer
+    * at its expiry, so a quiet micro-batch pays only for expired claims
+    * (the [[DedupProcessor]] rationale). */
+  private class SentenceDedupProcessor
+      extends StatefulProcessor[String, SentArrival, SentVerdict] {
+
+    @transient private var claim: ValueState[SentClaim] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      claim = getHandle.getValueState[SentClaim]("sentClaim",
+        Encoders.product[SentClaim], TTLConfig.NONE)
+
+    override def handleInputRows(
+        key: String, rows: Iterator[SentArrival],
+        tv: TimerValues): Iterator[SentVerdict] = {
+      val wm = tv.getCurrentWatermarkInMs()
+      val resident = Option(claim.get())
+      val (verdicts, kept) = foldSentences(resident, rows, wm)
+      if (kept != resident) {
+        resident.foreach(r => getHandle.deleteTimer(r.ev_ms + 1))
+        kept match {
+          case Some(c) =>
+            claim.update(c)
+            getHandle.registerTimer(c.ev_ms + 1)
+          case None => claim.clear()
+        }
+      }
+      verdicts.iterator
     }
-    verdicts.iterator
+
+    override def handleExpiredTimer(
+        key: String, tv: TimerValues,
+        timer: ExpiredTimerInfo): Iterator[SentVerdict] = {
+      // Clear only a claim the watermark actually passed: if this
+      // batch's input already replaced the claim with a fresh one (and
+      // deleted this timer concurrently), the fresh claim must survive
+      // — the DedupProcessor guard.
+      val wm = tv.getCurrentWatermarkInMs()
+      if (Option(claim.get()).exists(_.ev_ms < wm)) claim.clear()
+      Iterator.empty
+    }
   }
 
   /** Ingest-time exact sentence dedup over a [[sentenceArrivals]]
@@ -404,74 +388,8 @@ object StreamingDedup {
     * unlike the pairwise bucket store, folding is O(arrivals) per
     * batch with one verdict each — no quadratic term to guard.
     *
-    * Same fMGWS scale caveat as [[run]] (timeout scans every state
-    * key per micro-batch); [[sentenceDedupTws]] is the production
-    * engine. */
-  def sentenceDedup(arrivals: DataFrame): Dataset[SentVerdict] = {
-    implicit val eEnc = Encoders.product[SentArrival]
-    implicit val sEnc = Encoders.product[SentClaim]
-    implicit val vEnc = Encoders.product[SentVerdict]
-    implicit val kEnc = Encoders.STRING
-    arrivals
-      .as[SentArrival]
-      .groupByKey(_.sent_hash)
-      .flatMapGroupsWithState[SentClaim, SentVerdict](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        processSentences)
-  }
-
-  /** `transformWithState` production twin of [[sentenceDedup]]: the
-    * claim lives in a typed ValueState with ONE event-time timer at
-    * its expiry, so a quiet micro-batch pays only for expired claims
-    * (the [[DedupProcessor]] rationale). Identical verdicts by
-    * construction (shared [[foldSentences]]); parity spec-pinned.
     * Requires the RocksDB state store. */
-  private class SentenceDedupProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, SentArrival, SentVerdict] {
-
-    @transient private var claim:
-      org.apache.spark.sql.streaming.ValueState[SentClaim] = _
-
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      claim = getHandle.getValueState[SentClaim]("sentClaim",
-        Encoders.product[SentClaim], org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(
-        key: String, rows: Iterator[SentArrival],
-        tv: org.apache.spark.sql.streaming.TimerValues): Iterator[SentVerdict] = {
-      val wm = tv.getCurrentWatermarkInMs()
-      val resident = Option(claim.get())
-      val (verdicts, kept) = foldSentences(resident, rows, wm)
-      if (kept != resident) {
-        resident.foreach(r => getHandle.deleteTimer(r.ev_ms + 1))
-        kept match {
-          case Some(c) =>
-            claim.update(c)
-            getHandle.registerTimer(c.ev_ms + 1)
-          case None => claim.clear()
-        }
-      }
-      verdicts.iterator
-    }
-
-    override def handleExpiredTimer(
-        key: String, tv: org.apache.spark.sql.streaming.TimerValues,
-        timer: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[SentVerdict] = {
-      // Clear only a claim the watermark actually passed: if this
-      // batch's input already replaced the claim with a fresh one (and
-      // deleted this timer concurrently), the fresh claim must survive
-      // — the DedupProcessor guard.
-      val wm = tv.getCurrentWatermarkInMs()
-      if (Option(claim.get()).exists(_.ev_ms < wm)) claim.clear()
-      Iterator.empty
-    }
-  }
-
-  /** Wire the [[SentenceDedupProcessor]] over a [[sentenceArrivals]]
-    * stream. Output mode: Append. */
-  def sentenceDedupTws(arrivals: DataFrame): Dataset[SentVerdict] = {
+  def sentenceDedup(arrivals: DataFrame): Dataset[SentVerdict] = {
     implicit val eEnc = Encoders.product[SentArrival]
     implicit val vEnc = Encoders.product[SentVerdict]
     implicit val kEnc = Encoders.STRING
@@ -479,6 +397,6 @@ object StreamingDedup {
       .as[SentArrival]
       .groupByKey(_.sent_hash)
       .transformWithState(new SentenceDedupProcessor,
-        org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
+        TimeMode.EventTime(), OutputMode.Append())
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import scala.collection.concurrent.TrieMap
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.cep.{CepQuery, Metrics}
 import graft.cep.Metrics.RuleRow
@@ -14,27 +14,28 @@ import graft.parse.Parsers
   * Mapping of the reference's runtime concepts:
   *
   *  - rule socket stream + broadcast MapState → a rule-line stream
-  *    consumed via `foreachBatch` into a [[RuleBook]] snapshot
-  *    ([[attachRuleStream]]);
+  *    consumed via `foreachBatch` into a [[RuleBook]];
   *  - per-(rule,group) window state + wall-clock triggers → Spark's
-  *    managed streaming-aggregation state store + event-time watermark
-  *    (declared deviation, SURVEY §7.4: watermark semantics instead of
-  *    the reference's fire-at-wall-clock-end triggers, which silently
-  *    never fire on replayed data);
-  *  - dynamic add/pause/delete WITHOUT restart → two rebuilds:
-  *    (a) **rule lifecycle = query lifecycle**: each ACTIVE rule runs
-  *    as its own streaming query over the shared metric stream. Adding
-  *    a rule starts a query; PAUSE/DELETE stops it; re-activation
-  *    restarts it — and a stable per-rule checkpoint directory means
-  *    its window state survives a pause (PAUSE keeps identity,
-  *    Rule.java:63-66). Rules are independent, so one rule's lifecycle
-  *    never touches another rule's state — same isolation as the
-  *    reference's per-assigner state, but managed and fault-tolerant.
-  *    (b) for large rule sets, the ONE-PASS production mode
-  *    ([[startOnePassDynamic]] + [[attachRuleStreamDynamic]]): a single
-  *    stateful query whose fan-out resolves rules per micro-batch from
-  *    a [[DynamicRules]] snapshot — rule swaps take effect with the
-  *    query running, the reference's zero-downtime semantics exactly.
+  *    managed state store + event-time watermark (declared deviation,
+  *    SURVEY §7.4: watermark semantics instead of the reference's
+  *    fire-at-wall-clock-end triggers, which silently never fire on
+  *    replayed data);
+  *  - dynamic add/pause/delete WITHOUT restart → two rule-lifecycle
+  *    paths:
+  *    (a) **per-rule queries** ([[sync]] + [[attachRuleStream]]): each
+  *    ACTIVE rule runs as its own update-mode streaming query over the
+  *    shared metric stream. Adding a rule starts a query; PAUSE/DELETE
+  *    stops it; re-activation restarts it — and a stable per-rule
+  *    checkpoint directory means its window state survives a pause
+  *    (PAUSE keeps identity, Rule.java:63-66). Rules are independent,
+  *    so one rule's lifecycle never touches another rule's state. This
+  *    is the only path that emits global-window rules.
+  *    (b) **dynamic one-pass** ([[startOnePassDynamic]] +
+  *    [[attachRuleStreamDynamic]]), the production mode for large rule
+  *    sets: a single append-mode stateful query ([[StatefulCep.run]])
+  *    whose fan-out resolves rules per micro-batch from a
+  *    [[DynamicRules]] snapshot — rule swaps take effect with the
+  *    query running, the reference's zero-downtime semantics.
   *
   * [[onePassQuery]] additionally compiles the rule snapshot into one
   * declarative streaming aggregation (`update` mode) — demo/replay
@@ -142,101 +143,44 @@ final class StreamingEngine(
     * grows with the number of distinct (rule, group, window) keys ever
     * seen and is never evicted. Fine for bounded replays and demos —
     * NOT a production mode. Long-running streams use
-    * [[startOnePassDynamic]] (zero-downtime rule swaps, state evicted
-    * at fire time) or [[startOnePassStateful]] (restart-per-rule-change
-    * variant); both run the stateful engine that clears emptied keys. */
+    * [[startOnePassDynamic]], whose stateful engine evicts windows at
+    * fire time and clears emptied keys. */
   def onePassQuery(): DataFrame =
     CepQuery.planAllRows(metricStream(), book.activeRules)
-
-  // ---------------------------------------------------------------------------
-  // One-pass stateful production mode
-  // ---------------------------------------------------------------------------
-
-  private var onePass: Option[StreamingQuery] = None
-
-  /** PRODUCTION DEFAULT for large rule sets: the entire ACTIVE rule
-    * snapshot through ONE append-mode stateful engine — the broadcast
-    * rule-match fan-out ([[StatefulCep.fanOut]]) into the
-    * `transformWithState` window processor ([[TransformCep.run]]).
-    * One metric scan, one shuffle, and append-style finality: every
-    * window emits exactly once when the watermark passes its end,
-    * late events are dropped — the reference's observable semantics.
-    *
-    * Rule changes are picked up by RESTARTING the query on its stable
-    * checkpoint: the plan keeps exactly one stateful operator whose
-    * state schema ([[StatefulCep.KeyState]]) is rule-independent, so
-    * open windows survive the restart — including across a NEW
-    * SparkSession / JVM (StreamingEngineSpec proves session-crossing
-    * recovery). Requires the RocksDB state store provider
-    * (`spark.sql.streaming.stateStore.providerClass`). */
-  def onePassStatefulQuery(
-      align: StatefulCep.Alignment = StatefulCep.Epoch): Dataset[StatefulCep.CepResult] =
-    TransformCep.run(
-      StatefulCep.fanOutRows(metricStream(), book.activeRules,
-        sink.watermarkDelay),
-      align)
-
-  /** Start (or restart, picking up the current rule book) the one-pass
-    * stateful query under `<checkpointRoot>/cep_one_pass`. Output mode
-    * is always append — the engine only ever emits final windows. */
-  def startOnePassStateful(
-      align: StatefulCep.Alignment = StatefulCep.Epoch): StreamingQuery = synchronized {
-    onePass.foreach(_.stop())
-    var w = onePassStatefulQuery(align).writeStream
-      .queryName("cep_one_pass")
-      .format(sink.format)
-      .outputMode("append")
-    sink.checkpointRoot.foreach(r => w = w.option("checkpointLocation", s"$r/cep_one_pass"))
-    sink.pathRoot.foreach(r => w = w.option("path", s"$r/cep_one_pass"))
-    val q = w.start()
-    onePass = Some(q)
-    q
-  }
-
-  /** Rule control stream for the one-pass production mode: each rule
-    * micro-batch updates the book and restarts the single query on its
-    * stable checkpoint — the restart IS the rule-change pickup, and
-    * open-window state survives it (see [[startOnePassStateful]]).
-    *
-    * Each restart costs seconds of ingest downtime; the ZERO-downtime
-    * variant is [[startOnePassDynamic]] + [[attachRuleStreamDynamic]],
-    * which swaps rules per micro-batch with the query running. */
-  def attachRuleStreamOnePass(
-      ruleLines: DataFrame,
-      align: StatefulCep.Alignment = StatefulCep.Epoch): StreamingQuery =
-    ruleLines.writeStream
-      .queryName("cep_rule_control_one_pass")
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val rows = parseRuleRows(batch)
-        if (rows.nonEmpty) {
-          book.applyChanges(rows)
-          startOnePassStateful(align)
-          ()
-        }
-      }
-      .start()
 
   // ---------------------------------------------------------------------------
   // One-pass stateful production mode with zero-downtime rule updates
   // ---------------------------------------------------------------------------
 
-  /** Start the one-pass stateful query with DYNAMIC rules: the fan-out
-    * reads the newest [[DynamicRules]] snapshot under `ruleDir` at
-    * every task launch, so rule upserts published by
+  private var onePass: Option[StreamingQuery] = None
+
+  /** PRODUCTION DEFAULT for large rule sets: start the entire ACTIVE
+    * rule book as ONE append-mode stateful query under
+    * `<checkpointRoot>/cep_one_pass` — the dynamic rule fan-out
+    * ([[DynamicRules.fanOut]]) into the `transformWithState` window
+    * engine ([[StatefulCep.run]]). One metric scan, one shuffle, and
+    * append-style finality: every window emits exactly once when the
+    * watermark passes its end, late events are dropped — the
+    * reference's observable semantics.
+    *
+    * The fan-out reads the newest [[DynamicRules]] snapshot under
+    * `ruleDir` at every task launch, so rule upserts published by
     * [[attachRuleStreamDynamic]] take effect on the next micro-batch
     * WITHOUT stopping the query — the reference's zero-downtime
     * broadcast rule swap (PartitionEngine.java:54-63), on Spark's
-    * managed state. Same stateful operator, same checkpoint layout,
-    * and the same append-mode emission semantics as
-    * [[startOnePassStateful]]; open windows of a paused or deleted
-    * rule keep firing from state (spec-pinned). */
+    * managed state. Open windows of a paused or deleted rule keep
+    * firing from state (spec-pinned). The state schema
+    * ([[StatefulCep.KeyState]]) is rule-independent, so a query
+    * restarted on the same checkpoint resumes its open windows —
+    * including across a NEW SparkSession / JVM (spec-pinned). Requires
+    * the RocksDB state store provider
+    * (`spark.sql.streaming.stateStore.providerClass`). */
   def startOnePassDynamic(
       ruleDir: String,
       align: StatefulCep.Alignment = StatefulCep.Epoch): StreamingQuery = synchronized {
     DynamicRules.persist(spark, ruleDir, book.version, book.activeRules)
     onePass.foreach(_.stop())
-    var w = TransformCep.run(
+    var w = StatefulCep.run(
         DynamicRules.fanOut(metricStream(), ruleDir, sink.watermarkDelay),
         align)
       .writeStream

@@ -27,8 +27,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * DISJOINT: a pair is emitted at most once, and the state key space
   * is the BOUNDED cluster count (a model constant, not corpus-shaped),
   * so `flatMapGroupsWithState`'s per-batch full-key timeout scan —
-  * the scale caveat that forced StreamingDedup's transformWithState
-  * production twin — costs O(nClusters) here and the single engine
+  * the scale caveat that made StreamingDedup a transformWithState
+  * engine — costs O(nClusters) here and `flatMapGroupsWithState`
   * suffices.
   *
   * Scale posture: state per cluster is (vec_id, ev_ms, vector, norm)

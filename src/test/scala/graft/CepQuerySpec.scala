@@ -226,14 +226,12 @@ class CepQuerySpec extends AnyFunSuite {
       .map(Metrics.toRow)
     spark.sparkContext.addSparkListener(listener)
     try {
-      // Build + physically plan (but do not execute) both engine-path
-      // plans: with the pivot statistics driver-resident, neither may
+      // Build + physically plan (but do not execute) the engine-path
+      // plan: with the pivot statistics driver-resident, it may not
       // submit a Spark job — the old collect-based path ran two jobs
       // per plan build, which lands on the control hot path once rules
       // replan per micro-batch.
       CepQuery.planAllRows(frame, rows).queryExecution.executedPlan
-      graft.streaming.StatefulCep.fanOutRows(frame, rows)
-        .queryExecution.executedPlan
       Thread.sleep(1000) // let the async listener bus drain
       assert(jobs.get() == 0,
         s"plan construction submitted ${jobs.get()} Spark job(s)")

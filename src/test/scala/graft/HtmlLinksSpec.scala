@@ -343,13 +343,17 @@ class HtmlLinksSpec extends AnyFunSuite {
   test("pageRankFixedPoint: the driver fast path equals the distributed loop bit-for-bit") {
     // r15: graphs at or under maxDriverEdges iterate on the driver —
     // the same exact integer recurrence, so ranks must be identical.
-    // Randomized graph with dangling nodes; both dangling policies;
-    // maxDriverEdges = 0 forces the distributed loop.
+    // Randomized graph with dangling nodes, plus a self-loop, a
+    // duplicate edge and null endpoints (which neither path may rank);
+    // both dangling policies; maxDriverEdges = 0 forces the
+    // distributed loop.
     val rnd = new scala.util.Random(4242)
     val nodes = (0 until 24).map(i => s"d$i.com")
-    val edges = Seq.fill(70)(
+    val edges = (Seq.fill(70)(
         (nodes(rnd.nextInt(18)), nodes(rnd.nextInt(24))))
-      .filter { case (a, b) => a != b }
+      .filter { case (a, b) => a != b } ++ Seq(
+        ("d0.com", "d0.com"), ("d1.com", "d2.com"), ("d1.com", "d2.com"),
+        (null, "d3.com"), ("d4.com", null), (null, null)))
       .toDF("src_domain", "dst_domain")
     for (redistribute <- Seq(false, true); iters <- Seq(1, 3)) {
       val fast = graft.ops.Domains.pageRankFixedPoint(edges,
@@ -361,6 +365,7 @@ class HtmlLinksSpec extends AnyFunSuite {
         .as[(String, Long)].collect().toMap
       assert(fast == dist,
         s"driver/distributed divergence at redistribute=$redistribute iters=$iters")
+      assert(!fast.contains(null))
     }
   }
 

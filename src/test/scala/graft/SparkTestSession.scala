@@ -18,4 +18,21 @@ object SparkTestSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  val StateStoreProviderKey = "spark.sql.streaming.stateStore.providerClass"
+  val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** transformWithState requires the RocksDB state store; scope the
+    * provider override to `body` so the rest of the suite keeps the
+    * default HDFS-backed store. */
+  def withRocksDb[T](body: => T): T = {
+    val prev = spark.conf.getOption(StateStoreProviderKey)
+    spark.conf.set(StateStoreProviderKey, RocksDbProvider)
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(StateStoreProviderKey, v)
+      case None => spark.conf.unset(StateStoreProviderKey)
+    }
+  }
 }

@@ -7,11 +7,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.cep.Metrics
 import graft.model._
 import graft.streaming.StatefulCep
+import graft.SparkTestSession.withRocksDb
 
-/** Per-event stateful engine (flatMapGroupsWithState): windows emit
-  * exactly once when the watermark passes their end, late events are
-  * silently dropped (the reference's observable behavior), and results
-  * agree with the declarative batch plan on closed windows. */
+/** Per-event stateful engine (transformWithState on the RocksDB state
+  * store): windows emit exactly once when the watermark passes their
+  * end, late events are silently dropped (the reference's observable
+  * behavior), and results agree with the declarative batch plan on
+  * closed windows. */
 case class StatefulCepEv(ms: Long, g: String, cpu: Int)
 
 class StatefulCepSpec extends AnyFunSuite {
@@ -32,86 +34,56 @@ class StatefulCepSpec extends AnyFunSuite {
     Seq("t_group"), AggType.Sum, "cpu_usage", CmpOp.Gt, BigDecimal(11))
 
   test("stateful engine: watermark-driven exactly-once window emission + late-data drop") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val rules = Metrics.rulesToDF(spark, Seq(demoRule))
-    val out = StatefulCep.run(StatefulCep.fanOut(toMetricFrame(mem.toDF()), rules))
-    val q = out.writeStream.format("memory").queryName("stateful_cep")
-      .outputMode("append").start()
-    try {
-      // Batch 1: six demo events inside one 2-minute window.
-      mem.addData(
-        Ev(t0, "business", 9), Ev(t0 + 1000, "work", 1), Ev(t0 + 2000, "business", 2),
-        Ev(t0 + 3000, "work", 5), Ev(t0 + 4000, "business", 5), Ev(t0 + 5000, "work", 10))
-      q.processAllAvailable()
-      assert(spark.table("stateful_cep").count() == 0) // window still open
-
-      // Batch 2: an event 10 minutes later advances the watermark past
-      // the first window's end -> both groups fire exactly once.
-      mem.addData(Ev(t0 + 600000, "business", 1))
-      q.processAllAvailable()
-      val fired = spark.table("stateful_cep")
-        .select("group_id", "result").as[(String, Double)].collect().toMap
-      assert(fired == Map("1_business" -> 16.0, "1_work" -> 16.0))
-
-      // Batch 3: a LATE event for the already-fired window — silently
-      // dropped, no re-emission, no new row.
-      mem.addData(Ev(t0 + 6000, "business", 100))
-      q.processAllAvailable()
-      assert(spark.table("stateful_cep").count() == 2)
-    } finally q.stop()
-  }
-
-  test("stateful engine agrees with the declarative batch plan on closed windows") {
-    parityCheck(demoRule.copy(limitOperatorType = CmpOp.Gt, limit = BigDecimal(-1)),
-      "stateful_parity", StatefulCep.run(_))
-  }
-
-  test("stateful engine sliding-window parity with the batch plan") {
-    parityCheck(
-      Rule(2, RuleState.Active, WindowType.Sliding, 2, 1, Seq("t_group"),
-        AggType.Max, "cpu_usage", CmpOp.Gt, BigDecimal(-1)),
-      "stateful_parity_sliding", StatefulCep.run(_))
-  }
-
-  test("transformWithState twin: watermark emission + late-data drop (RocksDB state store)") {
     withRocksDb {
       implicit val sqlCtx = spark.sqlContext
       val mem = MemoryStream[Ev]
       val rules = Metrics.rulesToDF(spark, Seq(demoRule))
-      val out = graft.streaming.TransformCep.run(
-        StatefulCep.fanOut(toMetricFrame(mem.toDF()), rules))
-      val q = out.writeStream.format("memory").queryName("tws_cep")
+      val out = StatefulCep.run(StatefulCep.fanOut(toMetricFrame(mem.toDF()), rules))
+      val q = out.writeStream.format("memory").queryName("stateful_cep")
         .outputMode("append").start()
       try {
+        // Batch 1: six demo events inside one 2-minute window.
         mem.addData(
           Ev(t0, "business", 9), Ev(t0 + 1000, "work", 1), Ev(t0 + 2000, "business", 2),
           Ev(t0 + 3000, "work", 5), Ev(t0 + 4000, "business", 5), Ev(t0 + 5000, "work", 10))
         q.processAllAvailable()
-        assert(spark.table("tws_cep").count() == 0) // window still open
-        mem.addData(Ev(t0 + 600000, "business", 1)) // watermark passes window end
+        assert(spark.table("stateful_cep").count() == 0) // window still open
+
+        // Batch 2: an event 10 minutes later advances the watermark past
+        // the first window's end -> both groups fire exactly once.
+        mem.addData(Ev(t0 + 600000, "business", 1))
         q.processAllAvailable()
-        val fired = spark.table("tws_cep")
+        val fired = spark.table("stateful_cep")
           .select("group_id", "result").as[(String, Double)].collect().toMap
         assert(fired == Map("1_business" -> 16.0, "1_work" -> 16.0))
-        mem.addData(Ev(t0 + 6000, "business", 100)) // late: silently dropped
+
+        // Batch 3: a LATE event for the already-fired window — silently
+        // dropped, no re-emission, no new row.
+        mem.addData(Ev(t0 + 6000, "business", 100))
         q.processAllAvailable()
-        assert(spark.table("tws_cep").count() == 2)
+        assert(spark.table("stateful_cep").count() == 2)
       } finally q.stop()
     }
   }
 
-  test("transformWithState twin: sliding-window parity with the batch plan") {
+  test("stateful engine agrees with the declarative batch plan on closed windows") {
+    withRocksDb {
+      parityCheck(demoRule.copy(limitOperatorType = CmpOp.Gt, limit = BigDecimal(-1)),
+        "stateful_parity", StatefulCep.run(_))
+    }
+  }
+
+  test("stateful engine sliding-window parity with the batch plan") {
     withRocksDb {
       parityCheck(
-        Rule(3, RuleState.Active, WindowType.Sliding, 2, 1, Seq("t_group"),
+        Rule(2, RuleState.Active, WindowType.Sliding, 2, 1, Seq("t_group"),
           AggType.Max, "cpu_usage", CmpOp.Gt, BigDecimal(-1)),
-        "tws_parity_sliding", graft.streaming.TransformCep.run(_))
+        "stateful_parity_sliding", StatefulCep.run(_))
     }
   }
 
   test("transformWithState exposes no TTL knob: Spark rejects TTL state in event-time mode") {
-    // Documents WHY TransformCep has no TTL parameter: Spark's state
+    // Documents WHY StatefulCep.run has no TTL parameter: Spark's state
     // TTL is processing-time based and throws
     // STATEFUL_PROCESSOR_INCORRECT_TIME_MODE_TO_ASSIGN_TTL under
     // TimeMode.EventTime — the mode the engine's event-time timers
@@ -265,44 +237,37 @@ class StatefulCepSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("first-event-aligned stateful engines match planRuleFirstAligned (tumbling + sliding, both engines)") {
+  test("first-event-aligned stateful engine matches planRuleFirstAligned (tumbling + sliding)") {
     implicit val sqlCtx = spark.sqlContext
     val tumb = demoRule.copy(limitOperatorType = CmpOp.Gt, limit = BigDecimal(-1))
     val slid = Rule(2, RuleState.Active, WindowType.Sliding, 2, 1, Seq("t_group"),
       AggType.Sum, "cpu_usage", CmpOp.Gt, BigDecimal(-1))
-    val engines: Seq[(String, DataFrame => org.apache.spark.sql.Dataset[StatefulCep.CepResult])] = Seq(
-      "fmgws" -> (f => StatefulCep.run(f, StatefulCep.FirstEvent)),
-      "tws" -> (f => graft.streaming.TransformCep.run(f,
-        align = StatefulCep.FirstEvent)))
-    for ((rule, shape) <- Seq(tumb -> "tumb", slid -> "slid");
-         (engName, run) <- engines) {
-      val table = s"fa_${shape}_$engName"
-      def body(): Unit = {
-        val mem = MemoryStream[Ev]
-        val events = Seq(
-          Ev(t0, "a", 3), Ev(t0 + 30000, "a", 12), Ev(t0 + 50000, "b", 20),
-          Ev(t0 + 130000, "a", 7), Ev(t0 + 140000, "b", 5))
-        val rules = Metrics.rulesToDF(spark, Seq(rule))
-        val out = run(StatefulCep.fanOut(toMetricFrame(mem.toDF()), rules))
-        val q = out.writeStream.format("memory").queryName(table)
-          .outputMode("append").start()
-        try {
-          mem.addData(events: _*)
-          q.processAllAvailable()
-          mem.addData(Ev(t0 + 3600000, "a", 0)) // advance watermark far ahead
-          q.processAllAvailable()
-          val streamed = spark.table(table)
-            .select("group_id", "window_start", "result")
-            .as[(String, Long, Double)].collect().toSet
-          val batch = graft.cep.CepQuery.planRuleFirstAligned(
-            toMetricFrame(events.toDF()), rule)
-            .select(concat(lit(s"${rule.ruleId}_"), col("t_group")),
-              unix_millis(col("window_start")), col("result"))
-            .as[(String, Long, Double)].collect().toSet
-          assert(streamed == batch, s"$table drifted from the batch plan")
-        } finally q.stop()
-      }
-      if (engName == "tws") withRocksDb(body()) else body()
+    for ((rule, shape) <- Seq(tumb -> "tumb", slid -> "slid")) withRocksDb {
+      val table = s"fa_$shape"
+      val mem = MemoryStream[Ev]
+      val events = Seq(
+        Ev(t0, "a", 3), Ev(t0 + 30000, "a", 12), Ev(t0 + 50000, "b", 20),
+        Ev(t0 + 130000, "a", 7), Ev(t0 + 140000, "b", 5))
+      val rules = Metrics.rulesToDF(spark, Seq(rule))
+      val out = StatefulCep.run(
+        StatefulCep.fanOut(toMetricFrame(mem.toDF()), rules), StatefulCep.FirstEvent)
+      val q = out.writeStream.format("memory").queryName(table)
+        .outputMode("append").start()
+      try {
+        mem.addData(events: _*)
+        q.processAllAvailable()
+        mem.addData(Ev(t0 + 3600000, "a", 0)) // advance watermark far ahead
+        q.processAllAvailable()
+        val streamed = spark.table(table)
+          .select("group_id", "window_start", "result")
+          .as[(String, Long, Double)].collect().toSet
+        val batch = graft.cep.CepQuery.planRuleFirstAligned(
+          toMetricFrame(events.toDF()), rule)
+          .select(concat(lit(s"${rule.ruleId}_"), col("t_group")),
+            unix_millis(col("window_start")), col("result"))
+          .as[(String, Long, Double)].collect().toSet
+        assert(streamed == batch, s"$table drifted from the batch plan")
+      } finally q.stop()
     }
   }
 
@@ -329,41 +294,28 @@ class StatefulCepSpec extends AnyFunSuite {
     assert(backStarts.forall(ws => ws <= 100000L && 100000L < ws + 240000L))
   }
 
-  /** transformWithState requires the RocksDB state store; scope the
-    * provider override to the test so the rest of the suite keeps the
-    * default HDFS-backed store. */
-  private def withRocksDb(body: => Unit): Unit = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("global rules: append engines never emit (documented routing), declarative path serves them") {
     // The documented mode contract (CepRunner Scaladoc): global
     // (All-window) rules must route to the declarative update-mode
-    // path; the append-mode stateful engines never fire them, matching
+    // path; the append-mode stateful engine never fires them, matching
     // the reference's observable global-trigger behavior.
     implicit val sqlCtx = spark.sqlContext
     val globalRule = Rule(9, RuleState.Active, WindowType.Global, 0, 0,
       Seq("t_group"), AggType.Sum, "cpu_usage", CmpOp.Gt, BigDecimal(-1))
     val rules = Metrics.rulesToDF(spark, Seq(globalRule))
-    val mem = MemoryStream[Ev]
-    val out = StatefulCep.run(StatefulCep.fanOut(toMetricFrame(mem.toDF()), rules))
-    val q = out.writeStream.format("memory").queryName("stateful_global")
-      .outputMode("append").start()
-    try {
-      mem.addData(Ev(t0, "a", 3), Ev(t0 + 30000, "a", 12), Ev(t0 + 50000, "b", 20))
-      q.processAllAvailable()
-      mem.addData(Ev(t0 + 3600000, "a", 1)) // watermark far ahead: still nothing
-      q.processAllAvailable()
-      assert(spark.table("stateful_global").count() == 0)
-    } finally q.stop()
+    withRocksDb {
+      val mem = MemoryStream[Ev]
+      val out = StatefulCep.run(StatefulCep.fanOut(toMetricFrame(mem.toDF()), rules))
+      val q = out.writeStream.format("memory").queryName("stateful_global")
+        .outputMode("append").start()
+      try {
+        mem.addData(Ev(t0, "a", 3), Ev(t0 + 30000, "a", 12), Ev(t0 + 50000, "b", 20))
+        q.processAllAvailable()
+        mem.addData(Ev(t0 + 3600000, "a", 1)) // watermark far ahead: still nothing
+        q.processAllAvailable()
+        assert(spark.table("stateful_global").count() == 0)
+      } finally q.stop()
+    }
     // Same rule, declarative path: every group fires with the running
     // aggregate — the output a deployed global rule actually wants.
     val events = Seq(Ev(t0, "a", 3), Ev(t0 + 30000, "a", 12),

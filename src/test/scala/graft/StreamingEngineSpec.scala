@@ -8,6 +8,7 @@ import graft.cep.CepQuery
 import graft.model._
 import graft.streaming.{RuleBook, StreamingEngine}
 import graft.cep.Metrics.RuleRow
+import graft.SparkTestSession.withRocksDb
 
 /** Streaming rebuild semantics: batch/stream parity of the rule plan,
   * and the reference's dynamic rule lifecycle (add / pause / delete at
@@ -293,12 +294,11 @@ class StreamingEngineSpec extends AnyFunSuite {
   }
 
   test("one-pass stateful engine recovers open-window state across a NEW SparkSession (same checkpoint)") {
-    // The fault-tolerance claim behind "restart to pick up rule
-    // changes": a one-pass transformWithState query stopped mid-window
-    // and rebuilt in a FRESH SparkSession (new session state, new
-    // engine, new RuleBook) on the same checkpoint must resume with
-    // the open-window aggregates intact — phase-1 events counted
-    // exactly once in the final emission.
+    // A one-pass transformWithState query stopped mid-window and
+    // rebuilt in a FRESH SparkSession (new session state, new engine,
+    // new RuleBook) on the same checkpoint must resume with the
+    // open-window aggregates intact — phase-1 events counted exactly
+    // once in the final emission.
     val tmp = java.nio.file.Files.createTempDirectory("graft_onepass_").toString
     val srcDir = s"$tmp/in"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
@@ -319,9 +319,6 @@ class StreamingEngineSpec extends AnyFunSuite {
           format = "parquet", outputMode = "append",
           checkpointRoot = Some(s"$tmp/ckpt"), pathRoot = Some(s"$tmp/out")))
     }
-    val rocksKey = "spark.sql.streaming.stateStore.providerClass"
-    val rocksVal =
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
     // Phase 1 (session A): first half of the 2-minute window — sums
     // are business 11 / work 6, neither passes the >11 threshold yet,
@@ -329,16 +326,11 @@ class StreamingEngineSpec extends AnyFunSuite {
     writeLines("a.jsonl", Seq(
       Ev(t0, "business", 9), Ev(t0 + 1000, "work", 1),
       Ev(t0 + 2000, "business", 2), Ev(t0 + 3000, "work", 5)))
-    val prev = spark.conf.getOption(rocksKey)
-    spark.conf.set(rocksKey, rocksVal)
-    try {
+    withRocksDb {
       val e1 = engineFor(spark)
-      val q1 = e1.startOnePassStateful()
+      val q1 = e1.startOnePassDynamic(s"$tmp/rules")
       q1.processAllAvailable()
       e1.shutdown()
-    } finally prev match {
-      case Some(v) => spark.conf.set(rocksKey, v)
-      case None => spark.conf.unset(rocksKey)
     }
 
     // Phase 2: a NEW SparkSession (fresh session state over the shared
@@ -346,12 +338,13 @@ class StreamingEngineSpec extends AnyFunSuite {
     // of the window plus a far-future event to push the watermark past
     // the window end.
     val spark2 = spark.newSession()
-    spark2.conf.set(rocksKey, rocksVal)
+    spark2.conf.set(SparkTestSession.StateStoreProviderKey,
+      SparkTestSession.RocksDbProvider)
     writeLines("b.jsonl", Seq(
       Ev(t0 + 4000, "business", 5), Ev(t0 + 5000, "work", 10),
       Ev(t0 + 600000, "business", 1)))
     val e2 = engineFor(spark2)
-    val q2 = e2.startOnePassStateful()
+    val q2 = e2.startOnePassDynamic(s"$tmp/rules")
     q2.processAllAvailable()
     e2.shutdown()
 
@@ -360,74 +353,6 @@ class StreamingEngineSpec extends AnyFunSuite {
     val out = spark.read.parquet(s"$tmp/out/cep_one_pass")
       .select("group_id", "result").as[(String, Double)].collect().toMap
     assert(out == Map("1_business" -> 16.0, "1_work" -> 16.0))
-  }
-
-  test("one-pass production mode: a rule-stream change restarts the single query and takes effect") {
-    implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_onepass_rules_").toString
-    val srcDir = s"$tmp/in"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
-    def writeLines(name: String, evs: Seq[(Long, String, Int)]): Unit =
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$srcDir/$name"),
-        evs.map { case (ms, g, cpu) =>
-          s"""{"eventTime":$ms,"t_group":"$g","cpu_usage":$cpu}""" }
-          .mkString("\n").getBytes)
-    def ruleJson(id: Int): String =
-      s"""{"ruleId":$id,"ruleState":"ACTIVE","windowType":"tumbling","windowMinutes":2,"windowSlideMinute":0,"groupingKeyNames":["t_group"],"aggregatorFunctionType":"SUM","aggregateFieldName":"cpu_usage","limitOperatorType":">","limit":11}"""
-    val sixteen = Seq(("business", 9), ("work", 1), ("business", 2),
-      ("work", 5), ("business", 5), ("work", 10))
-    def window(at: Long): Seq[(Long, String, Int)] =
-      sixteen.zipWithIndex.map { case ((g, v), i) => (at + i * 1000L, g, v) }
-
-    val rocksKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(rocksKey)
-    spark.conf.set(rocksKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val ruleMem = MemoryStream[String]
-    val book = new RuleBook
-    val engine = new StreamingEngine(
-      spark,
-      () => graft.parse.Parsers.parseMetrics(
-        graft.streaming.CepRunner.fileLines(spark, srcDir)),
-      book,
-      StreamingEngine.SinkConfig(
-        format = "parquet", outputMode = "append",
-        checkpointRoot = Some(s"$tmp/ckpt"), pathRoot = Some(s"$tmp/out")))
-    val control = engine.attachRuleStreamOnePass(
-      ruleMem.toDF().withColumnRenamed("value", "line"))
-    try {
-      // Rule 1 arrives -> query starts; window A + closer fires it.
-      ruleMem.addData(ruleJson(1))
-      control.processAllAvailable()
-      val run1 = spark.streams.active.find(_.name == "cep_one_pass").get.runId
-      writeLines("a.jsonl", window(t0) :+ (t0 + 600000L, "business", 1))
-      engine.awaitQuiescence()
-
-      // Rule 2 arrives -> the single query RESTARTS on its checkpoint;
-      // window B (10 min later, same shape) now feeds BOTH rules.
-      ruleMem.addData(ruleJson(2))
-      control.processAllAvailable()
-      val run2 = spark.streams.active.find(_.name == "cep_one_pass").get.runId
-      assert(run1 != run2, "rule change must restart the one-pass query")
-      writeLines("b.jsonl", window(t0 + 720000L) :+ (t0 + 1320000L, "business", 1))
-      engine.awaitQuiescence()
-
-      val wsA = Math.floorDiv(t0, 120000L) * 120000L
-      val got = spark.read.parquet(s"$tmp/out/cep_one_pass")
-        .select("rule_id", "group_id", "window_start", "result")
-        .as[(Int, String, Long, Double)].collect().toSet
-      assert(got == Set(
-        (1, "1_business", wsA, 16.0), (1, "1_work", wsA, 16.0),
-        (1, "1_business", wsA + 720000L, 16.0), (1, "1_work", wsA + 720000L, 16.0),
-        (2, "2_business", wsA + 720000L, 16.0), (2, "2_work", wsA + 720000L, 16.0)))
-    } finally {
-      control.stop(); engine.shutdown()
-      prev match {
-        case Some(v) => spark.conf.set(rocksKey, v)
-        case None => spark.conf.unset(rocksKey)
-      }
-    }
   }
 
   test("dynamic fan-out matches the broadcast-join fan-out (ACTIVE-only) on a batch frame") {
@@ -490,71 +415,65 @@ class StreamingEngineSpec extends AnyFunSuite {
     def at(base: Long, evs: Seq[(String, Int)]): Seq[(Long, String, Int)] =
       evs.zipWithIndex.map { case ((g, v), i) => (base + i * 1000L, g, v) }
 
-    val rocksKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(rocksKey)
-    spark.conf.set(rocksKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val ruleMem = MemoryStream[String]
-    val book = new RuleBook
-    val engine = new StreamingEngine(
-      spark,
-      () => graft.parse.Parsers.parseMetrics(
-        graft.streaming.CepRunner.fileLines(spark, srcDir)),
-      book,
-      StreamingEngine.SinkConfig(
-        format = "parquet", outputMode = "append",
-        checkpointRoot = Some(s"$tmp/ckpt"), pathRoot = Some(s"$tmp/out")))
-    val q = engine.startOnePassDynamic(ruleDir)
-    val control = engine.attachRuleStreamDynamic(
-      ruleMem.toDF().withColumnRenamed("value", "line"), ruleDir)
-    try {
-      val runId = q.runId
+    withRocksDb {
+      val ruleMem = MemoryStream[String]
+      val book = new RuleBook
+      val engine = new StreamingEngine(
+        spark,
+        () => graft.parse.Parsers.parseMetrics(
+          graft.streaming.CepRunner.fileLines(spark, srcDir)),
+        book,
+        StreamingEngine.SinkConfig(
+          format = "parquet", outputMode = "append",
+          checkpointRoot = Some(s"$tmp/ckpt"), pathRoot = Some(s"$tmp/out")))
+      val q = engine.startOnePassDynamic(ruleDir)
+      val control = engine.attachRuleStreamDynamic(
+        ruleMem.toDF().withColumnRenamed("value", "line"), ruleDir)
+      try {
+        val runId = q.runId
 
-      // Rule 1 arrives -> NO restart; window A + closer fires it.
-      ruleMem.addData(ruleJson(1, "ACTIVE"))
-      control.processAllAvailable()
-      writeLines("a.jsonl", at(t0, sixteen) :+ ((t0 + 600000L, "business", 1)))
-      engine.awaitQuiescence()
-      assert(q.runId == runId && q.isActive)
+        // Rule 1 arrives -> NO restart; window A + closer fires it.
+        ruleMem.addData(ruleJson(1, "ACTIVE"))
+        control.processAllAvailable()
+        writeLines("a.jsonl", at(t0, sixteen) :+ ((t0 + 600000L, "business", 1)))
+        engine.awaitQuiescence()
+        assert(q.runId == runId && q.isActive)
 
-      // Rule 2 added mid-stream -> window B feeds BOTH rules.
-      val tB = t0 + 720000L
-      ruleMem.addData(ruleJson(2, "ACTIVE"))
-      control.processAllAvailable()
-      writeLines("b.jsonl", at(tB, sixteen) :+ ((tB + 600000L, "business", 1)))
-      engine.awaitQuiescence()
-      assert(q.runId == runId && q.isActive)
+        // Rule 2 added mid-stream -> window B feeds BOTH rules.
+        val tB = t0 + 720000L
+        ruleMem.addData(ruleJson(2, "ACTIVE"))
+        control.processAllAvailable()
+        writeLines("b.jsonl", at(tB, sixteen) :+ ((tB + 600000L, "business", 1)))
+        engine.awaitQuiescence()
+        assert(q.runId == runId && q.isActive)
 
-      // Window C in two halves: first half lands under BOTH rules,
-      // then rule 1 is PAUSED with that window still open. The second
-      // half must reach only rule 2 — and rule 1's open window must
-      // still fire (from checkpointed state) with the pre-pause sums.
-      val tC = t0 + 1440000L
-      writeLines("c1.jsonl", at(tC, sixteen.take(4)))
-      engine.awaitQuiescence()
-      ruleMem.addData(ruleJson(1, "PAUSE"))
-      control.processAllAvailable()
-      writeLines("c2.jsonl",
-        at(tC + 4000L, sixteen.drop(4)) :+ ((tC + 600000L, "business", 1)))
-      engine.awaitQuiescence()
-      assert(q.runId == runId && q.isActive,
-        "rule changes must never restart the one-pass query")
+        // Window C in two halves: first half lands under BOTH rules,
+        // then rule 1 is PAUSED with that window still open. The second
+        // half must reach only rule 2 — and rule 1's open window must
+        // still fire (from checkpointed state) with the pre-pause sums.
+        val tC = t0 + 1440000L
+        writeLines("c1.jsonl", at(tC, sixteen.take(4)))
+        engine.awaitQuiescence()
+        ruleMem.addData(ruleJson(1, "PAUSE"))
+        control.processAllAvailable()
+        writeLines("c2.jsonl",
+          at(tC + 4000L, sixteen.drop(4)) :+ ((tC + 600000L, "business", 1)))
+        engine.awaitQuiescence()
+        assert(q.runId == runId && q.isActive,
+          "rule changes must never restart the one-pass query")
 
-      val wsA = Math.floorDiv(t0, 120000L) * 120000L
-      val got = spark.read.parquet(s"$tmp/out/cep_one_pass")
-        .select("rule_id", "group_id", "window_start", "result")
-        .as[(Int, String, Long, Double)].collect().toSet
-      assert(got == Set(
-        (1, "1_business", wsA, 16.0), (1, "1_work", wsA, 16.0),
-        (1, "1_business", wsA + 720000L, 16.0), (1, "1_work", wsA + 720000L, 16.0),
-        (2, "2_business", wsA + 720000L, 16.0), (2, "2_work", wsA + 720000L, 16.0),
-        (1, "1_business", wsA + 1440000L, 11.0), (1, "1_work", wsA + 1440000L, 6.0),
-        (2, "2_business", wsA + 1440000L, 16.0), (2, "2_work", wsA + 1440000L, 16.0)))
-    } finally {
-      control.stop(); engine.shutdown()
-      prev match {
-        case Some(v) => spark.conf.set(rocksKey, v)
-        case None => spark.conf.unset(rocksKey)
+        val wsA = Math.floorDiv(t0, 120000L) * 120000L
+        val got = spark.read.parquet(s"$tmp/out/cep_one_pass")
+          .select("rule_id", "group_id", "window_start", "result")
+          .as[(Int, String, Long, Double)].collect().toSet
+        assert(got == Set(
+          (1, "1_business", wsA, 16.0), (1, "1_work", wsA, 16.0),
+          (1, "1_business", wsA + 720000L, 16.0), (1, "1_work", wsA + 720000L, 16.0),
+          (2, "2_business", wsA + 720000L, 16.0), (2, "2_work", wsA + 720000L, 16.0),
+          (1, "1_business", wsA + 1440000L, 11.0), (1, "1_work", wsA + 1440000L, 6.0),
+          (2, "2_business", wsA + 1440000L, 16.0), (2, "2_work", wsA + 1440000L, 16.0)))
+      } finally {
+        control.stop(); engine.shutdown()
       }
     }
   }
