@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
@@ -49,19 +48,11 @@ object Bench {
   final val CalibRefSec = 0.4008
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", SessionTuning.localDir)
-      .config("spark.sql.optimizer.excludedRules", SessionTuning.excludedRules)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.envCpus(32)
+    val spark = GraftSession.local(cpus)
     // Gate queries plus the bench-only production-hash twins (no
     // DuckDB oracle possible, but regressions must stay visible).
-    val queries = (SparkEntry.queries ++ SparkEntry.benchOnly).toSeq.sortBy(_._1)
+    val queries = SparkEntry.gates.map(g => g.name -> g.build).sortBy(_._1)
     // A failing query must not bench as fast: its error is carried into
     // the JSON ("errors" map) instead of being swallowed into a small
     // elapsed time.
@@ -129,21 +120,14 @@ object Bench {
       (laps.head._1, laps.map(_._2), laps.flatMap(_._3).headOption) }
     def fmtArr(xs: Seq[Double]): String = xs.mkString("[", ",", "]")
     def minUsed(v: Seq[Double]): Double = useIdx.map(v).min
-    val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + minUsed(v) }
+    val qs = results.map { case (k, v, _) => Json.str(k) + ":" + minUsed(v) }
       .mkString("{", ",", "}")
     val lapJson = results.map { case (k, v, _) =>
-      s"\"" + k + "\":" + fmtArr(v) }.mkString("{", ",", "}")
-    // Full JSON string escaping: any control char < 0x20 (tabs, CRs,
-    // ANSI escapes in exception messages) must not leak raw into the
-    // one-line contract output.
-    def jstr(s: String): String = s.flatMap {
-      case '\\' => "\\\\"
-      case '"' => "\\\""
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
+      Json.str(k) + ":" + fmtArr(v) }.mkString("{", ",", "}")
+    // Exception messages carry tabs, CRs and ANSI escapes: Json.str
+    // keeps them from leaking raw into the one-line contract output.
     val errs = results.collect { case (k, _, Some(e)) =>
-      s"\"" + k + "\":\"" + jstr(e) + "\"" }
+      Json.str(k) + ":" + Json.str(e) }
       .mkString("{", ",", "}")
     val total = results.map(r => minUsed(r._2)).sum
     val calibJson = s"""{"ref_sec":$CalibRefSec,"laps":${fmtArr(calibs.toSeq)},""" +
@@ -161,7 +145,7 @@ object Bench {
     // clip the one-line contract output again.
     val line = s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""cpus":$cpus,"default_parallelism":${spark.sparkContext.defaultParallelism},""" +
-      s""""queries":$qs,"laps":$lapJson,"calib":$calibJson,"errors":$errs,"sf":"$sfDir"}"""
+      s""""queries":$qs,"laps":$lapJson,"calib":$calibJson,"errors":$errs,"sf":${Json.str(sfDir)}}"""
     System.out.println(line)
     System.out.flush()
     if (results.exists(_._3.isDefined)) { spark.stop(); sys.exit(1) }

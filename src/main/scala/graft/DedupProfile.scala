@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Focused profiler for the streaming near-dup dedup path — the round-5
@@ -16,19 +15,8 @@ object DedupProfile {
     val nDocs = args.headOption.map(_.toInt).getOrElse(20000)
     val batches = args.lift(1).map(_.toInt).getOrElse(4)
     val bands = args.lift(2).map(_.toInt).getOrElse(16)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", SessionTuning.localDir)
-      .config("spark.sql.optimizer.excludedRules", SessionTuning.excludedRules)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.envCpus(32)
+    val spark = GraftSession.local(cpus)
 
     val t0 = 1650557501028L
     import spark.implicits._
@@ -42,7 +30,7 @@ object DedupProfile {
     val docFrame = mem.toDF()
       .select(explode(sequence(col("value") * per,
         (col("value") + 1) * per - 1)).as("id"))
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .select(col("id").as("doc_id"),
         timestamp_millis(lit(t0) + col("id") * 10).as("eventTime"),
         when(pmod(col("id"), lit(16)) === 0,

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: print the formatted physical plan of one SparkEntry query
   * and time N laps of it (steady-state). Usage:
@@ -10,22 +9,17 @@ object Explain {
     // Comma-separated names run in ONE JVM (plan-dump batches for the
     // optimization rounds); a single name keeps the original contract.
     val names = args(0).split(",").toSeq
+    val builds = SparkEntry.gates.map(g => g.name -> g.build).toMap
+    val unknown = names.filterNot(builds.contains)
+    require(unknown.isEmpty, s"unknown query ${unknown.mkString(", ")} (have: " +
+      builds.keys.toSeq.sorted.mkString(", ") + ")")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val laps = if (args.length > 2) args(2).toInt else 3
     // Optional: write each query's formatted plan to <dir>/<name>_<tag>.txt
     // (tag from SPARK_GRAFT_PLAN_TAG, e.g. "before"/"after").
     val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
     val planTag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "plan")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", SessionTuning.localDir)
-      .config("spark.sql.optimizer.excludedRules", SessionTuning.excludedRules)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.envCpus(32))
     // Opt-in stage-time attribution (SPARK_GRAFT_STAGES=1): per
     // completed stage, task count + summed executor run/CPU time —
     // the "which stage eats the row" evidence the optimization rounds
@@ -46,7 +40,7 @@ object Explain {
         })
     names.foreach { name =>
       println(s"===== $name =====")
-      val fn = (SparkEntry.queries ++ SparkEntry.benchOnly)(name)
+      val fn = builds(name)
       planDir match {
         case Some(dir) =>
           val plan = fn(spark, sfDir).queryExecution.explainString(

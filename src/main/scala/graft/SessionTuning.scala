@@ -1,6 +1,6 @@
 package graft
 
-/** Session-level tuning shared by the driver-facing mains (r14
+/** Session-level tuning applied by [[GraftSession.local]] (r14
   * optimization round). */
 object SessionTuning {
 
@@ -51,9 +51,7 @@ object SessionTuning {
     * every document yields grams) and holds at every scale, so the
     * exclusion is not a local[32]-only tune. Semantics are unchanged
     * by construction: the inferred filter only removes rows the
-    * explode drops anyway. `SPARK_GRAFT_INFER_GENERATE_FILTERS=on`
-    * restores the default optimizer (the A/B knob). */
-  def excludedRules: String =
-    if (sys.env.getOrElse("SPARK_GRAFT_INFER_GENERATE_FILTERS", "off") == "on") ""
-    else "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
+    * explode drops anyway. */
+  final val excludedRules =
+    "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 }

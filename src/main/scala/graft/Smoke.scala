@@ -1,22 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke entry: runs the driver's entry() contract exactly as the
   * driver would (fresh default session, sf0.001), prints the row count
   * and the formatted physical plan for eyeballing shuffle/broadcast
   * shape. `sbt "runMain graft.Smoke"`. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.local.dir", SessionTuning.localDir)
-      .config("spark.sql.optimizer.excludedRules", SessionTuning.excludedRules)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.envCpus(8))
     val df = SparkEntry.entry(spark)
     df.explain("formatted")
     val n = df.count()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.cep.Metrics
 import graft.model._
@@ -23,23 +22,8 @@ object StreamBench {
     val nEvents = args.headOption.map(_.toInt).getOrElse(2000000)
     val batches = args.lift(1).map(_.toInt).getOrElse(4)
     val nRules = args.lift(2).map(_.toInt).getOrElse(8)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", SessionTuning.localDir)
-      .config("spark.sql.optimizer.excludedRules", SessionTuning.excludedRules)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // Without changelog checkpointing every commit snapshots the FULL
-      // RocksDB instance — per-batch cost grows with TOTAL state, not
-      // batch size (measured: linear batch-time growth in the dedup
-      // bench). With it, a commit uploads the delta.
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.envCpus(32)
+    val spark = GraftSession.local(cpus)
     import spark.implicits._
 
     // Rule book: SUM/AVG/MIN/MAX × tumbling/sliding over cpu_usage,
@@ -72,7 +56,7 @@ object StreamBench {
         // The generator emits each micro-batch as ONE exploded
         // partition; spread it like a real multi-partition source so
         // the measured number is the parallel engine, not one core.
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .select(
           timestamp_millis(lit(t0) + col("id") * 10).as("eventTime"),
           map(lit("t_group"), concat(lit("g"), pmod(col("id"), lit(64)))).as("tags"),
@@ -124,7 +108,7 @@ object StreamBench {
       val docFrame = mem.toDF()
         .select(explode(sequence(col("value") * per,
           (col("value") + 1) * per - 1)).as("id"))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .select(col("id").as("doc_id"),
           timestamp_millis(lit(t0) + col("id") * 10).as("eventTime"),
           when(pmod(col("id"), lit(16)) === 0,
@@ -168,7 +152,7 @@ object StreamBench {
       val docFrame = mem.toDF()
         .select(explode(sequence(col("value") * per,
           (col("value") + 1) * per - 1)).as("id"))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .select(col("id").as("doc_id"),
           concat_ws(" ", words: _*).as("text"))
       val enriched = docFrame
@@ -211,7 +195,7 @@ object StreamBench {
       val metricFrame = mem.toDF()
         .select(explode(sequence(col("value") * per,
           (col("value") + 1) * per - 1)).as("id"))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .select(
           timestamp_millis(lit(t0) + col("id") * 10).as("eventTime"),
           map(
@@ -239,7 +223,7 @@ object StreamBench {
       val metricFrame = () => mem.toDF()
         .select(explode(sequence(col("value") * per,
           (col("value") + 1) * per - 1)).as("id"))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .select(
           timestamp_millis(lit(t0) + col("id") * 10).as("eventTime"),
           map(lit("t_group"), concat(lit("g"), pmod(col("id"), lit(64)))).as("tags"),
@@ -297,7 +281,7 @@ object StreamBench {
       def best: Double = vals.max
       def json: String = {
         val spread = if (vals.min > 0) vals.max / vals.min else Double.NaN
-        f"""{"best":${vals.max}%.0f,"spread":$spread%.3f,""" +
+        f"""{"best":${vals.max}%.0f,"spread":${Json.num(spread)},""" +
           s""""laps":${vals.map(v => f"$v%.0f").mkString("[", ",", "]")},""" +
           s""""lap_calib_ratios":${ratios.map(r => f"$r%.3f").mkString("[", ",", "]")}}"""
       }

@@ -1,8 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each gate's result → parquet, plus
+  * oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // Optional third arg (dev-only): comma-separated query names to
@@ -11,41 +10,25 @@ object Verify {
       case Array(a, b)    => (a, b, Set.empty[String])
       case Array(a, b, f) => (a, b, f.split(",").toSet)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", SessionTuning.localDir)
-      .config("spark.sql.optimizer.excludedRules", SessionTuning.excludedRules)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.envCpus(4))
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+    SparkEntry.gates
+      .filter(g => g.oracle.isDefined && (only.isEmpty || only(g.name)))
+      .foreach { g =>
+        try g.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/${g.name}")
         catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          System.err.println(s"[verify] ${g.name} failed: ${e.getMessage}")
         }
       }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // Json.str escapes every control char: a tab or CR in oracle SQL
+    // would otherwise make the driver's json.load fail and silently
+    // zero the round's correctness. The keys follow oracleSql's map
+    // order, which keeps the file byte-comparable across changes that
+    // reorder `gates`.
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => only.isEmpty || only(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -184,21 +184,8 @@ object CepQuery {
     * Global windows emit NULL window bounds. `group_id` is the
     * reference's `ruleId_tagVal1_tagVal2…` (PartitionEngine.java:72-81).
     */
-  def planAll(metricFrame: DataFrame, ruleFrame: DataFrame): DataFrame =
-    planAllFromJoined(fanOutJoin(metricFrame, ruleFrame))
-
-  /** [[planAll]] with the rule rows already resident on the driver —
-    * the engine path ([[graft.streaming.StreamingEngine]] holds its
-    * RuleBook in memory): identical plan, but the pivot statistics are
-    * computed in plain Scala, so building it runs NO Spark job (spec:
-    * CepQuerySpec "plan construction triggers no Spark job"). With
-    * rule replanning on the control path, two collects per plan build
-    * would land on the hot path. */
-  def planAllRows(metricFrame: DataFrame, rows: Seq[Metrics.RuleRow]): DataFrame =
-    planAllFromJoined(fanOutJoinRows(metricFrame, rows))
-
-  private def planAllFromJoined(joined: DataFrame): DataFrame = {
-    val prepared = prepareFanned(joined)
+  def planAll(metricFrame: DataFrame, ruleFrame: DataFrame): DataFrame = {
+    val prepared = prepareFanned(fanOutJoin(metricFrame, ruleFrame))
 
     // Window assignment, arithmetically (width/slide are per-rule
     // data): one native call per fanned-out row computes the covering
@@ -308,39 +295,6 @@ object CepQuery {
     // of distinct pivot values prunes the metric-side explode.
     val pivotVals = rules.select(col("_pivot")).distinct()
       .collect().map(_.getString(0)).sorted
-    fanOutJoinImpl(metricFrame, rules, pivotVals.toSeq)
-  }
-
-  /** [[fanOutJoin]] with driver-resident rule rows: the SAME pivot
-    * arithmetic as [[withRarestKeyPivot]] + the distinct-pivot
-    * collection, in plain Scala over KBs of control data — zero Spark
-    * actions during plan construction. The engine path; the DataFrame
-    * overload stays for direct API callers who already hold a rule
-    * frame. */
-  private[graft] def fanOutJoinRows(
-      metricFrame: DataFrame, rows: Seq[Metrics.RuleRow]): DataFrame = {
-    val spark = metricFrame.sparkSession
-    import spark.implicits._
-    val active = rows.filter(_.rule_state == RuleState.Active.name)
-    // Same statistic as withRarestKeyPivot's histogram: occurrences of
-    // each grouping key across the ACTIVE book (per listing, not
-    // per-rule-distinct — the exploded count's exact arithmetic).
-    val freqs: Map[String, Long] = active.flatMap(_.grouping_key_names)
-      .groupBy(identity).map { case (k, ks) => k -> ks.size.toLong }
-    def pivotOf(r: Metrics.RuleRow): String =
-      if (r.grouping_key_names.isEmpty) KeylessPivot
-      else r.grouping_key_names.minBy(k => (freqs(k), k))
-    val pivotByRule: Map[Int, String] =
-      active.map(r => r.rule_id -> pivotOf(r)).toMap
-    val pivotVals = active.map(pivotOf).distinct.sorted
-    val rules = active.toDF().withColumn("_pivot",
-      if (pivotByRule.isEmpty) lit(KeylessPivot)
-      else element_at(typedlit(pivotByRule), col("rule_id")))
-    fanOutJoinImpl(metricFrame, rules, pivotVals)
-  }
-
-  private def fanOutJoinImpl(metricFrame: DataFrame, rulesWithPivot: DataFrame,
-      pivotVals: Seq[String]): DataFrame =
     metricFrame.withColumn("_tag_keys", map_keys(col("tags")))
       .withColumn("_pivot",
         // Set-equal to array_intersect(tag_keys ++ [sentinel],
@@ -348,12 +302,13 @@ object CepQuery {
         // pivot literals with array_contains probes costs no per-row
         // hash-set allocation, and with a homogeneous book it is one
         // containment check per metric.
-        explode(filter(typedlit(pivotVals),
+        explode(filter(typedlit(pivotVals.toSeq),
           p => (p === KeylessPivot) || array_contains(col("_tag_keys"), p))))
-      .join(broadcast(rulesWithPivot), "_pivot")
+      .join(broadcast(rules), "_pivot")
       .filter(graft.functions.array_contains_all(col("_tag_keys"),
         col("grouping_key_names")))
       .drop("_pivot", "_tag_keys")
+  }
 
   /** Attach `_pivot` = the rule's grouping key with the lowest
     * rule-frequency in the book (ties lexicographic; sentinel for

@@ -19,24 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Join-strategy hint for the shingle-keyed candidate SELF-joins
-    * (r15 optimization, guide §3.1): a shuffled-HASH join skips the
-    * per-partition sort a sort-merge join pays on BOTH sides of the
-    * candidate generation — the family's largest shuffle — and its
-    * build side is one AQE-sized post-shuffle partition of the shingle
-    * index (advisory-bytes bounded, skew-split still applies to SHJ),
-    * so the build fits task memory at any corpus size. Measured on the
-    * alternated-JVM A/B (see OPTIMIZATION_r15.md): ngram-family rows
-    * improve double-digit percent with no incremental/e2e regression —
-    * the r14 GLOBAL preferSortMergeJoin experiment was mixed precisely
-    * because it also rewrote the write-bound rows, which this per-site
-    * hint leaves alone. `SPARK_GRAFT_SHJ=off` restores the sort-merge
-    * plans (the A/B knob). */
-  private def shjHint(df: DataFrame): DataFrame =
-    if (sys.env.getOrElse("SPARK_GRAFT_SHJ", "on") != "off")
-      df.hint("SHUFFLE_HASH")
-    else df
-
   /** The shared exact-dedup pipeline: group by a caller-supplied
     * 128-bit fingerprint column so the shuffle key is fixed-width
     * regardless of document length (both spellings below must stay on
@@ -372,11 +354,12 @@ object Dedup {
           .filter(col("_hot").isNull)
           .select(col("doc_id"), col("shingle"), col("n_sh"))
       }
-    // Deliberately NOT shjHint (r15 A/B, alternated JVMs): forcing the
-    // shuffled-hash join here measured 1.25× SLOWER (0.55 → 0.69 s at
-    // sf0.1) — this self-join's downstream aggregation benefits from
-    // the sort-merge join's sorted output, unlike the Jaccard
-    // candidate joins, which improved 0.77–0.92×. Sort-merge kept.
+    // Deliberately no SHUFFLE_HASH hint (r15 A/B, alternated JVMs):
+    // forcing the shuffled-hash join here measured 1.25× SLOWER
+    // (0.55 → 0.69 s at sf0.1) — this self-join's downstream
+    // aggregation benefits from the sort-merge join's sorted output,
+    // unlike the Jaccard candidate joins, which improved 0.77–0.92×.
+    // Sort-merge kept.
     joinable.as("x")
       .join(joinable.as("y"),
         col("x.shingle") === col("y.shingle") &&
@@ -390,12 +373,23 @@ object Dedup {
       .filter(col("containment") >= threshold)
   }
 
+  /** The shingle-keyed candidate SELF-joins take a `SHUFFLE_HASH`
+    * hint (r15 optimization, guide §3.1): a shuffled-hash join skips
+    * the per-partition sort a sort-merge join pays on BOTH sides of the
+    * candidate generation — the family's largest shuffle — and its
+    * build side is one AQE-sized post-shuffle partition of the shingle
+    * index (advisory-bytes bounded, skew-split still applies to SHJ).
+    * Measured on the alternated-JVM A/B (see OPTIMIZATION_r15.md):
+    * ngram-family rows improve double-digit percent with no
+    * incremental/e2e regression — the r14 GLOBAL preferSortMergeJoin
+    * experiment was mixed precisely because it also rewrote the
+    * write-bound rows, which this per-site hint leaves alone. */
   private def pairsFromIndex(sh: DataFrame, threshold: Double,
       maxShingleDf: Int, persist: Persistence,
       maxBroadcastHotShingles: Long): DataFrame = {
     if (maxShingleDf == Int.MaxValue) {
       sh.as("x")
-        .join(shjHint(sh.as("y")),
+        .join(sh.as("y").hint("SHUFFLE_HASH"),
           col("x.shingle") === col("y.shingle") && col("x.doc_id") < col("y.doc_id"))
         .groupBy(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
         .agg(count(lit(1)).as("n_common"),
@@ -461,7 +455,7 @@ object Dedup {
       // exact verification join; survivors are verified on the FULL
       // index, so reported Jaccard stays exact.
       val scored = candIdx.as("x")
-        .join(shjHint(candIdx.as("y")),
+        .join(candIdx.as("y").hint("SHUFFLE_HASH"),
           col("x.shingle") === col("y.shingle") && col("x.doc_id") < col("y.doc_id"))
         .groupBy(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
         .agg(count(lit(1)).as("cc"),

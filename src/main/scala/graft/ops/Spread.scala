@@ -31,12 +31,6 @@ import org.apache.spark.sql.catalyst.plans.logical._
   * cores-many partitions can never be memory-hostile. */
 object Spread {
 
-  /** Kill switch for A/B measurement and for clusters whose scans are
-    * never narrow: `SPARK_GRAFT_SPREAD=off` restores the pre-r14
-    * spellings exactly (no pinned partition counts anywhere). */
-  private val enabled: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_SPREAD", "on") != "off"
-
   private def parallelismOf(df: DataFrame): Int =
     df.sparkSession.sparkContext.defaultParallelism
 
@@ -76,7 +70,7 @@ object Spread {
     * micro-batch sources size their own partitioning. Both helpers
     * then keep the stream-safe pre-r14 spelling. */
   private def isNarrow(df: DataFrame): Boolean =
-    enabled && !df.isStreaming &&
+    !df.isStreaming &&
       df.queryExecution.optimizedPlan.collectFirst {
         case p if !narrowNode(p) => p
       }.isEmpty &&

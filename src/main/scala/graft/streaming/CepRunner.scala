@@ -93,22 +93,13 @@ object CepRunner {
     val metricPort = args.lift(1).map(_.toInt).getOrElse(9999)
     val rulePort = args.lift(2).map(_.toInt).getOrElse(8888)
     val mode = args.lift(3).getOrElse("per-rule")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.optimizer.excludedRules", graft.SessionTuning.excludedRules)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.envCpus(8))
 
     val book = new RuleBook
     val metricSource =
       () => Parsers.parseMetrics(socketLines(spark, host, metricPort))
     val control = mode match {
       case "dynamic" =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
         val ckpt = java.nio.file.Files
           .createTempDirectory("graft_one_pass_").toString
         val engine = new StreamingEngine(spark, metricSource, book,

@@ -36,7 +36,8 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulPro
   * [[ValueState]] and firing is timer-driven: each key keeps ONE
   * event-time timer at its earliest open window end, and
   * `handleExpiredTimer` fires and re-arms. Requires the RocksDB state
-  * store provider (`spark.sql.streaming.stateStore.providerClass`).
+  * store provider (`spark.sql.streaming.stateStore.providerClass`),
+  * which [[graft.GraftSession.local]] sets.
   *
   * Retention note: Spark's native state TTL (`TTLConfig`) is
   * processing-time based and is REJECTED in `TimeMode.EventTime`

@@ -36,10 +36,6 @@ import graft.parse.Parsers
   *    whose fan-out resolves rules per micro-batch from a
   *    [[DynamicRules]] snapshot — rule swaps take effect with the
   *    query running, the reference's zero-downtime semantics.
-  *
-  * [[onePassQuery]] additionally compiles the rule snapshot into one
-  * declarative streaming aggregation (`update` mode) — demo/replay
-  * only; see its state-growth caveat.
   */
 final class StreamingEngine(
     spark: SparkSession,
@@ -130,24 +126,6 @@ final class StreamingEngine(
 
   def runningRuleIds: Set[Int] = running.keySet.toSet
 
-  /** One-pass variant: the entire ACTIVE rule snapshot as a single
-    * streaming aggregation (CepQuery.planAll). Update output mode;
-    * restart with the same checkpoint to pick up rule changes (the
-    * plan keeps exactly one unchanged stateful operator, so state
-    * carries across restarts).
-    *
-    * STATE-GROWTH CAVEAT: planAll's windows are arithmetic (`ws_ms` is
-    * a derived grouping column, because width/slide are per-rule DATA)
-    * — Spark's watermark-based aggregation-state eviction only tracks
-    * `window()`/event-time grouping columns, so THIS mode's state
-    * grows with the number of distinct (rule, group, window) keys ever
-    * seen and is never evicted. Fine for bounded replays and demos —
-    * NOT a production mode. Long-running streams use
-    * [[startOnePassDynamic]], whose stateful engine evicts windows at
-    * fire time and clears emptied keys. */
-  def onePassQuery(): DataFrame =
-    CepQuery.planAllRows(metricStream(), book.activeRules)
-
   // ---------------------------------------------------------------------------
   // One-pass stateful production mode with zero-downtime rule updates
   // ---------------------------------------------------------------------------
@@ -174,7 +152,8 @@ final class StreamingEngine(
     * restarted on the same checkpoint resumes its open windows —
     * including across a NEW SparkSession / JVM (spec-pinned). Requires
     * the RocksDB state store provider
-    * (`spark.sql.streaming.stateStore.providerClass`). */
+    * (`spark.sql.streaming.stateStore.providerClass`), which
+    * [[graft.GraftSession.local]] sets. */
   def startOnePassDynamic(
       ruleDir: String,
       align: StatefulCep.Alignment = StatefulCep.Epoch): StreamingQuery = synchronized {

@@ -197,49 +197,6 @@ class CepQuerySpec extends AnyFunSuite {
       (2, "2_business", 16.0 / 3), (2, "2_work", 16.0 / 3)))
   }
 
-  test("planAllRows (driver-resident rules) == planAll, incl. keyless + paused") {
-    val frame = metricFrame(demoEvents)
-    val rules = Seq(
-      demoRule,
-      demoRule.copy(ruleId = 2, groupingKeyNames = Seq.empty,
-        limit = BigDecimal(0)),
-      demoRule.copy(ruleId = 3, ruleState = RuleState.Pause))
-    def rows(df: DataFrame) = df
-      .select("rule_id", "group_id", "result")
-      .as[(Int, String, Double)].collect().toSet
-    val fromDF = rows(CepQuery.planAll(frame, Metrics.rulesToDF(spark, rules)))
-    val fromRows = rows(CepQuery.planAllRows(frame, rules.map(Metrics.toRow)))
-    assert(fromRows.nonEmpty && fromRows == fromDF)
-  }
-
-  test("engine plan construction triggers no Spark job (rule stats are driver-resident)") {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    val frame = metricFrame(demoEvents)
-    val rows = Seq(demoRule,
-      demoRule.copy(ruleId = 2, groupingKeyNames = Seq.empty))
-      .map(Metrics.toRow)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // Build + physically plan (but do not execute) the engine-path
-      // plan: with the pivot statistics driver-resident, it may not
-      // submit a Spark job — the old collect-based path ran two jobs
-      // per plan build, which lands on the control hot path once rules
-      // replan per micro-batch.
-      CepQuery.planAllRows(frame, rows).queryExecution.executedPlan
-      Thread.sleep(1000) // let the async listener bus drain
-      assert(jobs.get() == 0,
-        s"plan construction submitted ${jobs.get()} Spark job(s)")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener); ()
-    }
-  }
-
   test("planAllFirstAligned == per-rule planRuleFirstAligned (+ global passthrough)") {
     val frame = metricFrame(demoEvents)
     val tumb = demoRule.copy(ruleId = 1, limitOperatorType = CmpOp.Gt, limit = BigDecimal(-99))

@@ -26,9 +26,9 @@ class PlanShapeSpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.001"
 
   private lazy val plans: Map[String, String] =
-    (SparkEntry.queries ++ SparkEntry.benchOnly).map { case (name, fn) =>
-      name -> fn(spark, sfDir).queryExecution.executedPlan.toString
-    }
+    SparkEntry.gates.map { g =>
+      g.name -> g.build(spark, sfDir).queryExecution.executedPlan.toString
+    }.toMap
 
   // sim_topk / dedup_embedding: broadcast bounded-build designs (see
   // class doc). profile_hot_keys: a ONE-ROW broadcast scalar (corpus
@@ -359,8 +359,8 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("bench-only queries produce rows (a silently-empty bench row times nothing)") {
-    for ((name, fn) <- SparkEntry.benchOnly) {
-      assert(fn(spark, sfDir).count() > 0, s"$name returned no rows at $sfDir")
+    for (g <- SparkEntry.gates.filter(_.oracle.isEmpty)) {
+      assert(g.build(spark, sfDir).count() > 0, s"${g.name} returned no rows at $sfDir")
     }
   }
 

@@ -7,7 +7,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.cep.Metrics
 import graft.model._
 import graft.streaming.StatefulCep
-import graft.SparkTestSession.withRocksDb
 
 /** Per-event stateful engine (transformWithState on the RocksDB state
   * store): windows emit exactly once when the watermark passes their
@@ -34,52 +33,46 @@ class StatefulCepSpec extends AnyFunSuite {
     Seq("t_group"), AggType.Sum, "cpu_usage", CmpOp.Gt, BigDecimal(11))
 
   test("stateful engine: watermark-driven exactly-once window emission + late-data drop") {
-    withRocksDb {
-      implicit val sqlCtx = spark.sqlContext
-      val mem = MemoryStream[Ev]
-      val rules = Metrics.rulesToDF(spark, Seq(demoRule))
-      val out = StatefulCep.run(StatefulCep.fanOut(toMetricFrame(mem.toDF()), rules))
-      val q = out.writeStream.format("memory").queryName("stateful_cep")
-        .outputMode("append").start()
-      try {
-        // Batch 1: six demo events inside one 2-minute window.
-        mem.addData(
-          Ev(t0, "business", 9), Ev(t0 + 1000, "work", 1), Ev(t0 + 2000, "business", 2),
-          Ev(t0 + 3000, "work", 5), Ev(t0 + 4000, "business", 5), Ev(t0 + 5000, "work", 10))
-        q.processAllAvailable()
-        assert(spark.table("stateful_cep").count() == 0) // window still open
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Ev]
+    val rules = Metrics.rulesToDF(spark, Seq(demoRule))
+    val out = StatefulCep.run(StatefulCep.fanOut(toMetricFrame(mem.toDF()), rules))
+    val q = out.writeStream.format("memory").queryName("stateful_cep")
+      .outputMode("append").start()
+    try {
+      // Batch 1: six demo events inside one 2-minute window.
+      mem.addData(
+        Ev(t0, "business", 9), Ev(t0 + 1000, "work", 1), Ev(t0 + 2000, "business", 2),
+        Ev(t0 + 3000, "work", 5), Ev(t0 + 4000, "business", 5), Ev(t0 + 5000, "work", 10))
+      q.processAllAvailable()
+      assert(spark.table("stateful_cep").count() == 0) // window still open
 
-        // Batch 2: an event 10 minutes later advances the watermark past
-        // the first window's end -> both groups fire exactly once.
-        mem.addData(Ev(t0 + 600000, "business", 1))
-        q.processAllAvailable()
-        val fired = spark.table("stateful_cep")
-          .select("group_id", "result").as[(String, Double)].collect().toMap
-        assert(fired == Map("1_business" -> 16.0, "1_work" -> 16.0))
+      // Batch 2: an event 10 minutes later advances the watermark past
+      // the first window's end -> both groups fire exactly once.
+      mem.addData(Ev(t0 + 600000, "business", 1))
+      q.processAllAvailable()
+      val fired = spark.table("stateful_cep")
+        .select("group_id", "result").as[(String, Double)].collect().toMap
+      assert(fired == Map("1_business" -> 16.0, "1_work" -> 16.0))
 
-        // Batch 3: a LATE event for the already-fired window — silently
-        // dropped, no re-emission, no new row.
-        mem.addData(Ev(t0 + 6000, "business", 100))
-        q.processAllAvailable()
-        assert(spark.table("stateful_cep").count() == 2)
-      } finally q.stop()
-    }
+      // Batch 3: a LATE event for the already-fired window — silently
+      // dropped, no re-emission, no new row.
+      mem.addData(Ev(t0 + 6000, "business", 100))
+      q.processAllAvailable()
+      assert(spark.table("stateful_cep").count() == 2)
+    } finally q.stop()
   }
 
   test("stateful engine agrees with the declarative batch plan on closed windows") {
-    withRocksDb {
-      parityCheck(demoRule.copy(limitOperatorType = CmpOp.Gt, limit = BigDecimal(-1)),
-        "stateful_parity", StatefulCep.run(_))
-    }
+    parityCheck(demoRule.copy(limitOperatorType = CmpOp.Gt, limit = BigDecimal(-1)),
+      "stateful_parity", StatefulCep.run(_))
   }
 
   test("stateful engine sliding-window parity with the batch plan") {
-    withRocksDb {
-      parityCheck(
-        Rule(2, RuleState.Active, WindowType.Sliding, 2, 1, Seq("t_group"),
-          AggType.Max, "cpu_usage", CmpOp.Gt, BigDecimal(-1)),
-        "stateful_parity_sliding", StatefulCep.run(_))
-    }
+    parityCheck(
+      Rule(2, RuleState.Active, WindowType.Sliding, 2, 1, Seq("t_group"),
+        AggType.Max, "cpu_usage", CmpOp.Gt, BigDecimal(-1)),
+      "stateful_parity_sliding", StatefulCep.run(_))
   }
 
   test("transformWithState exposes no TTL knob: Spark rejects TTL state in event-time mode") {
@@ -89,38 +82,36 @@ class StatefulCepSpec extends AnyFunSuite {
     // TimeMode.EventTime — the mode the engine's event-time timers
     // require. Pin the platform behavior so a future Spark that lifts
     // the restriction shows up as a failing expectation here.
-    withRocksDb {
-      implicit val sqlCtx = spark.sqlContext
-      val mem = MemoryStream[Ev]
-      val probe = new org.apache.spark.sql.streaming.StatefulProcessor[
-          Int, StatefulCepEv, Int] {
-        @transient private var s: org.apache.spark.sql.streaming.ValueState[Int] = _
-        override def init(om: org.apache.spark.sql.streaming.OutputMode,
-            tm: org.apache.spark.sql.streaming.TimeMode): Unit =
-          s = getHandle.getValueState[Int]("probe",
-            org.apache.spark.sql.Encoders.scalaInt,
-            org.apache.spark.sql.streaming.TTLConfig(java.time.Duration.ofMinutes(1)))
-        override def handleInputRows(key: Int, rows: Iterator[StatefulCepEv],
-            tv: org.apache.spark.sql.streaming.TimerValues): Iterator[Int] =
-          Iterator.empty
-      }
-      val q = mem.toDF().withColumn("eventTime", timestamp_millis(col("ms")))
-        .withWatermark("eventTime", "0 seconds")
-        .as[Ev]
-        .groupByKey(_ => 1)
-        .transformWithState(probe,
-          org.apache.spark.sql.streaming.TimeMode.EventTime(),
-          org.apache.spark.sql.streaming.OutputMode.Append())
-        .writeStream.format("memory").queryName("tws_ttl_probe")
-        .outputMode("append").start()
-      try {
-        mem.addData(Ev(t0, "business", 1))
-        val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-          q.processAllAvailable()
-        }
-        assert(e.getMessage.contains("INCORRECT_TIME_MODE_TO_ASSIGN_TTL"))
-      } finally q.stop()
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Ev]
+    val probe = new org.apache.spark.sql.streaming.StatefulProcessor[
+        Int, StatefulCepEv, Int] {
+      @transient private var s: org.apache.spark.sql.streaming.ValueState[Int] = _
+      override def init(om: org.apache.spark.sql.streaming.OutputMode,
+          tm: org.apache.spark.sql.streaming.TimeMode): Unit =
+        s = getHandle.getValueState[Int]("probe",
+          org.apache.spark.sql.Encoders.scalaInt,
+          org.apache.spark.sql.streaming.TTLConfig(java.time.Duration.ofMinutes(1)))
+      override def handleInputRows(key: Int, rows: Iterator[StatefulCepEv],
+          tv: org.apache.spark.sql.streaming.TimerValues): Iterator[Int] =
+        Iterator.empty
     }
+    val q = mem.toDF().withColumn("eventTime", timestamp_millis(col("ms")))
+      .withWatermark("eventTime", "0 seconds")
+      .as[Ev]
+      .groupByKey(_ => 1)
+      .transformWithState(probe,
+        org.apache.spark.sql.streaming.TimeMode.EventTime(),
+        org.apache.spark.sql.streaming.OutputMode.Append())
+      .writeStream.format("memory").queryName("tws_ttl_probe")
+      .outputMode("append").start()
+    try {
+      mem.addData(Ev(t0, "business", 1))
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.processAllAvailable()
+      }
+      assert(e.getMessage.contains("INCORRECT_TIME_MODE_TO_ASSIGN_TTL"))
+    } finally q.stop()
   }
 
   test("LLM text ops run unchanged on a stream (pure projections, batch/stream parity)") {
@@ -242,7 +233,7 @@ class StatefulCepSpec extends AnyFunSuite {
     val tumb = demoRule.copy(limitOperatorType = CmpOp.Gt, limit = BigDecimal(-1))
     val slid = Rule(2, RuleState.Active, WindowType.Sliding, 2, 1, Seq("t_group"),
       AggType.Sum, "cpu_usage", CmpOp.Gt, BigDecimal(-1))
-    for ((rule, shape) <- Seq(tumb -> "tumb", slid -> "slid")) withRocksDb {
+    for ((rule, shape) <- Seq(tumb -> "tumb", slid -> "slid")) {
       val table = s"fa_$shape"
       val mem = MemoryStream[Ev]
       val events = Seq(
@@ -303,19 +294,17 @@ class StatefulCepSpec extends AnyFunSuite {
     val globalRule = Rule(9, RuleState.Active, WindowType.Global, 0, 0,
       Seq("t_group"), AggType.Sum, "cpu_usage", CmpOp.Gt, BigDecimal(-1))
     val rules = Metrics.rulesToDF(spark, Seq(globalRule))
-    withRocksDb {
-      val mem = MemoryStream[Ev]
-      val out = StatefulCep.run(StatefulCep.fanOut(toMetricFrame(mem.toDF()), rules))
-      val q = out.writeStream.format("memory").queryName("stateful_global")
-        .outputMode("append").start()
-      try {
-        mem.addData(Ev(t0, "a", 3), Ev(t0 + 30000, "a", 12), Ev(t0 + 50000, "b", 20))
-        q.processAllAvailable()
-        mem.addData(Ev(t0 + 3600000, "a", 1)) // watermark far ahead: still nothing
-        q.processAllAvailable()
-        assert(spark.table("stateful_global").count() == 0)
-      } finally q.stop()
-    }
+    val mem = MemoryStream[Ev]
+    val out = StatefulCep.run(StatefulCep.fanOut(toMetricFrame(mem.toDF()), rules))
+    val q = out.writeStream.format("memory").queryName("stateful_global")
+      .outputMode("append").start()
+    try {
+      mem.addData(Ev(t0, "a", 3), Ev(t0 + 30000, "a", 12), Ev(t0 + 50000, "b", 20))
+      q.processAllAvailable()
+      mem.addData(Ev(t0 + 3600000, "a", 1)) // watermark far ahead: still nothing
+      q.processAllAvailable()
+      assert(spark.table("stateful_global").count() == 0)
+    } finally q.stop()
     // Same rule, declarative path: every group fires with the running
     // aggregate — the output a deployed global rule actually wants.
     val events = Seq(Ev(t0, "a", 3), Ev(t0 + 30000, "a", 12),

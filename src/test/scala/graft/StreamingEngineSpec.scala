@@ -8,7 +8,6 @@ import graft.cep.CepQuery
 import graft.model._
 import graft.streaming.{RuleBook, StreamingEngine}
 import graft.cep.Metrics.RuleRow
-import graft.SparkTestSession.withRocksDb
 
 /** Streaming rebuild semantics: batch/stream parity of the rule plan,
   * and the reference's dynamic rule lifecycle (add / pause / delete at
@@ -326,20 +325,16 @@ class StreamingEngineSpec extends AnyFunSuite {
     writeLines("a.jsonl", Seq(
       Ev(t0, "business", 9), Ev(t0 + 1000, "work", 1),
       Ev(t0 + 2000, "business", 2), Ev(t0 + 3000, "work", 5)))
-    withRocksDb {
-      val e1 = engineFor(spark)
-      val q1 = e1.startOnePassDynamic(s"$tmp/rules")
-      q1.processAllAvailable()
-      e1.shutdown()
-    }
+    val e1 = engineFor(spark)
+    val q1 = e1.startOnePassDynamic(s"$tmp/rules")
+    q1.processAllAvailable()
+    e1.shutdown()
 
     // Phase 2: a NEW SparkSession (fresh session state over the shared
     // context), a NEW engine + book, the SAME checkpoint. Second half
     // of the window plus a far-future event to push the watermark past
     // the window end.
     val spark2 = spark.newSession()
-    spark2.conf.set(SparkTestSession.StateStoreProviderKey,
-      SparkTestSession.RocksDbProvider)
     writeLines("b.jsonl", Seq(
       Ev(t0 + 4000, "business", 5), Ev(t0 + 5000, "work", 10),
       Ev(t0 + 600000, "business", 1)))
@@ -415,66 +410,64 @@ class StreamingEngineSpec extends AnyFunSuite {
     def at(base: Long, evs: Seq[(String, Int)]): Seq[(Long, String, Int)] =
       evs.zipWithIndex.map { case ((g, v), i) => (base + i * 1000L, g, v) }
 
-    withRocksDb {
-      val ruleMem = MemoryStream[String]
-      val book = new RuleBook
-      val engine = new StreamingEngine(
-        spark,
-        () => graft.parse.Parsers.parseMetrics(
-          graft.streaming.CepRunner.fileLines(spark, srcDir)),
-        book,
-        StreamingEngine.SinkConfig(
-          format = "parquet", outputMode = "append",
-          checkpointRoot = Some(s"$tmp/ckpt"), pathRoot = Some(s"$tmp/out")))
-      val q = engine.startOnePassDynamic(ruleDir)
-      val control = engine.attachRuleStreamDynamic(
-        ruleMem.toDF().withColumnRenamed("value", "line"), ruleDir)
-      try {
-        val runId = q.runId
+    val ruleMem = MemoryStream[String]
+    val book = new RuleBook
+    val engine = new StreamingEngine(
+      spark,
+      () => graft.parse.Parsers.parseMetrics(
+        graft.streaming.CepRunner.fileLines(spark, srcDir)),
+      book,
+      StreamingEngine.SinkConfig(
+        format = "parquet", outputMode = "append",
+        checkpointRoot = Some(s"$tmp/ckpt"), pathRoot = Some(s"$tmp/out")))
+    val q = engine.startOnePassDynamic(ruleDir)
+    val control = engine.attachRuleStreamDynamic(
+      ruleMem.toDF().withColumnRenamed("value", "line"), ruleDir)
+    try {
+      val runId = q.runId
 
-        // Rule 1 arrives -> NO restart; window A + closer fires it.
-        ruleMem.addData(ruleJson(1, "ACTIVE"))
-        control.processAllAvailable()
-        writeLines("a.jsonl", at(t0, sixteen) :+ ((t0 + 600000L, "business", 1)))
-        engine.awaitQuiescence()
-        assert(q.runId == runId && q.isActive)
+      // Rule 1 arrives -> NO restart; window A + closer fires it.
+      ruleMem.addData(ruleJson(1, "ACTIVE"))
+      control.processAllAvailable()
+      writeLines("a.jsonl", at(t0, sixteen) :+ ((t0 + 600000L, "business", 1)))
+      engine.awaitQuiescence()
+      assert(q.runId == runId && q.isActive)
 
-        // Rule 2 added mid-stream -> window B feeds BOTH rules.
-        val tB = t0 + 720000L
-        ruleMem.addData(ruleJson(2, "ACTIVE"))
-        control.processAllAvailable()
-        writeLines("b.jsonl", at(tB, sixteen) :+ ((tB + 600000L, "business", 1)))
-        engine.awaitQuiescence()
-        assert(q.runId == runId && q.isActive)
+      // Rule 2 added mid-stream -> window B feeds BOTH rules.
+      val tB = t0 + 720000L
+      ruleMem.addData(ruleJson(2, "ACTIVE"))
+      control.processAllAvailable()
+      writeLines("b.jsonl", at(tB, sixteen) :+ ((tB + 600000L, "business", 1)))
+      engine.awaitQuiescence()
+      assert(q.runId == runId && q.isActive)
 
-        // Window C in two halves: first half lands under BOTH rules,
-        // then rule 1 is PAUSED with that window still open. The second
-        // half must reach only rule 2 — and rule 1's open window must
-        // still fire (from checkpointed state) with the pre-pause sums.
-        val tC = t0 + 1440000L
-        writeLines("c1.jsonl", at(tC, sixteen.take(4)))
-        engine.awaitQuiescence()
-        ruleMem.addData(ruleJson(1, "PAUSE"))
-        control.processAllAvailable()
-        writeLines("c2.jsonl",
-          at(tC + 4000L, sixteen.drop(4)) :+ ((tC + 600000L, "business", 1)))
-        engine.awaitQuiescence()
-        assert(q.runId == runId && q.isActive,
-          "rule changes must never restart the one-pass query")
+      // Window C in two halves: first half lands under BOTH rules,
+      // then rule 1 is PAUSED with that window still open. The second
+      // half must reach only rule 2 — and rule 1's open window must
+      // still fire (from checkpointed state) with the pre-pause sums.
+      val tC = t0 + 1440000L
+      writeLines("c1.jsonl", at(tC, sixteen.take(4)))
+      engine.awaitQuiescence()
+      ruleMem.addData(ruleJson(1, "PAUSE"))
+      control.processAllAvailable()
+      writeLines("c2.jsonl",
+        at(tC + 4000L, sixteen.drop(4)) :+ ((tC + 600000L, "business", 1)))
+      engine.awaitQuiescence()
+      assert(q.runId == runId && q.isActive,
+        "rule changes must never restart the one-pass query")
 
-        val wsA = Math.floorDiv(t0, 120000L) * 120000L
-        val got = spark.read.parquet(s"$tmp/out/cep_one_pass")
-          .select("rule_id", "group_id", "window_start", "result")
-          .as[(Int, String, Long, Double)].collect().toSet
-        assert(got == Set(
-          (1, "1_business", wsA, 16.0), (1, "1_work", wsA, 16.0),
-          (1, "1_business", wsA + 720000L, 16.0), (1, "1_work", wsA + 720000L, 16.0),
-          (2, "2_business", wsA + 720000L, 16.0), (2, "2_work", wsA + 720000L, 16.0),
-          (1, "1_business", wsA + 1440000L, 11.0), (1, "1_work", wsA + 1440000L, 6.0),
-          (2, "2_business", wsA + 1440000L, 16.0), (2, "2_work", wsA + 1440000L, 16.0)))
-      } finally {
-        control.stop(); engine.shutdown()
-      }
+      val wsA = Math.floorDiv(t0, 120000L) * 120000L
+      val got = spark.read.parquet(s"$tmp/out/cep_one_pass")
+        .select("rule_id", "group_id", "window_start", "result")
+        .as[(Int, String, Long, Double)].collect().toSet
+      assert(got == Set(
+        (1, "1_business", wsA, 16.0), (1, "1_work", wsA, 16.0),
+        (1, "1_business", wsA + 720000L, 16.0), (1, "1_work", wsA + 720000L, 16.0),
+        (2, "2_business", wsA + 720000L, 16.0), (2, "2_work", wsA + 720000L, 16.0),
+        (1, "1_business", wsA + 1440000L, 11.0), (1, "1_work", wsA + 1440000L, 6.0),
+        (2, "2_business", wsA + 1440000L, 16.0), (2, "2_work", wsA + 1440000L, 16.0)))
+    } finally {
+      control.stop(); engine.shutdown()
     }
   }
 
@@ -482,12 +475,9 @@ class StreamingEngineSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
     mem.addData(demoEvents: _*)
-    val book = new RuleBook
-    book.applyChanges(Seq(
-      graft.cep.Metrics.toRow(demoRule),
-      graft.cep.Metrics.toRow(demoRule.copy(ruleId = 3, ruleState = RuleState.Pause))))
-    val engine = new StreamingEngine(spark, () => toMetricFrame(mem.toDF()), book)
-    val q = engine.onePassQuery().writeStream
+    val rules = graft.cep.Metrics.rulesToDF(spark,
+      Seq(demoRule, demoRule.copy(ruleId = 3, ruleState = RuleState.Pause)))
+    val q = CepQuery.planAll(toMetricFrame(mem.toDF()), rules).writeStream
       .queryName("cep_one_pass").format("memory").outputMode("update").start()
     q.processAllAvailable()
     val got = spark.table("cep_one_pass")
