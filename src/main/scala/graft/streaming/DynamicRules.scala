@@ -5,6 +5,7 @@ import scala.collection.concurrent.TrieMap
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.util.SerializableConfiguration
 import graft.cep.Metrics.RuleRow
 import graft.streaming.StatefulCep.CepEvent
 
@@ -44,23 +45,6 @@ import graft.streaming.StatefulCep.CepEvent
   * broadcast stream, whose rule/data interleaving is also unordered.
   */
 object DynamicRules {
-
-  /** Hadoop `Configuration` is not `java.io.Serializable`; this holder
-    * ships the driver's Hadoop conf (with all `spark.hadoop.*` keys,
-    * e.g. object-store credentials) to executors via the conf's own
-    * writable protocol. */
-  final class ConfHolder(@transient private var conf: Configuration)
-      extends Serializable {
-    def value: Configuration = conf
-    private def writeObject(out: ObjectOutputStream): Unit = {
-      out.defaultWriteObject(); conf.write(out)
-    }
-    private def readObject(in: ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      conf = new Configuration(false)
-      conf.readFields(in)
-    }
-  }
 
   private val SnapshotName = "rules-v([0-9]{20})\\.bin".r
 
@@ -167,12 +151,17 @@ object DynamicRules {
   def fanOut(metricFrame: DataFrame, ruleDir: String,
       watermarkDelay: String = "0 seconds"): DataFrame = {
     val spark = metricFrame.sparkSession
-    val conf = new ConfHolder(spark.sessionState.newHadoopConf())
+    // The driver's Hadoop conf (with every `spark.hadoop.*` key, e.g.
+    // object-store credentials) is broadcast once per plan, so each
+    // executor deserializes it once rather than every task of every
+    // micro-batch re-reading the whole conf from its closure.
+    val conf = spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
     implicit val mEnc = Encoders.product[MetricRow]
     implicit val eEnc = Encoders.product[CepEvent]
     metricFrame.select("eventTime", "tags", "metrics").as[MetricRow]
       .mapPartitions { it =>
-        val rules = currentRules(ruleDir, conf.value)
+        val rules = currentRules(ruleDir, conf.value.value)
         it.flatMap { m =>
           if (m.eventTime == null || m.tags == null || m.metrics == null)
             Iterator.empty

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
@@ -35,9 +35,19 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulPro
   * `keyBy(groupId)` partitioning. State lives in a named, typed
   * [[ValueState]] and firing is timer-driven: each key keeps ONE
   * event-time timer at its earliest open window end, and
-  * `handleExpiredTimer` fires and re-arms. Requires the RocksDB state
-  * store provider (`spark.sql.streaming.stateStore.providerClass`),
-  * which [[graft.GraftSession.local]] sets.
+  * `handleExpiredTimer` fires and re-arms. An input batch reads the
+  * key's state once and moves the timer only when that earliest end
+  * changes, so events landing in already-open windows touch no timer.
+  * Requires the RocksDB state store provider
+  * (`spark.sql.streaming.stateStore.providerClass`), which
+  * [[graft.GraftSession.local]] sets.
+  *
+  * Per-task cost: Structured Streaming runs each micro-batch as a job,
+  * so `StatefulProcessor.init` runs once per state partition per
+  * micro-batch. The [[KeyState]] encoder is therefore derived once, on
+  * the driver in [[run]], and handed to the processor; deriving it in
+  * `init` ran Scala reflection under its global lock in every task,
+  * so concurrent tasks queued on that lock.
   *
   * Retention note: Spark's native state TTL (`TTLConfig`) is
   * processing-time based and is REJECTED in `TimeMode.EventTime`
@@ -110,12 +120,17 @@ object StatefulCep {
 
   /** Window starts covering `ev_ms` on the grid with origin `anchor`
     * (0 = epoch alignment — the same arithmetic as the reference's
-    * assigners, see [[Alignment]]). */
+    * assigners, see [[Alignment]]). A non-positive width or slide
+    * yields no windows, as in the native
+    * [[graft.functions.CepExprs.windowStarts]]: such a rule can reach
+    * the engine through [[RuleBook]] and [[DynamicRules.persist]],
+    * which skip `Parsers.parseRules`' positivity filter, and it must
+    * not fail the query that serves every other rule. */
   private[graft] def windowStarts(e: CepEvent, anchor: Long = 0L): Seq[Long] =
     e.window_type match {
-      case "tumbling" =>
+      case "tumbling" if e.w_ms > 0 =>
         Seq(anchor + Math.floorDiv(e.ev_ms - anchor, e.w_ms) * e.w_ms)
-      case "sliding" =>
+      case "sliding" if e.w_ms > 0 && e.s_ms > 0 =>
         // ceil(w/s) candidate starts, then drop those whose window ends
         // at or before the event: when s does not divide w, events near a
         // slide boundary are covered by floor(w/s) windows, others by
@@ -123,7 +138,7 @@ object StatefulCep {
         val n = ((e.w_ms + e.s_ms - 1) / e.s_ms).toInt
         val top = anchor + Math.floorDiv(e.ev_ms - anchor, e.s_ms) * e.s_ms
         (0 until n).map(i => top - i.toLong * e.s_ms).filter(_ > e.ev_ms - e.w_ms)
-      case _ => Seq.empty // global: never windows, never fires (see Scaladoc)
+      case _ => Seq.empty // global (never fires, see Scaladoc) or degenerate
     }
 
   /** Grid origin a new key adopts for its first event. */
@@ -236,48 +251,48 @@ object StatefulCep {
         col("agg_type"), col("cmp_op"), col("limit"))
       .withWatermark("eventTime", watermarkDelay)
 
+  /** Earliest open window end: where the key's one timer sits. */
+  private def earliestEnd(st: KeyState): Option[Long] =
+    if (st == null || st.windows.isEmpty) None
+    else Some(st.windows.iterator.map(_.ws_ms).min + st.w_ms)
+
   /** One per-key timer at the earliest open window end: timers fire
     * when the EVENT-TIME watermark passes them (TimeMode.EventTime).
     * Events arriving after the watermark already passed a window's
-    * end fire it inline. */
-  private class CepProcessor(align: Alignment)
+    * end fire it inline. `enc` comes from [[run]] (see "Per-task
+    * cost" above). */
+  private class CepProcessor(align: Alignment, enc: Encoder[KeyState])
       extends StatefulProcessor[(Int, String), CepEvent, CepResult] {
 
     @transient private var state: ValueState[KeyState] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[KeyState](
-        "cepWindows", Encoders.product[KeyState], TTLConfig.NONE)
+      state = getHandle.getValueState[KeyState]("cepWindows", enc, TTLConfig.NONE)
 
     private def currentOrNull: KeyState =
       if (state.exists()) state.get() else null
 
-    /** Persist survivors + re-arm the timer, or clear everything. */
-    private def commit(kept: KeyState, oldTimer: Option[Long]): Unit = {
-      oldTimer.foreach(getHandle.deleteTimer)
-      if (kept == null || kept.windows.isEmpty) {
-        state.clear()
-      } else {
-        state.update(kept)
-        getHandle.registerTimer(kept.windows.map(_.ws_ms + kept.w_ms).min)
+    /** Persist survivors, or clear everything; the timer moves only
+      * when the earliest open window end does (`oldEnd` is where it
+      * sits now, None when no timer is armed). */
+    private def commit(kept: KeyState, oldEnd: Option[Long]): Unit = {
+      if (kept.windows.isEmpty) state.clear() else state.update(kept)
+      val newEnd = earliestEnd(kept)
+      if (newEnd != oldEnd) {
+        oldEnd.foreach(getHandle.deleteTimer)
+        newEnd.foreach(getHandle.registerTimer)
       }
-    }
-
-    private def existingTimer: Option[Long] = {
-      val st = currentOrNull
-      if (st == null || st.windows.isEmpty) None
-      else Some(st.windows.map(_.ws_ms + st.w_ms).min)
     }
 
     override def handleInputRows(
         key: (Int, String), rows: Iterator[CepEvent],
         tv: TimerValues): Iterator[CepResult] = {
       val wm = tv.getCurrentWatermarkInMs()
-      val oldTimer = existingTimer
-      val st = foldEvents(currentOrNull, rows, wm, align)
+      val st0 = currentOrNull
+      val st = foldEvents(st0, rows, wm, align)
       if (st == null) return Iterator.empty
       val (out, kept) = fireReady(key, st, wm)
-      commit(kept, oldTimer)
+      commit(kept, earliestEnd(st0))
       out.iterator
     }
 
@@ -286,7 +301,7 @@ object StatefulCep {
         timer: ExpiredTimerInfo): Iterator[CepResult] = {
       val st = currentOrNull
       if (st == null) return Iterator.empty
-      // The expired timer IS the one we registered; no delete needed.
+      // The expired timer IS the one we registered, and it is gone.
       val (out, kept) = fireReady(key, st, tv.getCurrentWatermarkInMs())
       commit(kept, None)
       out.iterator
@@ -305,7 +320,7 @@ object StatefulCep {
     fannedOut
       .as[CepEvent]
       .groupByKey(e => (e.rule_id, e.group_id))
-      .transformWithState(new CepProcessor(align),
+      .transformWithState(new CepProcessor(align, Encoders.product[KeyState]),
         TimeMode.EventTime(), OutputMode.Append())
   }
 }

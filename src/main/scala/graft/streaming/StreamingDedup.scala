@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
@@ -171,15 +171,16 @@ object StreamingDedup {
   /** The bucket store: residents live in a typed [[ListState]]; each
     * bucket keeps ONE event-time timer at its oldest resident's expiry,
     * and the no-expiry input path APPENDS new residents without
-    * rewriting the bucket. */
-  private class DedupProcessor(minEst: Double, cap: Int)
+    * rewriting the bucket. `enc` is derived once on the driver in
+    * [[run]], not in `init` (see the [[StatefulCep]] per-task cost
+    * note). */
+  private class DedupProcessor(minEst: Double, cap: Int, enc: Encoder[SeenDoc])
       extends StatefulProcessor[(Int, Long), BandEvent, NearDupHit] {
 
     @transient private var docs: ListState[SeenDoc] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      docs = getHandle.getListState[SeenDoc]("bucketDocs",
-        Encoders.product[SeenDoc], TTLConfig.NONE)
+      docs = getHandle.getListState[SeenDoc]("bucketDocs", enc, TTLConfig.NONE)
 
     /** Rewrite the bucket (or clear it) and keep exactly one armed
       * timer at the oldest survivor's expiry. */
@@ -246,7 +247,8 @@ object StreamingDedup {
     bandedDocs
       .as[BandEvent]
       .groupByKey(e => (e.band_idx, e.band_hash))
-      .transformWithState(new DedupProcessor(minEstJaccard, maxBucketResidents),
+      .transformWithState(
+        new DedupProcessor(minEstJaccard, maxBucketResidents, Encoders.product[SeenDoc]),
         TimeMode.EventTime(), OutputMode.Append())
   }
 
@@ -326,15 +328,15 @@ object StreamingDedup {
 
   /** The claim lives in a typed ValueState with ONE event-time timer
     * at its expiry, so a quiet micro-batch pays only for expired claims
-    * (the [[DedupProcessor]] rationale). */
-  private class SentenceDedupProcessor
+    * (the [[DedupProcessor]] rationale); `enc` comes from
+    * [[sentenceDedup]] for the same reason. */
+  private class SentenceDedupProcessor(enc: Encoder[SentClaim])
       extends StatefulProcessor[String, SentArrival, SentVerdict] {
 
     @transient private var claim: ValueState[SentClaim] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      claim = getHandle.getValueState[SentClaim]("sentClaim",
-        Encoders.product[SentClaim], TTLConfig.NONE)
+      claim = getHandle.getValueState[SentClaim]("sentClaim", enc, TTLConfig.NONE)
 
     override def handleInputRows(
         key: String, rows: Iterator[SentArrival],
@@ -396,7 +398,7 @@ object StreamingDedup {
     arrivals
       .as[SentArrival]
       .groupByKey(_.sent_hash)
-      .transformWithState(new SentenceDedupProcessor,
+      .transformWithState(new SentenceDedupProcessor(Encoders.product[SentClaim]),
         TimeMode.EventTime(), OutputMode.Append())
   }
 }

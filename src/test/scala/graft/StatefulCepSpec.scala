@@ -63,6 +63,51 @@ class StatefulCepSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("events landing only in already-open windows move no timer (TWS timer counters)") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Ev]
+    val rules = Metrics.rulesToDF(spark, Seq(demoRule))
+    val out = StatefulCep.run(StatefulCep.fanOut(toMetricFrame(mem.toDF()), rules))
+    val q = out.writeStream.format("memory").queryName("stateful_cep_timers")
+      .outputMode("append").start()
+    def timerCounts(afterBatch: Long): (Long, Long, Long) = {
+      // Idle-trigger progress reports carry no state operator.
+      val ps = q.recentProgress
+        .filter(p => p.batchId > afterBatch && p.stateOperators.nonEmpty)
+      def sum(k: String): Long = ps.map { p =>
+        val v = p.stateOperators(0).customMetrics.get(k)
+        assert(v != null, s"no $k in ${p.stateOperators(0).customMetrics}")
+        v.longValue
+      }.sum
+      (ps.map(_.numInputRows).sum, sum("numRegisteredTimers"), sum("numDeletedTimers"))
+    }
+    try {
+      // Batch 1 opens one 2-minute window per group: one timer each.
+      mem.addData(Ev(t0, "business", 9), Ev(t0 + 1000, "work", 1),
+        Ev(t0 + 2000, "business", 2), Ev(t0 + 3000, "work", 5))
+      q.processAllAvailable()
+      val first = q.lastProgress.batchId
+      assert(timerCounts(-1L)._2 == 2L)
+
+      // Batch 2 lands in the same open windows: the earliest end per
+      // key stays where it was, so no timer is deleted or registered.
+      mem.addData(Ev(t0 + 4000, "business", 5), Ev(t0 + 5000, "work", 10))
+      q.processAllAvailable()
+      val (rows, registered, deleted) = timerCounts(first)
+      assert(rows == 2L)
+      assert(registered == 0L && deleted == 0L,
+        s"registered $registered, deleted $deleted timers for an unmoved window end")
+
+      // The timers left in place still fire both windows, batch-2
+      // events included.
+      mem.addData(Ev(t0 + 600000, "business", 1))
+      q.processAllAvailable()
+      val fired = spark.table("stateful_cep_timers")
+        .select("group_id", "result").as[(String, Double)].collect().toMap
+      assert(fired == Map("1_business" -> 16.0, "1_work" -> 16.0))
+    } finally q.stop()
+  }
+
   test("stateful engine agrees with the declarative batch plan on closed windows") {
     parityCheck(demoRule.copy(limitOperatorType = CmpOp.Gt, limit = BigDecimal(-1)),
       "stateful_parity", StatefulCep.run(_))

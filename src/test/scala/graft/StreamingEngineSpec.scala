@@ -471,6 +471,41 @@ class StreamingEngineSpec extends AnyFunSuite {
     }
   }
 
+  test("a rule with zero width or zero slide yields no windows; the one-pass query and the other rules run on") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_degenerate_").toString
+    val srcDir = s"$tmp/in"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$srcDir/a.jsonl"),
+      (demoEvents :+ Ev(t0 + 600000, "business", 1))
+        .map(e => s"""{"eventTime":${e.ms},"t_group":"${e.g}","cpu_usage":${e.cpu}}""")
+        .mkString("\n").getBytes)
+    // RuleBook and DynamicRules.persist take rule rows as given; only
+    // Parsers.parseRules filters non-positive widths and slides.
+    val book = new RuleBook
+    book.applyChanges(Seq(
+      graft.cep.Metrics.toRow(demoRule),
+      graft.cep.Metrics.toRow(demoRule.copy(ruleId = 2, windowMinutes = 0)),
+      graft.cep.Metrics.toRow(demoRule.copy(ruleId = 3,
+        windowType = WindowType.Sliding, windowSlideMinute = 0))))
+    val engine = new StreamingEngine(
+      spark,
+      () => graft.parse.Parsers.parseMetrics(
+        graft.streaming.CepRunner.fileLines(spark, srcDir)),
+      book,
+      StreamingEngine.SinkConfig(
+        format = "parquet", outputMode = "append",
+        checkpointRoot = Some(s"$tmp/ckpt"), pathRoot = Some(s"$tmp/out")))
+    val q = engine.startOnePassDynamic(s"$tmp/rules")
+    try {
+      engine.awaitQuiescence()
+      assert(q.isActive && q.exception.isEmpty)
+      val got = spark.read.parquet(s"$tmp/out/cep_one_pass")
+        .select("rule_id", "group_id", "result").as[(Int, String, Double)]
+        .collect().toSet
+      assert(got == Set((1, "1_business", 16.0), (1, "1_work", 16.0)))
+    } finally engine.shutdown()
+  }
+
   test("one-pass streaming snapshot plan (planAll) runs in update mode") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
