@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.cep.{CepQuery, Metrics}
+import graft.cep.{Alignment, CepQuery, Metrics}
 import graft.model._
 import graft.parse.Parsers
 
@@ -86,7 +86,7 @@ object SparkEntry {
       agg: AggType, op: CmpOp, lim: Double): Rule =
     Rule(id, RuleState.Active, wt, w, s, keys, agg, "value", op, BigDecimal(lim))
 
-  private val cepStaticRules: Map[String, Rule] = Map(
+  private[graft] val cepStaticRules: Map[String, Rule] = Map(
     "cep_sum_tumbling_gt" ->
       rule(1, WindowType.Tumbling, 360, 0, Seq("t_type"), AggType.Sum, CmpOp.Gt, 800.0),
     "cep_avg_tumbling_lt" ->
@@ -195,7 +195,7 @@ object SparkEntry {
   // Thresholds chosen to emit rows at sf0.001 (driver smoke) and sf0.01.
   // ---------------------------------------------------------------------------
 
-  private val flagshipRules: Seq[Rule] = Seq(
+  private[graft] val flagshipRules: Seq[Rule] = Seq(
     Rule(1, RuleState.Active, WindowType.Tumbling, 1440, 0, Seq("t_type"),
       AggType.Sum, "value", CmpOp.Gt, BigDecimal(100.0)),
     Rule(2, RuleState.Active, WindowType.Sliding, 1440, 360, Seq("t_type"),
@@ -239,8 +239,8 @@ object SparkEntry {
   }
 
   private def multiRuleFirstAligned(spark: SparkSession, dir: String): DataFrame =
-    CepQuery.planAllFirstAligned(metricsFrame(spark, dir),
-      Metrics.rulesToDF(spark, flagshipRules))
+    CepQuery.planAll(metricsFrame(spark, dir),
+      Metrics.rulesToDF(spark, flagshipRules), Alignment.FirstEvent)
 
   /** The flagship rule set under the reference's first-event window
     * alignment: tumbling grids anchor at each (rule, group)'s earliest
@@ -890,10 +890,11 @@ object SparkEntry {
       Some(staticRuleOracle(r)))
   } ++ Seq(
     Gate("cep_sum_tumbling_first_aligned", ((s, dir) =>
-        CepQuery.planRuleFirstAligned(metricsFrame(s, dir), firstAlignedRule)),
+        CepQuery.planRule(metricsFrame(s, dir), firstAlignedRule, Alignment.FirstEvent)),
       Some(firstAlignedOracle)),
     Gate("cep_sum_sliding_first_aligned", ((s, dir) =>
-        CepQuery.planRuleFirstAligned(metricsFrame(s, dir), firstAlignedSlidingRule)),
+        CepQuery.planRule(metricsFrame(s, dir), firstAlignedSlidingRule,
+          Alignment.FirstEvent)),
       Some(firstAlignedSlidingOracle)),
     Gate("cep_multi_rule", multiRule,
       Some(multiRuleOracle)),

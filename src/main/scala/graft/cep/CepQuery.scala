@@ -1,6 +1,7 @@
 package graft.cep
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.model._
 
@@ -16,19 +17,27 @@ import graft.model._
   * Expected metrics schema (see [[Metrics.eventsAsMetrics]]):
   * {{{ eventTime TIMESTAMP, tags MAP<STRING,STRING>, metrics MAP<STRING,DOUBLE> }}}
   *
-  * Two compilation modes:
+  * Two compilation modes, each taking an [[Alignment]] (epoch grids
+  * by default, the reference's first-event grids on request):
   *
-  *  - [[planRule]]: one rule → one static plan using built-in
-  *    `window()`/`groupBy`. Best per-query plan (whole-stage codegen,
-  *    static window expansion); use when rules are few and known.
+  *  - [[planRule]]: one rule → one static plan. Epoch-aligned it uses
+  *    the built-in `window()`/`groupBy` (whole-stage codegen, static
+  *    window expansion); use when rules are few and known.
   *  - [[planAll]]: N rules → ONE pass over the metric stream. The rule
   *    set is broadcast (reference: CEPTaskRunner.java:41,
-  *    PartitionEngine.java:26-51), the metric×rule theta-join performs
+  *    PartitionEngine.java:26-51), the metric×rule hash join performs
   *    the reference's 1→N fan-out, windows are computed arithmetically
   *    (width is per-rule *data*, so the built-in `window()` cannot be
   *    used), and agg/comparator dispatch is a `CASE` expression. At
   *    100 TB this is the plan you want: one scan + one shuffle for the
   *    whole rule set, instead of N scans.
+  *
+  * Arithmetic windows (planAll, and planRule under first-event
+  * alignment) come from one native function, `window_starts`, whose
+  * anchor argument is the alignment: 0 for the epoch grid, the
+  * (rule, group)'s earliest event for the reference's grids. The
+  * stateful engine ([[graft.streaming.StatefulCep]]) calls the same
+  * function per event.
   *
   * Scale posture: the only shuffle is the final hash aggregation on
   * (ruleId, groupValues, windowStart) — exactly the reference's
@@ -48,14 +57,25 @@ object CepQuery {
   /** `metrics['field']` as a double column. */
   def measure(field: String): Column = element_at(col("metrics"), field)
 
-  /** The aggregate column for a given agg type over value column `v`
-    * (pre-cast to decimal for SUM/AVG exactness; result is DOUBLE). */
-  def aggColumn(agg: AggType, v: Column): Column = agg match {
-    case AggType.Sum => sum(v.cast(SumDecimal)).cast("double")
-    case AggType.Avg => sum(v.cast(SumDecimal)).cast("double") / count(v)
-    case AggType.Min => min(v)
-    case AggType.Max => max(v)
+  /** A window's partial aggregates — SUM (pre-cast to decimal for
+    * exactness, returned as DOUBLE), COUNT, MIN and MAX. Every
+    * [[AggType]]'s result is a function of them. */
+  private final case class Partials(sumV: Column, cnt: Column,
+      minV: Column, maxV: Column) {
+    def result(agg: AggType): Column = agg match {
+      case AggType.Sum => sumV
+      case AggType.Avg => sumV / cnt
+      case AggType.Min => minV
+      case AggType.Max => maxV
+    }
   }
+
+  private def partials(v: Column): Partials =
+    Partials(sum(v.cast(SumDecimal)).cast("double"), count(v), min(v), max(v))
+
+  /** The aggregate column for a given agg type over value column `v`
+    * (result is DOUBLE). */
+  def aggColumn(agg: AggType, v: Column): Column = partials(v).result(agg)
 
   /** HAVING comparison (reference: Rule.java:39-56). */
   def cmpColumn(op: CmpOp, result: Column, limit: Column): Column = op match {
@@ -67,13 +87,29 @@ object CepQuery {
     case CmpOp.Le => result <= limit
   }
 
+  /** CASE over every value of an enum: rows whose `key` equals
+    * `label(e)` get `f(e)`; any other key gets `f(fallback)`. */
+  private def dispatch[E](all: Seq[E], key: Column, label: E => String,
+      fallback: E)(f: E => Column): Column = {
+    val cases = all.filterNot(_ == fallback)
+    cases.tail.foldLeft(when(key === label(cases.head), f(cases.head))) {
+      (c, e) => c.when(key === label(e), f(e))
+    }.otherwise(f(fallback))
+  }
+
   /** One rule → one static DataFrame plan (SURVEY §2.2 template).
     *
     * Output: one column per grouping key (named after the key), plus
-    * `window_start`/`window_end` (absent for global windows), plus
-    * `result` (DOUBLE).
+    * `result` (DOUBLE), plus `window_start`/`window_end` (absent for
+    * global windows). `align` picks the window grid (see
+    * [[Alignment]]); global windows ignore it. Epoch grids use Spark's
+    * built-in `window()`; first-event grids assign windows
+    * arithmetically, like [[planAll]] (a per-group `min(eventTime)`
+    * window function whose partitioning the aggregation reuses, so the
+    * plan still shuffles once).
     */
-  def planRule(metricFrame: DataFrame, rule: Rule): DataFrame = {
+  def planRule(metricFrame: DataFrame, rule: Rule,
+      align: Alignment = Alignment.Epoch): DataFrame = {
     // A non-ACTIVE rule matches nothing (Rule.java:63-66); resolve that
     // statically rather than emitting a constant predicate.
     val stateOk = rule.ruleState == RuleState.Active
@@ -84,98 +120,46 @@ object CepQuery {
     val keyCols = rule.groupingKeyNames.map(k => element_at(col("tags"), k).as(k))
     val v = measure(rule.aggregateFieldName)
     val agg = aggColumn(rule.aggregatorFunctionType, v).as("result")
+    val width = s"${rule.windowMinutes} minutes"
 
-    val grouped = rule.windowType match {
-      case WindowType.Tumbling =>
-        matched
-          .groupBy(keyCols :+ window(col("eventTime"), s"${rule.windowMinutes} minutes"): _*)
-          .agg(agg)
-      case WindowType.Sliding =>
-        matched
-          .groupBy(keyCols :+ window(col("eventTime"),
-            s"${rule.windowMinutes} minutes", s"${rule.windowSlideMinute} minutes"): _*)
-          .agg(agg)
-      case WindowType.Global =>
+    def builtin(window: Column): DataFrame =
+      matched.groupBy(keyCols :+ window: _*).agg(agg)
+        .withColumn("window_start", col("window.start"))
+        .withColumn("window_end", col("window.end"))
+        .drop("window")
+
+    val grouped = (rule.windowType, align) match {
+      case (WindowType.Global, _) =>
         matched.groupBy(keyCols: _*).agg(agg)
+      case (WindowType.Tumbling, Alignment.Epoch) =>
+        builtin(window(col("eventTime"), width))
+      case (_, Alignment.Epoch) =>
+        builtin(window(col("eventTime"), width,
+          s"${rule.windowSlideMinute} minutes"))
+      case (_, Alignment.FirstEvent) =>
+        val keys = rule.groupingKeyNames.map(col)
+        val prepared = matched
+          .select(keyCols ++ Seq(
+            lit(rule.windowType.name).as("window_type"),
+            unix_millis(col("eventTime")).as("ev_ms"),
+            lit(rule.windowMillis).as("w_ms"),
+            lit(rule.slideMillis).as("s_ms"),
+            v.as("v")): _*)
+          .filter(col("v").isNotNull)
+        assignWindows(prepared, align, keys)
+          .groupBy(keys :+ col("ws_ms"): _*)
+          .agg(aggColumn(rule.aggregatorFunctionType, col("v")).as("result"))
+          .withColumn("window_start", timestamp_millis(col("ws_ms")))
+          .withColumn("window_end", timestamp_millis(col("ws_ms") + rule.windowMillis))
+          .drop("ws_ms")
     }
-    val flat = rule.windowType match {
-      case WindowType.Global => grouped
-      case _ =>
-        grouped
-          .withColumn("window_start", col("window.start"))
-          .withColumn("window_end", col("window.end"))
-          .drop("window")
-    }
-    flat.filter(cmpColumn(rule.limitOperatorType, col("result"),
+    grouped.filter(cmpColumn(rule.limitOperatorType, col("result"),
       lit(rule.limit.underlying)))
   }
 
-  /** One rule → first-event-aligned windows — the reference's exact
-    * alignment, where [[planRule]] uses Spark's epoch-aligned
-    * `window()` (declared deviation, SURVEY §7.4 #3):
-    *
-    *  - tumbling (TumblingWindowAssigner.java:22-46): windows start at
-    *    the group's earliest event time and tile forward in W steps;
-    *  - sliding (SlidingWindowAssigner.java:26-55): the slide grid is
-    *    anchored at `firstEvent − W` (the assigner's initial
-    *    `doCreateWindowList(t0 − W, t0, W, S)`) and extends forward in
-    *    S steps; an event belongs to every grid window covering it.
-    *    Grid windows holding no events emit nothing here — the
-    *    reference would fire them as empty aggregates, one of its
-    *    catalogued defects (SURVEY §2.4), deliberately not replicated.
-    *
-    * Declarative two-phase plan: per-group `min(eventTime)` via a
-    * window function, then arithmetic bucketing (relative to the
-    * anchor, sliding coverage is the same ceil(W/S)-then-filter
-    * arithmetic as [[planAll]]) — so it stays oracle-testable and
-    * codegen'd. Costs one extra shuffle (the partition-by for the
-    * running min) over the epoch-aligned plan; both shuffles hash on
-    * the same grouping keys, so at scale the second is a cheap re-use
-    * of an already co-located layout. */
-  def planRuleFirstAligned(metricFrame: DataFrame, rule: Rule): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(rule.windowType == WindowType.Tumbling ||
-      rule.windowType == WindowType.Sliding,
-      "first-event alignment applies to tumbling/sliding windows")
-    val stateOk = rule.ruleState == RuleState.Active
-    val matched = metricFrame.filter(
-      lit(stateOk) &&
-        forall(array(rule.groupingKeyNames.map(lit): _*),
-          k => map_contains_key(col("tags"), k)))
-    val keyCols = rule.groupingKeyNames.map(k => element_at(col("tags"), k).as(k))
-    val keyNames = rule.groupingKeyNames.map(col)
-    val w = rule.windowMillis
-    val withT0 = matched
-      .select(keyCols :+ unix_millis(col("eventTime")).as("ev_ms")
-        :+ measure(rule.aggregateFieldName).as("v"): _*)
-      .withColumn("t0", min(col("ev_ms")).over(Window.partitionBy(keyNames: _*)))
-    val prepared = rule.windowType match {
-      case WindowType.Tumbling =>
-        withT0.withColumn("ws_ms",
-          col("t0") + floor((col("ev_ms") - col("t0")) / w) * w)
-      case _ =>
-        val s = rule.slideMillis
-        val n = (w + s - 1) / s // ceil(w/s) candidate starts
-        withT0
-          .withColumn("anchor", col("t0") - w)
-          .withColumn("ws_ms", explode(filter(
-            transform(sequence(lit(0L), lit(n - 1)),
-              i => col("anchor") +
-                (floor((col("ev_ms") - col("anchor")) / s) - i) * s),
-            ws => ws > col("ev_ms") - w)))
-    }
-    prepared
-      .groupBy(keyNames :+ col("ws_ms"): _*)
-      .agg(aggColumn(rule.aggregatorFunctionType, col("v")).as("result"))
-      .withColumn("window_start", timestamp_millis(col("ws_ms")))
-      .withColumn("window_end", timestamp_millis(col("ws_ms") + w))
-      .drop("ws_ms")
-      .filter(cmpColumn(rule.limitOperatorType, col("result"),
-        lit(rule.limit.underlying)))
-  }
-
-  /** N rules → ONE pass: broadcast theta-join fan-out + arithmetic
-    * windows + CASE-dispatched agg and comparator.
+  /** N rules → ONE pass: broadcast hash-join fan-out + arithmetic
+    * windows on the `align`ed grid + CASE-dispatched agg and
+    * comparator.
     *
     * `ruleFrame` must have [[Metrics.RuleRowSchema]] columns (see
     * [[Rules.toDF]]). Output:
@@ -183,70 +167,56 @@ object CepQuery {
     *     window_end TIMESTAMP, result DOUBLE }}}
     * Global windows emit NULL window bounds. `group_id` is the
     * reference's `ruleId_tagVal1_tagVal2…` (PartitionEngine.java:72-81).
+    * Under [[Alignment.FirstEvent]] each (rule, group) derives its grid
+    * origin from its earliest event; the window function computing it
+    * hash-partitions on (rule, group), which the final aggregation
+    * reuses, so the plan still shuffles exactly once. That spelling is
+    * batch-only (streams forbid plain window functions): on streams,
+    * first-event alignment is [[graft.streaming.StatefulCep.run]]'s
+    * argument.
     */
-  def planAll(metricFrame: DataFrame, ruleFrame: DataFrame): DataFrame = {
-    val prepared = prepareFanned(fanOutJoin(metricFrame, ruleFrame))
+  def planAll(metricFrame: DataFrame, ruleFrame: DataFrame,
+      align: Alignment = Alignment.Epoch): DataFrame =
+    aggregateAndEmit(assignWindows(
+      prepareFanned(fanOutJoin(metricFrame, ruleFrame)), align,
+      Seq(col("rule_id"), col("group_vals"))))
 
-    // Window assignment, arithmetically (width/slide are per-rule
-    // data): one native call per fanned-out row computes the covering
-    // starts (ceil(w/s) candidates for sliding with non-covering
-    // starts dropped — exact non-divisible semantics; single aligned
-    // start for tumbling; a null start for global's unbounded bucket).
-    // The CASE-over-HOFs spelling this replaces was evaluated
-    // interpreted per row and dominated the one-pass plan's runtime.
-    // Epoch-aligned (SURVEY §7.4); see [[planAllFirstAligned]] for the
-    // reference's first-event grids.
-    val windowed = prepared.withColumn("ws_ms",
-      graft.functions.window_starts(col("window_type"), col("ev_ms"),
-        col("w_ms"), col("s_ms")))
+  /** Window assignment, arithmetically (width/slide are per-row data):
+    * one native call per row computes the starts covering `ev_ms`
+    * (ceil(w/s) candidates for sliding with non-covering starts dropped
+    * — exact non-divisible semantics; single aligned start for
+    * tumbling; a null start for global's unbounded bucket), and each
+    * row explodes into one row per start (`ws_ms`). Needs the columns
+    * `window_type`, `ev_ms`, `w_ms`, `s_ms`. The grid's anchor is the
+    * literal 0 under [[Alignment.Epoch]]; under
+    * [[Alignment.FirstEvent]] it is derived from the earliest `ev_ms`
+    * of each `group` (tumbling at t0, sliding at t0 − w; global rows
+    * get a null anchor, which nulls the array, and explode_outer emits
+    * exactly the one null-window row global needs). */
+  private def assignWindows(prepared: DataFrame, align: Alignment,
+      group: Seq[Column]): DataFrame = {
+    val (anchored, anchor) = align match {
+      case Alignment.Epoch => (prepared, lit(0L))
+      case Alignment.FirstEvent =>
+        val t0 = min(col("ev_ms")).over(Window.partitionBy(group: _*))
+        (prepared.withColumn("_anchor",
+          when(col("window_type") === WindowType.Sliding.name, t0 - col("w_ms"))
+            .when(col("window_type") === WindowType.Tumbling.name, t0)),
+          col("_anchor"))
+    }
+    anchored.withColumn("ws_ms", explode_outer(
+        graft.functions.window_starts(col("window_type"), col("ev_ms"),
+          col("w_ms"), col("s_ms"), anchor)))
       // explode_outer, deliberately: plain explode makes the optimizer
       // infer a `size(ws_ms) > 0` filter and push the whole window-array
-      // CASE expression into the broadcast join condition, evaluating it
-      // twice per (metric, rule) pair. For w ≥ s every branch yields
-      // ≥ 1 element so outer semantics are identical; the filter below
-      // drops the null row a degenerate w < s sliding rule would emit
-      // (an event covered by no window must contribute to no window).
-      .withColumn("ws_ms", explode_outer(col("ws_ms")))
-      .filter(col("window_type") =!= WindowType.Sliding.name ||
-        col("ws_ms").isNotNull)
-
-    aggregateAndEmit(windowed)
-  }
-
-  /** [[planAll]] with the reference's first-event window alignment
-    * (see [[planRuleFirstAligned]]): each (rule, group) derives its
-    * grid origin from its earliest event — tumbling anchors at t0,
-    * sliding at t0 − w; global is unchanged. One window function
-    * computes the per-(rule, group) min, and its hash partitioning is
-    * reused by the final aggregation (a subset of the grouping keys),
-    * so the plan still shuffles exactly once.
-    *
-    * Batch path (streaming forbids plain window functions): on streams,
-    * first-event alignment lives in the stateful engine —
-    * [[graft.streaming.StatefulCep]] with `Alignment.FirstEvent`,
-    * whose per-key anchor is the same grid. */
-  def planAllFirstAligned(metricFrame: DataFrame, ruleFrame: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val prepared = prepareFanned(fanOutJoin(metricFrame, ruleFrame))
-      .withColumn("t0", min(col("ev_ms")).over(
-        Window.partitionBy(col("rule_id"), col("group_vals"))))
-      .withColumn("anchor",
-        when(col("window_type") === WindowType.Sliding.name,
-          col("t0") - col("w_ms"))
-        .when(col("window_type") === WindowType.Tumbling.name, col("t0")))
-    // Anchored grids are translated epoch grids (WindowLaws property):
-    // shift the event into anchor space, assign, shift back. Global
-    // rows have a null anchor, which nulls the array and explode_outer
-    // emits exactly the one null-window row global needs.
-    val windowed = prepared
-      .withColumn("ws_ms", explode_outer(transform(
-        graft.functions.window_starts(col("window_type"),
-          col("ev_ms") - col("anchor"), col("w_ms"), col("s_ms")),
-        ws => ws + col("anchor"))))
-      .filter(col("window_type") =!= WindowType.Sliding.name ||
-        col("ws_ms").isNotNull)
-      .drop("t0", "anchor")
-    aggregateAndEmit(windowed)
+      // expression into the broadcast join condition, evaluating it
+      // twice per (metric, rule) pair. The filter below keeps the null
+      // row only for global rules: a tumbling or sliding rule that
+      // covers the event with no window (w < s sliding, a non-positive
+      // width or slide) must contribute to no window.
+      .filter(col("ws_ms").isNotNull || !col("window_type").isin(
+        WindowType.Tumbling.name, WindowType.Sliding.name))
+      .drop("_anchor")
   }
 
   /** Pivot-key sentinel for rules with no grouping keys (they match
@@ -286,8 +256,8 @@ object CepQuery {
     * + sentinel per metric) and the old nested-loop join's R predicate
     * evaluations. The tag-key array is materialized per METRIC before
     * the join: inlining map_keys(tags) into the join input would
-    * re-extract it per exploded row. Shared with the stateful engines'
-    * fan-out ([[graft.streaming.StatefulCep.fanOut]]). */
+    * re-extract it per exploded row. Shared with the stateful engine's
+    * static fan-out ([[graft.streaming.StatefulCep.fanOut]]). */
   private[graft] def fanOutJoin(metricFrame: DataFrame, ruleFrame: DataFrame): DataFrame = {
     val rules = withRarestKeyPivot(
       ruleFrame.filter(col("rule_state") === RuleState.Active.name))
@@ -336,7 +306,14 @@ object CepQuery {
     activeRules.withColumn("_pivot", best.getField("k"))
   }
 
-  private def prepareFanned(joined: DataFrame): DataFrame =
+  /** planAll step 3 — the per-(metric, rule) columns every CEP plan
+    * reads: rule parameters, window width/slide in ms, the group's tag
+    * values, event time and the measure `v`. A metric lacking the
+    * rule's measure is no event of that rule and is dropped here:
+    * aggregates ignore a null anyway, and the stateful engine's
+    * [[graft.streaming.StatefulCep.CepEvent]] has no null measure. Also
+    * the projection of [[graft.streaming.StatefulCep.fanOut]]. */
+  private[graft] def prepareFanned(joined: DataFrame): DataFrame =
     joined
       .select(
         col("rule_id"),
@@ -346,41 +323,43 @@ object CepQuery {
         (col("window_slide_minute").cast("long") * 60000L).as("s_ms"),
         graft.functions.map_values_for_keys(col("tags"), col("grouping_key_names"))
           .as("group_vals"),
+        col("eventTime"),
         unix_millis(col("eventTime")).as("ev_ms"),
         element_at(col("metrics"), col("agg_field")).as("v"))
+      .filter(col("v").isNotNull)
+
+  /** The reference's groupId, `ruleId_tagVal1_tagVal2…`
+    * (PartitionEngine.java:72-81), over [[prepareFanned]]'s columns. */
+  private[graft] val groupId: Column =
+    concat_ws("_", col("rule_id").cast("string"), col("group_vals"))
 
   /** planAll steps 4-5 — the single hash-aggregation shuffle keyed
     * like the reference's keyBy(groupId) (rule attributes ride along,
-    * constant per rule_id), then CASE-dispatched aggregate + HAVING
-    * comparator (both are data) and the output projection. */
+    * constant per rule_id), then the aggregate and the HAVING
+    * comparator, both data, as CASEs over every [[AggType]] and
+    * [[CmpOp]] built from `Partials.result` and [[cmpColumn]] (the per-rule
+    * plan's own spellings; an unknown agg type falls back to MAX, an
+    * unknown comparator to `!=`), and the output projection. */
   private def aggregateAndEmit(windowed: DataFrame): DataFrame = {
+    val p = partials(col("v"))
     val agged = windowed
       .groupBy(col("rule_id"), col("group_vals"), col("ws_ms"),
         col("agg_type"), col("cmp_op"), col("limit"), col("w_ms"))
-      .agg(
-        sum(col("v").cast(SumDecimal)).cast("double").as("sum_v"),
-        count(col("v")).as("cnt_v"),
-        min(col("v")).as("min_v"),
-        max(col("v")).as("max_v"))
+      .agg(p.sumV.as("sum_v"), p.cnt.as("cnt_v"), p.minV.as("min_v"),
+        p.maxV.as("max_v"))
 
-    val result = agged.withColumn("result",
-      when(col("agg_type") === AggType.Sum.name, col("sum_v"))
-        .when(col("agg_type") === AggType.Avg.name, col("sum_v") / col("cnt_v"))
-        .when(col("agg_type") === AggType.Min.name, col("min_v"))
-        .otherwise(col("max_v")))
+    val perWindow = Partials(col("sum_v"), col("cnt_v"), col("min_v"), col("max_v"))
+    val withResult = agged.withColumn("result",
+      dispatch(AggType.all, col("agg_type"), (a: AggType) => a.name,
+        AggType.Max)(perWindow.result))
 
-    val kept = result.filter(
-      when(col("cmp_op") === CmpOp.Gt.symbol, col("result") > col("limit"))
-        .when(col("cmp_op") === CmpOp.Lt.symbol, col("result") < col("limit"))
-        .when(col("cmp_op") === CmpOp.Ge.symbol, col("result") >= col("limit"))
-        .when(col("cmp_op") === CmpOp.Le.symbol, col("result") <= col("limit"))
-        .when(col("cmp_op") === CmpOp.Eq.symbol, col("result") === col("limit"))
-        .otherwise(col("result") =!= col("limit")))
+    val kept = withResult.filter(
+      dispatch(CmpOp.all, col("cmp_op"), (o: CmpOp) => o.symbol, CmpOp.Ne)(
+        cmpColumn(_, col("result"), col("limit"))))
 
     kept.select(
       col("rule_id"),
-      concat_ws("_", col("rule_id").cast("string"), col("group_vals"))
-        .as("group_id"),
+      groupId.as("group_id"),
       timestamp_millis(col("ws_ms")).as("window_start"),
       timestamp_millis(col("ws_ms") + col("w_ms")).as("window_end"),
       col("result"))

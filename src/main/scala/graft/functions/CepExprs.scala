@@ -3,7 +3,7 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, QuaternaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, QuinaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -42,39 +42,44 @@ case class ArrayContainsAll(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Epoch-aligned window starts covering an event — the arithmetic twin
-  * of the reference's window assigners, as ONE native call:
-  * tumbling → the single width-aligned start; sliding → every
-  * slide-aligned start whose half-open window covers the event
+/** Window starts covering an event on the grid with origin `anchor` —
+  * the arithmetic twin of the reference's window assigners, as ONE
+  * native call: tumbling → the single width-aligned start; sliding →
+  * every slide-aligned start whose half-open window covers the event
   * (ceil(w/s) candidates, the non-covering ones dropped — exact
   * non-divisible semantics); anything else (global) → a single null
-  * start (the unbounded bucket marker).
+  * start (the unbounded bucket marker). Anchor 0 is the epoch grid;
+  * any other anchor is that grid translated (alignment is a pure
+  * translation, a WindowLaws property).
   *
+  * The one window-assignment arithmetic of the engine: both batch
+  * plans call it through this expression, and the stateful engine's
+  * per-event fold calls its static core [[CepExprImpl.starts]].
   * Replaces a CASE over sequence/transform/filter higher-order
   * functions that Catalyst evaluated interpreted per fanned-out
-  * (metric, rule) row. Mirrors StatefulCep.windowStarts bit for bit —
-  * the stateful engine's law specs double-cover this arithmetic. */
-case class WindowStartsExpr(
-    first: Expression, second: Expression, third: Expression, fourth: Expression)
-    extends QuaternaryExpression with ExpectsInputTypes {
+  * (metric, rule) row. */
+case class WindowStartsExpr(children: Seq[Expression])
+    extends QuinaryExpression with ExpectsInputTypes {
+
+  require(children.size == 5, "window_starts(type, ev_ms, w, s, anchor)")
 
   override def inputTypes: Seq[AbstractDataType] =
-    Seq(StringType, LongType, LongType, LongType)
+    Seq(StringType, LongType, LongType, LongType, LongType)
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "window_starts"
 
-  override protected def nullSafeEval(wt: Any, ev: Any, w: Any, s: Any): Any =
-    CepExprImpl.windowStarts(wt.asInstanceOf[UTF8String],
-      ev.asInstanceOf[Long], w.asInstanceOf[Long], s.asInstanceOf[Long])
+  override def nullSafeEval(wt: Any, ev: Any, w: Any, s: Any, anchor: Any): Any =
+    CepExprImpl.windowStarts(wt.asInstanceOf[UTF8String], ev.asInstanceOf[Long],
+      w.asInstanceOf[Long], s.asInstanceOf[Long], anchor.asInstanceOf[Long])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (wt, evMs, w, s) =>
-      s"org.apache.spark.sql.graft.CepExprImpl.windowStarts($wt, $evMs, $w, $s)")
+    defineCodeGen(ctx, ev, (wt, evMs, w, s, anchor) =>
+      s"org.apache.spark.sql.graft.CepExprImpl.windowStarts($wt, $evMs, $w, $s, $anchor)")
 
   override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression, q: Expression): WindowStartsExpr =
-    copy(first = f, second = s, third = t, fourth = q)
+      newChildren: IndexedSeq[Expression]): WindowStartsExpr =
+    copy(children = newChildren)
 }
 
 /** The map's values for each key in `keys`, in key order (null where
@@ -149,30 +154,39 @@ object CepExprImpl {
     true
   }
 
-  private val NoStarts = new GenericArrayData(Array.emptyLongArray)
+  private val NoStarts = Array.emptyLongArray
 
-  /** See [[WindowStartsExpr]]. Static for codegen. Non-positive w/s on
-    * a windowed type yields NO covering windows (empty array) rather
-    * than an ArithmeticException inside generated code — matching the
-    * degraded no-rows behavior of the old declarative spelling for
-    * rule frames built directly, bypassing Parsers.parseRules'
-    * positivity filter. */
-  def windowStarts(wt: UTF8String, ev: Long, w: Long, s: Long): GenericArrayData = {
+  /** The window-start arithmetic ([[WindowStartsExpr]]): starts covering
+    * `ev` on the grid with origin `anchor`, latest first; null for a
+    * global (unbounded) window. A non-positive w (or s, sliding) yields
+    * NO covering windows rather than an ArithmeticException: a rule
+    * frame built directly, or published through `RuleBook` and
+    * `DynamicRules.persist`, skips `Parsers.parseRules`' positivity
+    * filter, and such a rule must not fail the plan or the streaming
+    * query that serves every other rule. */
+  def starts(wt: UTF8String, ev: Long, w: Long, s: Long, anchor: Long): Array[Long] =
     if (wt.equals(Tumbling)) {
-      if (w <= 0) return NoStarts
-      new GenericArrayData(Array(Math.floorDiv(ev, w) * w))
+      if (w <= 0) NoStarts
+      else Array(anchor + Math.floorDiv(ev - anchor, w) * w)
     } else if (wt.equals(Sliding)) {
-      if (w <= 0 || s <= 0) return NoStarts
-      val n = ((w + s - 1) / s).toInt // ceil(w/s) candidate starts
-      val top = Math.floorDiv(ev, s) * s
-      val out = new Array[Long](n)
-      var k = 0
-      var st = top
-      while (k < n && st > ev - w) { out(k) = st; st -= s; k += 1 }
-      new GenericArrayData(java.util.Arrays.copyOf(out, k))
-    } else {
-      new GenericArrayData(Array[Any](null)) // global: unbounded bucket
-    }
+      if (w <= 0 || s <= 0) NoStarts
+      else {
+        val n = ((w + s - 1) / s).toInt // ceil(w/s) candidate starts
+        val out = new Array[Long](n)
+        var k = 0
+        var st = anchor + Math.floorDiv(ev - anchor, s) * s
+        while (k < n && st > ev - w) { out(k) = st; st -= s; k += 1 }
+        java.util.Arrays.copyOf(out, k)
+      }
+    } else null
+
+  /** [[starts]] as the expression's array; global → one null start.
+    * Static for codegen. */
+  def windowStarts(wt: UTF8String, ev: Long, w: Long, s: Long,
+      anchor: Long): GenericArrayData = {
+    val a = starts(wt, ev, w, s, anchor)
+    if (a == null) new GenericArrayData(Array[Any](null))
+    else new GenericArrayData(a)
   }
 }
 
@@ -181,10 +195,10 @@ object CepExprColumns {
     ExpressionUtils.column(ArrayContainsAll(
       ExpressionUtils.expression(haystack), ExpressionUtils.expression(needles)))
 
-  def windowStarts(windowType: Column, evMs: Column, wMs: Column, sMs: Column): Column =
+  def windowStarts(windowType: Column, evMs: Column, wMs: Column, sMs: Column,
+      anchor: Column): Column =
     ExpressionUtils.column(WindowStartsExpr(
-      ExpressionUtils.expression(windowType), ExpressionUtils.expression(evMs),
-      ExpressionUtils.expression(wMs), ExpressionUtils.expression(sMs)))
+      Seq(windowType, evMs, wMs, sMs, anchor).map(ExpressionUtils.expression)))
 
   def mapValuesForKeys(m: Column, keys: Column): Column =
     ExpressionUtils.column(MapValuesForKeys(

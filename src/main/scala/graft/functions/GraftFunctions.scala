@@ -60,7 +60,7 @@ object GraftFunctions {
     },
     "window_starts" -> { args =>
       expectArgs("window_starts", args, 4)
-      WindowStartsExpr(args(0), args(1), args(2), args(3))
+      WindowStartsExpr(args :+ Literal(0L)) // the epoch grid
     },
     "metric_route" -> { args =>
       expectArgs("metric_route", args, 1); MetricRoute(args(0))

@@ -223,10 +223,12 @@ package object functions {
   def array_contains_all(haystack: Column, needles: Column): Column =
     CepExprColumns.arrayContainsAll(haystack, needles)
 
-  /** Epoch-aligned covering window starts (codegen'd) — see
+  /** Covering window starts on the grid with origin `anchor` (0 = the
+    * epoch grid; codegen'd) — see
     * [[org.apache.spark.sql.graft.WindowStartsExpr]]. */
-  def window_starts(windowType: Column, evMs: Column, wMs: Column, sMs: Column): Column =
-    CepExprColumns.windowStarts(windowType, evMs, wMs, sMs)
+  def window_starts(windowType: Column, evMs: Column, wMs: Column, sMs: Column,
+      anchor: Column): Column =
+    CepExprColumns.windowStarts(windowType, evMs, wMs, sMs, anchor)
 
   /** Map values for an array of keys, in key order (codegen'd) — see
     * [[org.apache.spark.sql.graft.MapValuesForKeys]]. */

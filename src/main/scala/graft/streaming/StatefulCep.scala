@@ -1,8 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CepExprImpl
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.unsafe.types.UTF8String
+import graft.cep.{Alignment, CepQuery}
+import graft.model.WindowType
 
 /** Per-event, per-(rule,group) stateful window engine on Spark 4's
   * `transformWithState` — the faithful rebuild of the reference's
@@ -26,6 +29,15 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulPro
   *  - **global windows never emit** here, exactly like the reference
   *    (its AllWindow trigger can never fire, SURVEY §2.4 #5) — use the
   *    declarative path in update mode for correct global results.
+  *
+  * The window arithmetic is the declarative plans' own: each event's
+  * covering starts come from `CepExprImpl.starts`, the core of the
+  * `window_starts` expression that [[graft.cep.CepQuery]] calls, on
+  * the key's grid (anchor 0, or the first event's grid under
+  * [[graft.cep.Alignment.FirstEvent]]). Result and HAVING at fire time
+  * ([[result]], [[passes]]) are a Scala fold over the state, pinned
+  * to the batch plan for every agg type × comparator by
+  * StatefulCepSpec.
   *
   * State per key is bounded: one (sum, count, min, max) quadruple per
   * OPEN window — never the raw events (AVG divides sum by count, so no
@@ -81,20 +93,6 @@ object StatefulCep {
   final case class WindowAgg(
       ws_ms: Long, sum: BigDecimal, cnt: Long, mn: Double, mx: Double)
 
-  /** Window-grid alignment of the stateful engine. [[Epoch]] matches
-    * the declarative [[graft.cep.CepQuery.planAll]]/planRule plans;
-    * [[FirstEvent]] matches the reference assigners — tumbling windows
-    * tile from the group's first event, the sliding grid anchors at
-    * `firstEvent − w` (SlidingWindowAssigner.java:26-33), mirroring
-    * [[graft.cep.CepQuery.planRuleFirstAligned]]. In a stream, "first"
-    * is the first event PROCESSED for the key; an even-earlier late
-    * event lands on the same grid extended backward (the reference's
-    * backward extension has a negative-modulo bug there — declared
-    * deviation, SURVEY §2.4). */
-  sealed trait Alignment
-  case object Epoch extends Alignment
-  case object FirstEvent extends Alignment
-
   /** Open windows of one (rule, group) key, plus the rule's constant
     * parameters (needed on timeout invocations, which carry no
     * events). `closedBelow` is the eviction frontier: windows ending
@@ -118,34 +116,11 @@ object StatefulCep {
       rule_id: Int, group_id: String, window_start: Long, window_end: Long,
       result: Double)
 
-  /** Window starts covering `ev_ms` on the grid with origin `anchor`
-    * (0 = epoch alignment — the same arithmetic as the reference's
-    * assigners, see [[Alignment]]). A non-positive width or slide
-    * yields no windows, as in the native
-    * [[graft.functions.CepExprs.windowStarts]]: such a rule can reach
-    * the engine through [[RuleBook]] and [[DynamicRules.persist]],
-    * which skip `Parsers.parseRules`' positivity filter, and it must
-    * not fail the query that serves every other rule. */
-  private[graft] def windowStarts(e: CepEvent, anchor: Long = 0L): Seq[Long] =
-    e.window_type match {
-      case "tumbling" if e.w_ms > 0 =>
-        Seq(anchor + Math.floorDiv(e.ev_ms - anchor, e.w_ms) * e.w_ms)
-      case "sliding" if e.w_ms > 0 && e.s_ms > 0 =>
-        // ceil(w/s) candidate starts, then drop those whose window ends
-        // at or before the event: when s does not divide w, events near a
-        // slide boundary are covered by floor(w/s) windows, others by
-        // floor(w/s)+1 — a fixed floor(w/s) count silently loses rows.
-        val n = ((e.w_ms + e.s_ms - 1) / e.s_ms).toInt
-        val top = anchor + Math.floorDiv(e.ev_ms - anchor, e.s_ms) * e.s_ms
-        (0 until n).map(i => top - i.toLong * e.s_ms).filter(_ > e.ev_ms - e.w_ms)
-      case _ => Seq.empty // global (never fires, see Scaladoc) or degenerate
-    }
-
   /** Grid origin a new key adopts for its first event. */
   private def anchorFor(align: Alignment, e: CepEvent): Long = align match {
-    case Epoch => 0L
-    case FirstEvent =>
-      if (e.window_type == "sliding") e.ev_ms - e.w_ms else e.ev_ms
+    case Alignment.Epoch => 0L
+    case Alignment.FirstEvent =>
+      if (e.window_type == WindowType.Sliding.name) e.ev_ms - e.w_ms else e.ev_ms
   }
 
   /** `v` rounded the way CepQuery.SumDecimal's cast rounds (HALF_UP to
@@ -182,7 +157,7 @@ object StatefulCep {
     * with window assignment after a rule's width changes. Returns null
     * when no state existed and no event survived. */
   private[graft] def foldEvents(st0: KeyState, events: Iterator[CepEvent],
-      wm: Long, align: Alignment = Epoch): KeyState = {
+      wm: Long, align: Alignment = Alignment.Epoch): KeyState = {
     var st = st0
     events.foreach { e =>
       st =
@@ -192,7 +167,10 @@ object StatefulCep {
         else
           st.copy(w_ms = e.w_ms, agg_type = e.agg_type,
             cmp_op = e.cmp_op, limit = e.limit)
-      windowStarts(e, st.anchor).foreach { ws =>
+      // Global rules get no starts: they never fire here (see above).
+      val starts = CepExprImpl.starts(UTF8String.fromString(e.window_type),
+        e.ev_ms, e.w_ms, e.s_ms, st.anchor)
+      if (starts != null) starts.foreach { ws =>
         val we = ws + e.w_ms
         if (we > st.closedBelow && we > wm) {
           val updated = st.windows.find(_.ws_ms == ws) match {
@@ -226,29 +204,20 @@ object StatefulCep {
   }
 
   /** Metric frame × rule frame → fanned-out [[CepEvent]] columns: the
-    * broadcast rule-match join (CepQuery.planAll steps 1-2 — the
-    * hash-joinable pivot-key fan-out, shared via CepQuery.fanOutJoin),
-    * with the rule set frozen at plan time. Streams whose rules change
-    * at runtime fan out through [[DynamicRules.fanOut]], which specs
-    * pin to this one. The watermark is applied on the retained
-    * `eventTime` column AFTER the projection, so the event-time timers
-    * find the watermarked attribute in the stateful operator's
-    * input. */
+    * broadcast rule-match join and per-(metric, rule) projection of
+    * [[graft.cep.CepQuery.planAll]] (steps 1-3, so a metric lacking
+    * the rule's measure fans out to nothing here either), plus
+    * `group_id`, with the rule set frozen at plan time. Streams whose
+    * rules change at runtime fan out through [[DynamicRules.fanOut]],
+    * which specs pin to this one. The watermark is applied on the
+    * retained `eventTime` column AFTER the projection, so the
+    * event-time timers find the watermarked attribute in the stateful
+    * operator's input. */
   def fanOut(metricFrame: DataFrame, ruleFrame: DataFrame,
       watermarkDelay: String = "0 seconds"): DataFrame =
-    graft.cep.CepQuery.fanOutJoin(metricFrame, ruleFrame)
-      .select(
-        col("rule_id"),
-        concat_ws("_", col("rule_id").cast("string"),
-          graft.functions.map_values_for_keys(col("tags"), col("grouping_key_names")))
-          .as("group_id"),
-        col("eventTime"),
-        unix_millis(col("eventTime")).as("ev_ms"),
-        element_at(col("metrics"), col("agg_field")).as("v"),
-        col("window_type"),
-        (col("window_minutes").cast("long") * 60000L).as("w_ms"),
-        (col("window_slide_minute").cast("long") * 60000L).as("s_ms"),
-        col("agg_type"), col("cmp_op"), col("limit"))
+    CepQuery.prepareFanned(CepQuery.fanOutJoin(metricFrame, ruleFrame))
+      .withColumn("group_id", CepQuery.groupId)
+      .drop("group_vals")
       .withWatermark("eventTime", watermarkDelay)
 
   /** Earliest open window end: where the key's one timer sits. */
@@ -313,7 +282,8 @@ object StatefulCep {
     * and carry the [[CepEvent]] columns ([[fanOut]] or
     * [[DynamicRules.fanOut]]). Output mode: Append. `align` picks the
     * window grid (see [[Alignment]]). */
-  def run(fannedOut: DataFrame, align: Alignment = Epoch): Dataset[CepResult] = {
+  def run(fannedOut: DataFrame,
+      align: Alignment = Alignment.Epoch): Dataset[CepResult] = {
     implicit val eEnc = Encoders.product[CepEvent]
     implicit val rEnc = Encoders.product[CepResult]
     implicit val kEnc = Encoders.tuple(Encoders.scalaInt, Encoders.STRING)

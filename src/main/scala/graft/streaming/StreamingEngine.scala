@@ -3,7 +3,7 @@ package graft.streaming
 import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.cep.{CepQuery, Metrics}
+import graft.cep.{Alignment, CepQuery, Metrics}
 import graft.cep.Metrics.RuleRow
 import graft.model._
 import graft.parse.Parsers
@@ -156,7 +156,7 @@ final class StreamingEngine(
     * [[graft.GraftSession.local]] sets. */
   def startOnePassDynamic(
       ruleDir: String,
-      align: StatefulCep.Alignment = StatefulCep.Epoch): StreamingQuery = synchronized {
+      align: Alignment = Alignment.Epoch): StreamingQuery = synchronized {
     DynamicRules.persist(spark, ruleDir, book.version, book.activeRules)
     onePass.foreach(_.stop())
     var w = StatefulCep.run(

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.cep.{CepQuery, Metrics}
+import graft.cep.{Alignment, CepQuery, Metrics}
 import graft.model._
 
 /** Engine semantics against the reference's own fixtures:
@@ -102,7 +102,7 @@ class CepQuerySpec extends AnyFunSuite {
     val frame = metricFrame(Seq((1L, "g", 5), (2L, "g", 7), (240001L, "g", 3)))
     val r = Rule(1, RuleState.Active, WindowType.Tumbling, 4, 0,
       Seq("t_group"), AggType.Sum, "cpu_usage", CmpOp.Ge, BigDecimal(0))
-    val out = CepQuery.planRuleFirstAligned(frame, r)
+    val out = CepQuery.planRule(frame, r, Alignment.FirstEvent)
       .select(unix_millis(col("window_start")), unix_millis(col("window_end")),
         col("result"))
       .as[(Long, Long, Double)].collect().toSet
@@ -119,7 +119,7 @@ class CepQuerySpec extends AnyFunSuite {
     val frame = metricFrame(Seq((1L, "g", 5), (120001L, "g", 7), (240001L, "g", 3)))
     val r = Rule(1, RuleState.Active, WindowType.Sliding, 4, 2,
       Seq("t_group"), AggType.Sum, "cpu_usage", CmpOp.Ge, BigDecimal(0))
-    val out = CepQuery.planRuleFirstAligned(frame, r)
+    val out = CepQuery.planRule(frame, r, Alignment.FirstEvent)
       .select(unix_millis(col("window_start")), unix_millis(col("window_end")),
         col("result"))
       .as[(Long, Long, Double)].collect().toSet
@@ -182,6 +182,22 @@ class CepQuerySpec extends AnyFunSuite {
     assert(fromBuiltin.nonEmpty && fromArith == fromBuiltin)
   }
 
+  test("planAll: a rule with zero width or zero slide yields no windows, in both alignments") {
+    // Rule frames built directly skip Parsers.parseRules' positivity
+    // filter; such a rule must emit nothing (as in the stateful engine),
+    // not a null-window row, and must not disturb the other rules.
+    val rules = Metrics.rulesToDF(spark, Seq(
+      demoRule,
+      demoRule.copy(ruleId = 2, windowMinutes = 0),
+      demoRule.copy(ruleId = 3, windowType = WindowType.Sliding, windowSlideMinute = 0)))
+    for (align <- Seq(Alignment.Epoch, Alignment.FirstEvent)) {
+      val out = CepQuery.planAll(metricFrame(demoEvents), rules, align)
+        .select("rule_id", "group_id", "result")
+        .as[(Int, String, Double)].collect().toSet
+      assert(out == Set((1, "1_business", 16.0), (1, "1_work", 16.0)), s"$align")
+    }
+  }
+
   test("planAll one-pass == per-rule plans, PAUSE rule contributes nothing") {
     val frame = metricFrame(demoEvents)
     val rules = Seq(
@@ -197,27 +213,34 @@ class CepQuerySpec extends AnyFunSuite {
       (2, "2_business", 16.0 / 3), (2, "2_work", 16.0 / 3)))
   }
 
-  test("planAllFirstAligned == per-rule planRuleFirstAligned (+ global passthrough)") {
-    val frame = metricFrame(demoEvents)
+  test("planAll(FirstEvent) == per-rule planRule(FirstEvent) (+ global passthrough)") {
+    // The earliest "business" metric lacks the measure: it is no event
+    // of these rules, so it anchors no grid in either plan.
+    val noMeasure = Seq((t0 - 50000L, "business")).toDF("ms", "g").select(
+      timestamp_millis(col("ms")).as("eventTime"),
+      map(lit("t_group"), col("g")).as("tags"),
+      map(lit("mem_usage"), lit(1.0)).as("metrics"))
+    val frame = metricFrame(demoEvents).unionByName(noMeasure)
     val tumb = demoRule.copy(ruleId = 1, limitOperatorType = CmpOp.Gt, limit = BigDecimal(-99))
     val slid = Rule(2, RuleState.Active, WindowType.Sliding, 3, 2, Seq("t_group"),
       AggType.Avg, "cpu_usage", CmpOp.Gt, BigDecimal(-99))
     val glob = Rule(3, RuleState.Active, WindowType.Global, 0, 0, Seq("t_group"),
       AggType.Max, "cpu_usage", CmpOp.Gt, BigDecimal(-99))
-    val fromAll = CepQuery.planAllFirstAligned(frame,
-      Metrics.rulesToDF(spark, Seq(tumb, slid, glob)))
+    val fromAll = CepQuery.planAll(frame,
+      Metrics.rulesToDF(spark, Seq(tumb, slid, glob)), Alignment.FirstEvent)
       .select(col("rule_id"), col("group_id"),
         unix_millis(col("window_start")), col("result"))
       .as[(Int, String, Option[Long], Double)].collect().toSet
     val fromSingles = (Seq(tumb, slid).flatMap { r =>
-      CepQuery.planRuleFirstAligned(frame, r)
+      CepQuery.planRule(frame, r, Alignment.FirstEvent)
         .select(col("t_group"), unix_millis(col("window_start")), col("result"))
         .as[(String, Option[Long], Double)].collect()
         .map { case (g, ws, res) => (r.ruleId, s"${r.ruleId}_$g", ws, res) }
-    } ++ CepQuery.planRule(frame, glob)
+    } ++ CepQuery.planRule(frame, glob, Alignment.FirstEvent)
       .select(col("t_group"), col("result")).as[(String, Double)].collect()
       .map { case (g, res) => (glob.ruleId, s"${glob.ruleId}_$g", None, res) }).toSet
     assert(fromAll.nonEmpty && fromAll == fromSingles)
+    assert(fromAll.collect { case (1, "1_business", Some(ws), _) => ws } == Set(t0))
   }
 
   test("randomized battery: planAll one-pass == per-rule planRule across the rule space") {

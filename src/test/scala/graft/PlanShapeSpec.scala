@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape regression guard: the physical plans of every gate query
@@ -384,10 +385,13 @@ class PlanShapeSpec extends AnyFunSuite {
     // r15: cep_parse_metric spreads its narrow scan (pure per-row
     // JSON round-trip — partitioning-independent), so parse queries
     // may carry ONE REPARTITION_BY_NUM exchange directly on the scan.
-    // The WINDOW queries must NOT gain a spread: their double sums
-    // ride the single aggregation exchange's deterministic input
-    // order, and an upstream repartition would make the float
-    // summation order run-dependent (oracle hash compare).
+    // The WINDOW queries carry no spread: their one aggregation
+    // exchange already redistributes the fanned-out rows by
+    // (rule, group, window), so a spread above it would shuffle the
+    // metric stream a second time. This is a cost pin, not a
+    // correctness one: SUM/AVG add exact decimal(38,6) values and
+    // MIN/MAX ignore order, so results do not depend on partitioning
+    // (the repartition-invariance spec below pins that).
     val shuffleCounts = plans.view.filterKeys(_.startsWith("cep_")).mapValues(p =>
       "Exchange hashpartitioning[^\n]*".r.findAllIn(p)
         .count(!_.contains("REPARTITION_BY_NUM"))).toMap
@@ -398,9 +402,35 @@ class PlanShapeSpec extends AnyFunSuite {
     plans.keys.filter(_.startsWith("cep_")).foreach { name =>
       if (name.startsWith("cep_parse")) assertSpreadOnScanOnly(name)
       else assert(!plans(name).contains("REPARTITION_BY_NUM"),
-        s"$name: a spread exchange appeared upstream of a float-sum " +
-          s"window aggregation — float summation order would become " +
-          s"run-dependent:\n${plans(name)}")
+        s"$name: a spread exchange appeared upstream of a CEP window " +
+          s"aggregation — the metric stream would be shuffled twice:\n${plans(name)}")
+    }
+  }
+
+  test("CEP window results are invariant under repartitioning the metric frame (x1, x4, x32; 3 runs)") {
+    // The invariant behind the no-spread pin above: exact decimal sums
+    // and order-free MIN/MAX make every window result independent of
+    // how the metric rows are partitioned and in which order the
+    // aggregation sees them — in both alignments and both plans.
+    import graft.cep.{Alignment, CepQuery, Metrics}
+    val metrics = Metrics.eventsAsMetrics(SparkEntry.events(spark, sfDir))
+    val rules = Metrics.rulesToDF(spark, SparkEntry.flagshipRules)
+    val sliding = SparkEntry.cepStaticRules("cep_sum_sliding_nondiv")
+    val cases: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "cep_multi_rule" -> (m => CepQuery.planAll(m, rules)),
+      "cep_multi_rule_first_aligned" ->
+        (m => CepQuery.planAll(m, rules, Alignment.FirstEvent)),
+      "cep_sum_sliding_nondiv" -> (m => CepQuery.planRule(m, sliding)))
+    for ((name, plan) <- cases) {
+      val gate = SparkEntry.gates.find(_.name == name).get.build(spark, sfDir)
+        .collect().toSet
+      assert(gate.nonEmpty, s"$name: no rows")
+      for (run <- 1 to 3; n <- Seq(1, 4, 32)) {
+        val got = plan(metrics.repartition(n)).collect().toSet
+        assert(got == gate, s"$name repartitioned x$n (run $run): " +
+          s"${(got diff gate).size} rows not in the gate's result, " +
+          s"${(gate diff got).size} missing")
+      }
     }
   }
 

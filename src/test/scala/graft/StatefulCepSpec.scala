@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
-import graft.cep.Metrics
+import graft.cep.{Alignment, CepQuery, Metrics}
 import graft.model._
 import graft.streaming.StatefulCep
 
@@ -118,6 +118,62 @@ class StatefulCepSpec extends AnyFunSuite {
       Rule(2, RuleState.Active, WindowType.Sliding, 2, 1, Seq("t_group"),
         AggType.Max, "cpu_usage", CmpOp.Gt, BigDecimal(-1)),
       "stateful_parity_sliding", StatefulCep.run(_))
+  }
+
+  test("stateful Scala fold matches the batch plan for every AggType x CmpOp (limits below, at, above)") {
+    import graft.cep.Metrics.RuleRow
+    import graft.streaming.StatefulCep.CepEvent
+    // Three 10-minute windows (two groups, two windows of "a"), each
+    // holding the values {3, 12, -4} in a different order, so every
+    // window's SUM/AVG/MIN/MAX result is the same and each rule's limit
+    // sits below, at or above every window's result. AVG = 11/3 is not
+    // a finite binary fraction: "at" needs both sides to divide alike.
+    val w = 600000L
+    val ws0 = Math.floorDiv(t0, w) * w
+    val events = Seq(
+      Ev(ws0 + 1000, "a", 3), Ev(ws0 + 2000, "a", 12), Ev(ws0 + 3000, "a", -4),
+      Ev(ws0 + 1500, "b", -4), Ev(ws0 + 2500, "b", 3), Ev(ws0 + 3500, "b", 12),
+      Ev(ws0 + w + 10, "a", 12), Ev(ws0 + w + 20, "a", -4), Ev(ws0 + w + 30, "a", 3))
+    val results = Map[AggType, Double](AggType.Sum -> 11.0,
+      AggType.Avg -> BigDecimal(11).toDouble / 3, AggType.Min -> -4.0, AggType.Max -> 12.0)
+    val offsets = Seq(-1.0, 0.0, 1.0) // limit below, at, above the result
+    val rules = for {
+      (agg, ai) <- AggType.all.zipWithIndex
+      (op, oi) <- CmpOp.all.zipWithIndex
+      (off, li) <- offsets.zipWithIndex
+    } yield RuleRow(1 + ai * 18 + oi * 3 + li, RuleState.Active.name,
+      WindowType.Tumbling.name, 10, 0, Seq("t_group"), agg.name, "cpu_usage",
+      op.symbol, results(agg) + off)
+    assert(rules.size == 72)
+    val metrics = toMetricFrame(events.toDF())
+    val ruleFrame = rules.toDF()
+
+    val batch = CepQuery.planAll(metrics, ruleFrame)
+      .select(col("rule_id"), col("group_id"), unix_millis(col("window_start")),
+        col("result"))
+      .as[(Int, String, Long, Double)].collect().toSet
+    val folded = StatefulCep.fanOut(metrics, ruleFrame).as[CepEvent].collect()
+      .groupBy(e => (e.rule_id, e.group_id)).toSeq.flatMap { case (key, evs) =>
+        val st = StatefulCep.foldEvents(null, evs.sortBy(_.ev_ms).iterator, Long.MinValue)
+        StatefulCep.fireReady(key, st, Long.MaxValue)._1
+          .map(r => (r.rule_id, r.group_id, r.window_start, r.result))
+      }.toSet
+    assert(folded == batch)
+
+    // Each rule emits all three windows or none, as its comparator says.
+    val windows = Set(("a", ws0), ("b", ws0), ("a", ws0 + w))
+    val passes: Map[CmpOp, Double => Boolean] = Map(
+      CmpOp.Gt -> (_ < 0), CmpOp.Lt -> (_ > 0), CmpOp.Ge -> (_ <= 0),
+      CmpOp.Le -> (_ >= 0), CmpOp.Eq -> (_ == 0), CmpOp.Ne -> (_ != 0))
+    rules.foreach { r =>
+      val emitted = batch.collect { case (r.rule_id, g, ws, res) =>
+        assert(res == results(AggType.parse(r.agg_type)), s"rule ${r.rule_id} result")
+        (g.stripPrefix(s"${r.rule_id}_"), ws)
+      }
+      val off = r.limit - results(AggType.parse(r.agg_type))
+      val expected = if (passes(CmpOp.parse(r.cmp_op))(off)) windows else Set.empty
+      assert(emitted == expected, s"rule ${r.rule_id} ${r.agg_type} ${r.cmp_op} offset $off")
+    }
   }
 
   test("transformWithState exposes no TTL knob: Spark rejects TTL state in event-time mode") {
@@ -273,7 +329,7 @@ class StatefulCepSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("first-event-aligned stateful engine matches planRuleFirstAligned (tumbling + sliding)") {
+  test("first-event-aligned stateful engine matches planRule(FirstEvent) (tumbling + sliding)") {
     implicit val sqlCtx = spark.sqlContext
     val tumb = demoRule.copy(limitOperatorType = CmpOp.Gt, limit = BigDecimal(-1))
     val slid = Rule(2, RuleState.Active, WindowType.Sliding, 2, 1, Seq("t_group"),
@@ -286,7 +342,7 @@ class StatefulCepSpec extends AnyFunSuite {
         Ev(t0 + 130000, "a", 7), Ev(t0 + 140000, "b", 5))
       val rules = Metrics.rulesToDF(spark, Seq(rule))
       val out = StatefulCep.run(
-        StatefulCep.fanOut(toMetricFrame(mem.toDF()), rules), StatefulCep.FirstEvent)
+        StatefulCep.fanOut(toMetricFrame(mem.toDF()), rules), Alignment.FirstEvent)
       val q = out.writeStream.format("memory").queryName(table)
         .outputMode("append").start()
       try {
@@ -297,8 +353,8 @@ class StatefulCepSpec extends AnyFunSuite {
         val streamed = spark.table(table)
           .select("group_id", "window_start", "result")
           .as[(String, Long, Double)].collect().toSet
-        val batch = graft.cep.CepQuery.planRuleFirstAligned(
-          toMetricFrame(events.toDF()), rule)
+        val batch = CepQuery.planRule(
+          toMetricFrame(events.toDF()), rule, Alignment.FirstEvent)
           .select(concat(lit(s"${rule.ruleId}_"), col("t_group")),
             unix_millis(col("window_start")), col("result"))
           .as[(String, Long, Double)].collect().toSet
@@ -316,14 +372,14 @@ class StatefulCepSpec extends AnyFunSuite {
     // assigner's initial window [260000, 500000) half-open-excludes
     // its own first event).
     val st1 = StatefulCep.foldEvents(null, Iterator(e(500000L)), 0L,
-      StatefulCep.FirstEvent)
+      Alignment.FirstEvent)
     assert(st1.anchor == 260000L)
     assert(st1.windows.map(_.ws_ms).sorted == List(380000L, 500000L))
     // An event EARLIER than the anchor extends the same grid backward
     // (starts stay ≡ anchor mod s): covering starts for t=100000 are
     // {−100000, 20000}, both half-open-containing the event.
     val st2 = StatefulCep.foldEvents(st1, Iterator(e(100000L)), 0L,
-      StatefulCep.FirstEvent)
+      Alignment.FirstEvent)
     val backStarts = st2.windows.map(_.ws_ms).filter(_ <= 100000L).sorted
     assert(backStarts == List(-100000L, 20000L))
     assert(backStarts.forall(ws => math.floorMod(ws - st2.anchor, 120000L) == 0))
@@ -354,7 +410,7 @@ class StatefulCepSpec extends AnyFunSuite {
     // aggregate — the output a deployed global rule actually wants.
     val events = Seq(Ev(t0, "a", 3), Ev(t0 + 30000, "a", 12),
       Ev(t0 + 50000, "b", 20), Ev(t0 + 3600000, "a", 1))
-    val batch = graft.cep.CepQuery.planAll(toMetricFrame(events.toDF()), rules)
+    val batch = CepQuery.planAll(toMetricFrame(events.toDF()), rules)
       .select(col("group_id"), col("result"))
       .as[(String, Double)].collect().toMap
     assert(batch == Map("9_a" -> 16.0, "9_b" -> 20.0))
@@ -379,7 +435,7 @@ class StatefulCepSpec extends AnyFunSuite {
       val streamed = spark.table(table)
         .select("group_id", "window_start", "result")
         .as[(String, Long, Double)].collect().toSet
-      val batch = graft.cep.CepQuery.planAll(
+      val batch = CepQuery.planAll(
         toMetricFrame(events.toDF()), rules)
         .select(col("group_id"), unix_millis(col("window_start")), col("result"))
         .as[(String, Long, Double)].collect().toSet

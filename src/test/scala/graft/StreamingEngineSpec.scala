@@ -361,7 +361,13 @@ class StreamingEngineSpec extends AnyFunSuite {
       graft.cep.Metrics.toRow(demoRule.copy(ruleId = 4,
         groupingKeyNames = Seq("t_zone")))) // key absent from tags
     graft.streaming.DynamicRules.persist(spark, tmp, 1L, rules)
-    val batch = toMetricFrame(demoEvents.toDF())
+    // A metric that matches rules 1 and 2 by tags but lacks their
+    // measure fans out to no event on either path.
+    val noMeasure = Seq((t0 + 6000L, "business")).toDF("ms", "g").select(
+      timestamp_millis(col("ms")).as("eventTime"),
+      map(lit("t_group"), col("g")).as("tags"),
+      map(lit("mem_usage"), lit(1.0)).as("metrics"))
+    val batch = toMetricFrame(demoEvents.toDF()).unionByName(noMeasure)
     val dyn = graft.streaming.DynamicRules.fanOut(batch, tmp)
       .as[graft.streaming.StatefulCep.CepEvent].collect().toSet
     val stat = graft.streaming.StatefulCep.fanOut(batch, rules.toDF())
@@ -369,6 +375,7 @@ class StreamingEngineSpec extends AnyFunSuite {
     assert(dyn.nonEmpty && dyn == stat)
     assert(dyn.map(_.rule_id) == Set(1, 2)) // ACTIVE + matchable only
     assert(dyn.filter(_.rule_id == 2).map(_.group_id) == Set("2")) // keyless gid
+    assert(!dyn.exists(_.ev_ms == t0 + 6000L))
   }
 
   test("DynamicRules retains a bounded snapshot window and serves the newest version") {
