@@ -4,7 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /** The one place a local graft session is built: every main and the
   * test session call [[local]], so a setting added here reaches all of
-  * them. */
+  * them. The `file:` file system is not set here: it comes from
+  * `src/main/resources/core-site.xml` (see [[graft.fs.NoForkLocalFs]]),
+  * which reaches every Hadoop `Configuration` of a JVM that runs from
+  * the build's classes directory, including those of sessions not built
+  * here; the packaged jar leaves it out. */
 object GraftSession {
 
   /** A `local[cpus]` session with one shuffle partition per core,
