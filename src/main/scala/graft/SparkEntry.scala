@@ -2986,11 +2986,11 @@ object SparkEntry {
         graft.ops.Domains.outlinkDomainEdges(
           linkGraphPages(s, d), col("url"), col("html")),
         iterations = 1, scale = 1000000000000L)
-      graft.ops.Robots.decisions(urls, col("url"), robots, "graftbot")
-        .withColumn("spam_hits",
-          graft.ops.Domains.urlSpamScore(col("url")))
-        .withColumn("domain", graft.ops.Domains.registrableDomain(
-          graft.ops.Domains.host(col("url"))))
+      graft.ops.Domains.withRegistrableDomain(
+          graft.ops.Robots.decisions(urls, col("url"), robots, "graftbot")
+            .withColumn("spam_hits",
+              graft.ops.Domains.urlSpamScore(col("url"))),
+          graft.ops.Domains.host(col("url")), "domain")
         .join(ranks, Seq("domain"), "left_outer")
         .select(col("doc_id"), col("url"), col("allowed"),
           col("spam_hits"), col("rank_fp"),

@@ -7,9 +7,10 @@ import graft.streaming.StatefulCep
 
 /** Streaming throughput bench: drives N synthetic metric events
   * through BOTH one-pass engines — the declarative planAll aggregation
-  * (update mode) and the stateful transformWithState engine (append
-  * mode) — over a realistic multi-rule book, and prints one JSON line
-  * with events/second per engine.
+  * (update mode) and the dynamic rule fan-out into the stateful
+  * transformWithState engine (append mode) — over a realistic
+  * multi-rule book, and prints one JSON line with events/second per
+  * engine.
   *
   * Events come from `Metrics.eventsAsMetrics`-shaped frames built in
   * memory (a MemoryStream fed in `batches` micro-batches), so the
@@ -70,10 +71,6 @@ object StreamBench {
           // published snapshot instead of a plan-frozen broadcast.
           StatefulCep.run(
             graft.streaming.DynamicRules.fanOut(metricFrame, dynRuleDir))
-            .toDF()
-            .writeStream.format("noop").outputMode("append")
-        case _ =>
-          StatefulCep.run(StatefulCep.fanOut(metricFrame, ruleDF))
             .toDF()
             .writeStream.format("noop").outputMode("append")
       }
@@ -269,7 +266,7 @@ object StreamBench {
 
     // Warm-up lap (JIT, codegen cache, state-store init) — streaming
     // micro-benchmarks are meaningless cold.
-    run("planAll"); run("stateful"); run("dynamic"); runDedup()
+    run("planAll"); run("dynamic"); runDedup()
     Bench.calibLap(); Bench.calibLap() // JIT the calibration loop
 
     class RowAcc {
@@ -286,7 +283,7 @@ object StreamBench {
           s""""lap_calib_ratios":${ratios.map(r => f"$r%.3f").mkString("[", ",", "]")}}"""
       }
     }
-    val engines = Seq("planAll", "stateful", "dynamic")
+    val engines = Seq("planAll", "dynamic")
     val acc = engines.map(e => e -> new RowAcc).toMap
     for (_ <- 0 until throughputLaps; e <- engines) acc(e).add(run(e))
 
@@ -318,7 +315,7 @@ object StreamBench {
       s""""enrich":${enrichAcc.json}""",
       s""""bigbook_64":${big64Acc.json}""",
       s""""bigbook_1024":${big1024Acc.json}""")).mkString("{", ",", "}")
-    println(f"""{"metric":"stream_throughput","unit":"events_per_sec","n_events":$nEvents,"n_rules":$nRules,"laps_per_row":$throughputLaps,"planAll_update":${acc("planAll").best}%.0f,"stateful_append":${acc("stateful").best}%.0f,"dynamic_append":${acc("dynamic").best}%.0f,"swap_per_batch_dynamic":${swapDynAcc.best}%.0f,"dedup_docs":$nDocs,"dedup_docs_per_sec":${dedupAcc.best}%.0f,"enrich_docs_per_sec":${enrichAcc.best}%.0f,"bigbook_64_rules_ev_per_sec":${big64Acc.best}%.0f,"bigbook_1024_rules_ev_per_sec":${big1024Acc.best}%.0f,"bigbook_64_plan_ms":$small64PlanMs,"bigbook_1024_plan_ms":$big1024PlanMs,"rows":$rowsJson,"calib":$calibJson}""")
+    println(f"""{"metric":"stream_throughput","unit":"events_per_sec","n_events":$nEvents,"n_rules":$nRules,"laps_per_row":$throughputLaps,"planAll_update":${acc("planAll").best}%.0f,"dynamic_append":${acc("dynamic").best}%.0f,"swap_per_batch_dynamic":${swapDynAcc.best}%.0f,"dedup_docs":$nDocs,"dedup_docs_per_sec":${dedupAcc.best}%.0f,"enrich_docs_per_sec":${enrichAcc.best}%.0f,"bigbook_64_rules_ev_per_sec":${big64Acc.best}%.0f,"bigbook_1024_rules_ev_per_sec":${big1024Acc.best}%.0f,"bigbook_64_plan_ms":$small64PlanMs,"bigbook_1024_plan_ms":$big1024PlanMs,"rows":$rowsJson,"calib":$calibJson}""")
     spark.stop()
   }
 }

@@ -256,8 +256,8 @@ object CepQuery {
     * + sentinel per metric) and the old nested-loop join's R predicate
     * evaluations. The tag-key array is materialized per METRIC before
     * the join: inlining map_keys(tags) into the join input would
-    * re-extract it per exploded row. Shared with the stateful engine's
-    * static fan-out ([[graft.streaming.StatefulCep.fanOut]]). */
+    * re-extract it per exploded row. StreamingEngineSpec pins
+    * [[graft.streaming.DynamicRules.fanOut]] to this join. */
   private[graft] def fanOutJoin(metricFrame: DataFrame, ruleFrame: DataFrame): DataFrame = {
     val rules = withRarestKeyPivot(
       ruleFrame.filter(col("rule_state") === RuleState.Active.name))
@@ -311,8 +311,8 @@ object CepQuery {
     * values, event time and the measure `v`. A metric lacking the
     * rule's measure is no event of that rule and is dropped here:
     * aggregates ignore a null anyway, and the stateful engine's
-    * [[graft.streaming.StatefulCep.CepEvent]] has no null measure. Also
-    * the projection of [[graft.streaming.StatefulCep.fanOut]]. */
+    * [[graft.streaming.StatefulCep.CepEvent]] has no null measure (nor
+    * does [[graft.streaming.DynamicRules.fanOut]], pinned to this). */
   private[graft] def prepareFanned(joined: DataFrame): DataFrame =
     joined
       .select(

@@ -132,8 +132,8 @@ object CepExprImpl {
     new GenericArrayData(out)
   }
 
-  private val Tumbling = UTF8String.fromString("tumbling")
-  private val Sliding = UTF8String.fromString("sliding")
+  private val Tumbling = UTF8String.fromString(_root_.graft.model.WindowType.Tumbling.name)
+  private val Sliding = UTF8String.fromString(_root_.graft.model.WindowType.Sliding.name)
 
   /** See [[ArrayContainsAll]]. Static for codegen. */
   def containsAll(haystack: ArrayData, needles: ArrayData): Boolean = {

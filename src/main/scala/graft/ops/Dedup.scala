@@ -589,7 +589,10 @@ object Dedup {
       persist: Persistence = Persistence.Local,
       stepsPerJob: Int = 2, maxDriverEdges: Long = 1L << 20): DataFrame = {
     require(stepsPerJob >= 1, "stepsPerJob must be >= 1")
+    // A null endpoint links no document: dropped before the dispatch,
+    // so both paths see the same graph (as in pageRankFixedPoint).
     val e0 = pairs.select(col("id_a").as("a"), col("id_b").as("b"))
+      .where(col("a").isNotNull && col("b").isNotNull)
     val longKeyed = e0.schema.fields.forall(_.dataType ==
       org.apache.spark.sql.types.LongType)
     val e =

@@ -54,6 +54,19 @@ object Domains {
       .otherwise(last2)
   }
 
+  /** `df` plus `name` = [[registrableDomain]] of `hostCol`, the host
+    * evaluated once per row. It comes out of a one-row generator, which
+    * no filter on the domain crosses; below a plain projection Catalyst
+    * would substitute the host's URL regex back into each of the
+    * domain's six reads (link-graph aggregates then outgrew 64 KB of
+    * generated code and ran without whole-stage codegen). */
+  private[graft] def withRegistrableDomain(df: DataFrame, hostCol: Column,
+      name: String, multiPartSuffixes: Seq[String] = DefaultMultiPartSuffixes): DataFrame = {
+    val h = Iterator.from(0).map(i => s"_host_$i").find(!df.columns.contains(_)).get
+    df.select(col("*"), inline(array(struct(hostCol.as(h)))))
+      .withColumn(name, registrableDomain(col(h), multiPartSuffixes)).drop(h)
+  }
+
   /** Input frame + `host` and `domain` columns — the standard prefix
     * of every operator below. Refuses an input that ALREADY carries
     * either name (overwriting caller metadata silently is the failure
@@ -286,11 +299,10 @@ object Domains {
     val params = filter(split(query, "&"), p => p =!= "")
     def nameOf(p: Column) = element_at(split(p, "="), 1)
     val names = array_distinct(transform(params, nameOf(_)))
-    pages
-      .select(
-        registrableDomain(host(urlCol), multiPartSuffixes).as("domain"),
-        base.as("_base"), params.as("_params"),
-        fingerprintCol.as("_fp"), explode(names).as("param"))
+    val perParam = pages.select(urlCol.as("_url"), base.as("_base"),
+      params.as("_params"), fingerprintCol.as("_fp"), explode(names).as("param"))
+    withRegistrableDomain(perParam, host(col("_url")), "domain",
+        multiPartSuffixes)
       .filter(col("domain").isNotNull && col("param") =!= "")
       .select(col("domain"), col("param"),
         concat(col("_base"), lit("?"),
@@ -495,6 +507,12 @@ object Domains {
     }
   }
 
+  /** [[linkBaseRows]] plus the domains of each link's page and target. */
+  private def withLinkDomains(links: DataFrame, src: String, dst: String,
+      suffixes: Seq[String]): DataFrame = withRegistrableDomain(
+    withRegistrableDomain(links, host(col("_page_url")), src, suffixes),
+    linkTargetHost(col("_page_url"), col("_l.href"), col("_base")), dst, suffixes)
+
   def outlinkDomainEdges(pages: DataFrame, urlCol: Column, htmlCol: Column,
       includeInternal: Boolean = false, skipNofollow: Boolean = false,
       multiPartSuffixes: Seq[String] = DefaultMultiPartSuffixes,
@@ -503,12 +521,9 @@ object Domains {
     val l2 = if (skipNofollow)
       l.filter(!col("_l.rel").rlike("(^|[ \\t])nofollow([ \\t]|$)"))
     else l
-    val edges = l2.select(
-        registrableDomain(host(col("_page_url")), multiPartSuffixes)
-          .as("src_domain"),
-        registrableDomain(
-          linkTargetHost(col("_page_url"), col("_l.href"), col("_base")),
-          multiPartSuffixes).as("dst_domain"))
+    val edges = withLinkDomains(l2, "src_domain", "dst_domain",
+        multiPartSuffixes)
+      .select(col("src_domain"), col("dst_domain"))
       .filter(col("src_domain").isNotNull && col("dst_domain").isNotNull)
     val e = if (includeInternal) edges
       else edges.filter(col("src_domain") =!= col("dst_domain"))
@@ -760,13 +775,8 @@ object Domains {
     val l2 = if (skipNofollow)
       l.filter(!col("_l.rel").rlike("(^|[ \\t])nofollow([ \\t]|$)"))
     else l
-    val pairs = l2.select(
-        registrableDomain(host(col("_page_url")), multiPartSuffixes)
-          .as("_src"),
-        registrableDomain(
-          linkTargetHost(col("_page_url"), col("_l.href"), col("_base")),
-          multiPartSuffixes).as("domain"),
-        col("_l.anchor").as("_anchor"))
+    val pairs = withLinkDomains(l2, "_src", "domain", multiPartSuffixes)
+      .select(col("_src"), col("domain"), col("_l.anchor").as("_anchor"))
       .filter(col("_src").isNotNull && col("domain").isNotNull)
     val external = if (includeInternal) pairs
       else pairs.filter(col("_src") =!= col("domain"))
@@ -845,8 +855,8 @@ object Domains {
       Iterator.from(0).map(i => s"_${base}_$i").find(!taken(_)).get
     val dcol = fresh("dom")
     val bcol = fresh("blocked")
-    val tagged = docs.withColumn(dcol,
-      registrableDomain(host(urlCol), multiPartSuffixes))
+    val tagged = withRegistrableDomain(docs, host(urlCol), dcol,
+      multiPartSuffixes)
     val dl = list.select(col("domain").as(dcol)).distinct()
     val kept =
       if (allow) tagged.join(dl, Seq(dcol), "left_semi")

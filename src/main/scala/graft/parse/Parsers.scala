@@ -3,6 +3,8 @@ package graft.parse
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, MapType, StringType}
+import graft.model.{AggType, CmpOp}
+import graft.model.WindowType.{Global, Sliding, Tumbling}
 
 /** JSON-line → metric / rule parsing with the reference's routing
   * semantics, expressed as declarative (codegen-friendly) column
@@ -48,7 +50,8 @@ object Parsers {
     * (SURVEY §1.3): field-name matching is case-insensitive, and
     * `groupingKeyNames` may be either a JSON array or a bare string
     * (coerced to a one-element list). Comparator accepts both word and
-    * symbol spellings and is normalized to the symbol. Invalid lines drop. */
+    * symbol spellings (those of [[graft.model.CmpOp]]) and is normalized
+    * to the symbol. Invalid lines drop; every row reads `.as[RuleRow]`. */
   def parseRules(lines: DataFrame, lineCol: String = "line"): DataFrame = {
     // Case-insensitive field access: parse to a map and lower-case keys.
     val m0 = from_json(col(lineCol), MapType(StringType, StringType))
@@ -59,20 +62,16 @@ object Parsers {
     val gkArr = when(gk.startsWith("["), from_json(gk, ArrayType(StringType)))
       .otherwise(array(gk))
 
-    val cmpRaw = upper(f("limitOperatorType"))
-    val cmp = when(cmpRaw === "EQUAL" || cmpRaw === "=", "=")
-      .when(cmpRaw === "NOT_EQUAL" || cmpRaw === "!=", "!=")
-      .when(cmpRaw === "GREATER" || cmpRaw === ">", ">")
-      .when(cmpRaw === "LESS" || cmpRaw === "<", "<")
-      .when(cmpRaw === "GREATER_EQUAL" || cmpRaw === ">=", ">=")
-      .when(cmpRaw === "LESS_EQUAL" || cmpRaw === "<=", "<=")
+    val cmpSymbols = typedlit(CmpOp.all.flatMap(o =>
+      Seq(o.name -> o.symbol, o.symbol -> o.symbol)).toMap)
+    val cmp = try_element_at(cmpSymbols, upper(f("limitOperatorType")))
 
     val wt = lower(f("windowType"))
     lines
       .select(
         f("ruleId").try_cast("int").as("rule_id"),
         upper(f("ruleState")).as("rule_state"),
-        when(wt === "tumbling" || wt === "sliding", wt).otherwise("global")
+        when(wt.isin(Tumbling.name, Sliding.name), wt).otherwise(Global.name)
           .as("window_type"),
         coalesce(f("windowMinutes").try_cast("int"), lit(0)).as("window_minutes"),
         coalesce(f("windowSlideMinute").try_cast("int"), lit(0))
@@ -84,15 +83,16 @@ object Parsers {
         f("limit").try_cast("double").as("limit"))
       // A rule with an unknown comparator or aggregator can never
       // apply (the reference's enum valueOf throws at apply time,
-      // Rule.java:99-107) — dropping it at parse time is the same
-      // observable behavior, surfaced earlier. Likewise a windowed
-      // rule with a non-positive width/slide (the reference's
+      // Rule.java:99-107), nor one without a numeric limit (its
+      // BigDecimal compare, Rule.java:39-56) — dropping it at parse time
+      // is the same observable behavior, surfaced earlier. Likewise a
+      // windowed rule with a non-positive width/slide (the reference's
       // assigners divide by them; missing JSON fields default to 0)
       // could only ever divide-by-zero — reject it here.
       .filter(col("rule_id").isNotNull && col("rule_state").isNotNull &&
-        col("cmp_op").isNotNull &&
-        col("agg_type").isin("SUM", "AVG", "MIN", "MAX") &&
-        (col("window_type") === "global" || col("window_minutes") > 0) &&
-        (col("window_type") =!= "sliding" || col("window_slide_minute") > 0))
+        col("cmp_op").isNotNull && col("limit").isNotNull &&
+        col("agg_type").isin(AggType.all.map(_.name): _*) &&
+        (col("window_type") === Global.name || col("window_minutes") > 0) &&
+        (col("window_type") =!= Sliding.name || col("window_slide_minute") > 0))
   }
 }

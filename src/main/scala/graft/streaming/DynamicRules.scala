@@ -107,7 +107,7 @@ object DynamicRules {
     val fs = d.getFileSystem(conf)
     // A directory that doesn't exist yet (fanOut before any persist —
     // fanOut is public API) is an empty book, same as an empty rule
-    // frame in StatefulCep.fanOut, not a task failure.
+    // frame in CepQuery.planAll, not a task failure.
     if (!fs.exists(d)) return Array.empty
     val latest = fs.listStatus(d).foldLeft(-1L) { (acc, st) =>
       st.getPath.getName match {
@@ -138,10 +138,10 @@ object DynamicRules {
       tags: Map[String, String],
       metrics: Map[String, java.lang.Double])
 
-  /** The runtime-updatable form of [[StatefulCep.fanOut]]: metric ×
-    * current-snapshot rule match as a per-task loop instead of a
-    * plan-frozen broadcast join. Semantics are identical (the parity
-    * spec uses the static fan-out as reference): a rule matches when
+  /** The one way rules reach [[StatefulCep.run]]: metric ×
+    * current-snapshot rule match as a per-task loop, not planAll's
+    * plan-frozen broadcast join — whose rows (`prepareFanned(fanOutJoin)`
+    * plus `groupId`) the parity spec pins these to: a rule matches when
     * every grouping key is present in the event's tag map; `group_id`
     * is `ruleId_tagVal…` with null tag values skipped (concat_ws
     * semantics); a missing or null measure produces no event. Rules

@@ -3,6 +3,7 @@ package graft.streaming
 import java.util.concurrent.atomic.AtomicLong
 import scala.collection.concurrent.TrieMap
 import graft.cep.Metrics.RuleRow
+import graft.model.RuleState
 
 /** Versioned, thread-safe registry of standing rules — the rebuild of
   * the reference's broadcast `MapState[ruleId → Rule]`
@@ -20,7 +21,7 @@ final class RuleBook {
     * processBroadcastElement, PartitionEngine.java:54-63). */
   def applyChanges(changes: Seq[RuleRow]): Unit = {
     changes.foreach { r =>
-      if (r.rule_state == "DELETE") rules.remove(r.rule_id)
+      if (r.rule_state == RuleState.Delete.name) rules.remove(r.rule_id)
       else rules.put(r.rule_id, r)
     }
     if (changes.nonEmpty) ver.incrementAndGet()
@@ -32,7 +33,7 @@ final class RuleBook {
   /** Rules that should currently match metrics (ACTIVE only —
     * PAUSE keeps identity but stops matching, Rule.java:63-66). */
   def activeRules: Seq[RuleRow] =
-    snapshot.values.filter(_.rule_state == "ACTIVE").toSeq.sortBy(_.rule_id)
+    snapshot.values.filter(_.rule_state == RuleState.Active.name).toSeq.sortBy(_.rule_id)
 
   def version: Long = ver.get()
 }

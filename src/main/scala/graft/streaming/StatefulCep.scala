@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.graft.CepExprImpl
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 import org.apache.spark.unsafe.types.UTF8String
-import graft.cep.{Alignment, CepQuery}
+import graft.cep.Alignment
 import graft.model.WindowType
 
 /** Per-event, per-(rule,group) stateful window engine on Spark 4's
@@ -73,8 +73,9 @@ import graft.model.WindowType
   */
 object StatefulCep {
 
-  /** One fanned-out event: metric × matched rule (the output of the
-    * broadcast rule-match join, CepQuery.planAll steps 1-2).
+  /** One fanned-out event: metric × matched rule (a row of
+    * [[DynamicRules.fanOut]], the same rows as CepQuery.planAll's
+    * rule-match join and projection, steps 1-3).
     * `eventTime` carries the watermark into the stateful operator
     * (Spark's event-time mode requires the watermarked column to reach
     * it); `ev_ms` is its millisecond copy for arithmetic. */
@@ -154,12 +155,19 @@ object StatefulCep {
     * dropped, the reference's observable late-data behavior
     * (SURVEY §2.3). Rules are upsertable at runtime: the state adopts
     * the latest event's rule parameters, so firing/eviction agrees
-    * with window assignment after a rule's width changes. Returns null
-    * when no state existed and no event survived. */
+    * with window assignment after a rule's width changes. A new key's
+    * first-event grid hangs off the EARLIEST event of the batch that
+    * creates it, as `planRule` anchors on min(ev_ms), not off the
+    * shuffle's row order. Returns null when no state existed and no
+    * event survived. */
   private[graft] def foldEvents(st0: KeyState, events: Iterator[CepEvent],
       wm: Long, align: Alignment = Alignment.Epoch): KeyState = {
     var st = st0
-    events.foreach { e =>
+    val evs =
+      if (st0 == null && align == Alignment.FirstEvent)
+        events.toArray.sortBy(_.ev_ms).iterator
+      else events
+    evs.foreach { e =>
       st =
         if (st == null)
           KeyState(e.w_ms, e.agg_type, e.cmp_op, e.limit, Nil, Long.MinValue,
@@ -202,23 +210,6 @@ object StatefulCep {
       else math.max(st.closedBelow, toFire.map(_.ws_ms + st.w_ms).max)
     (out, st.copy(windows = open, closedBelow = closedBelow))
   }
-
-  /** Metric frame × rule frame → fanned-out [[CepEvent]] columns: the
-    * broadcast rule-match join and per-(metric, rule) projection of
-    * [[graft.cep.CepQuery.planAll]] (steps 1-3, so a metric lacking
-    * the rule's measure fans out to nothing here either), plus
-    * `group_id`, with the rule set frozen at plan time. Streams whose
-    * rules change at runtime fan out through [[DynamicRules.fanOut]],
-    * which specs pin to this one. The watermark is applied on the
-    * retained `eventTime` column AFTER the projection, so the
-    * event-time timers find the watermarked attribute in the stateful
-    * operator's input. */
-  def fanOut(metricFrame: DataFrame, ruleFrame: DataFrame,
-      watermarkDelay: String = "0 seconds"): DataFrame =
-    CepQuery.prepareFanned(CepQuery.fanOutJoin(metricFrame, ruleFrame))
-      .withColumn("group_id", CepQuery.groupId)
-      .drop("group_vals")
-      .withWatermark("eventTime", watermarkDelay)
 
   /** Earliest open window end: where the key's one timer sits. */
   private def earliestEnd(st: KeyState): Option[Long] =
@@ -277,11 +268,11 @@ object StatefulCep {
     }
   }
 
-  /** Wire the stateful engine over a fanned-out event stream.
-    * `fannedOut` must be watermarked on an `eventTime` timestamp column
-    * and carry the [[CepEvent]] columns ([[fanOut]] or
-    * [[DynamicRules.fanOut]]). Output mode: Append. `align` picks the
-    * window grid (see [[Alignment]]). */
+  /** Wire the stateful engine over a fanned-out event stream:
+    * `fannedOut` is [[DynamicRules.fanOut]] over a rule snapshot that
+    * [[DynamicRules.persist]] published, the one way rules reach this
+    * engine (watermarked on `eventTime`, [[CepEvent]] columns). Output
+    * mode: Append. `align` picks the window grid (see [[Alignment]]). */
   def run(fannedOut: DataFrame,
       align: Alignment = Alignment.Epoch): Dataset[CepResult] = {
     implicit val eEnc = Encoders.product[CepEvent]

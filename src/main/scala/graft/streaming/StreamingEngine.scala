@@ -1,7 +1,7 @@
 package graft.streaming
 
 import scala.collection.concurrent.TrieMap
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.cep.{Alignment, CepQuery, Metrics}
 import graft.cep.Metrics.RuleRow
@@ -85,16 +85,7 @@ final class StreamingEngine(
   /** Rule rows of one parsed control micro-batch (rules are small by
     * contract — this is a control path, not a data path). */
   private def parseRuleRows(batch: DataFrame): Seq[RuleRow] =
-    Parsers.parseRules(batch)
-      .collect()
-      .map(r => RuleRow(
-        r.getAs[Int]("rule_id"), r.getAs[String]("rule_state"),
-        r.getAs[String]("window_type"), r.getAs[Int]("window_minutes"),
-        r.getAs[Int]("window_slide_minute"),
-        r.getAs[scala.collection.Seq[String]]("grouping_key_names").toSeq,
-        r.getAs[String]("agg_type"), r.getAs[String]("agg_field"),
-        r.getAs[String]("cmp_op"), r.getAs[Double]("limit")))
-      .toSeq
+    Parsers.parseRules(batch).as(Encoders.product[RuleRow]).collect().toSeq
 
   /** Consume a streaming frame of rule JSON lines into the book and
     * re-sync after every micro-batch — the rebuild of the reference's

@@ -872,6 +872,33 @@ class OpsSpec extends AnyFunSuite {
     assert(!plan.contains("Exchange"))
   }
 
+  test("components: null endpoints, self-loops and duplicate edges give equal labels on both paths") {
+    val rnd = new scala.util.Random(17)
+    for (trial <- 0 until 4) {
+      def id(): Option[Long] =
+        if (rnd.nextInt(8) == 0) None else Some(rnd.nextInt(30).toLong)
+      val edges = Seq.fill(40) {
+        val a = id()
+        (a, if (rnd.nextInt(6) == 0) a else id()) // some self-loops
+      }
+      val all = edges ++ edges.take(10) ++ // duplicates
+        Seq((None, None), (Some(100L), None), (None, Some(101L)), (Some(102L), Some(102L)))
+      val pairs = all.toDF("id_a", "id_b")
+      def labels(df: org.apache.spark.sql.DataFrame): Map[Any, Any] = {
+        val rows = df.collect().map(r => r.get(0) -> r.get(1))
+        assert(!rows.exists { case (d, c) => d == null || c == null },
+          s"trial $trial: null label row")
+        rows.toMap
+      }
+      val driver = labels(Dedup.components(pairs))
+      val dist = labels(Dedup.components(pairs, maxDriverEdges = 0L))
+      assert(driver == dist, s"trial $trial")
+      val nodes = all.collect { case (Some(a), Some(b)) => Seq(a, b) }.flatten.toSet
+      assert(driver.keySet == nodes.map(x => x: Any), s"trial $trial")
+      assert(driver(102L) == 102L)
+    }
+  }
+
   test("components: chain collapses to one cluster, disjoint pair stays separate") {
     // chain 1-2, 2-3, 3-4 (diameter 3 forces multiple propagation
     // rounds) + disjoint pair 10-11

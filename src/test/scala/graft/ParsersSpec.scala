@@ -81,6 +81,17 @@ class ParsersSpec extends AnyFunSuite {
     assert(kept == Seq(3))
   }
 
+  test("rule parse: a missing or non-numeric limit drops the rule (batch would compare against null)") {
+    def line(id: Int, limit: String): String =
+      s"""{"ruleId":$id,"ruleState":"ACTIVE","windowType":"tumbling","windowMinutes":1,"windowSlideMinute":0,"groupingKeyNames":["t_a"],"aggregatorFunctionType":"SUM","aggregateFieldName":"v","limitOperatorType":">"$limit}"""
+    val lines = Seq(line(1, ""), line(2, ""","limit":"high""""),
+      line(3, ""","limit":null"""), line(4, ""","limit":"2.5""""),
+      line(5, ""","limit":-3""")).toDF("line")
+    val kept = Parsers.parseRules(lines).select("rule_id", "limit")
+      .as[(Int, Option[Double])].collect().toSeq.sortBy(_._1)
+    assert(kept == Seq((4, Some(2.5)), (5, Some(-3.0))))
+  }
+
   test("rule parse: unknown window type → global; word comparators normalize to symbols") {
     val lines = Seq(
       """{"ruleId":3,"ruleState":"PAUSE","windowType":"session","windowMinutes":0,"windowSlideMinute":0,"groupingKeyNames":["t_a"],"aggregatorFunctionType":"MIN","aggregateFieldName":"lat","limitOperatorType":"LESS_EQUAL","limit":99}""")
@@ -89,5 +100,16 @@ class ParsersSpec extends AnyFunSuite {
     assert(r.getAs[String]("window_type") == "global")
     assert(r.getAs[String]("cmp_op") == "<=")
     assert(r.getAs[String]("rule_state") == "PAUSE")
+    // Every spelling of graft.model's comparators and aggregators.
+    import graft.model.{AggType, CmpOp}
+    val spellings = CmpOp.all.flatMap(o =>
+      Seq(o.name, o.name.toLowerCase, o.symbol).map(_ -> o.symbol))
+    val all = for (((sp, sym), i) <- spellings.zipWithIndex;
+        (agg, a) <- AggType.all.zipWithIndex) yield (i * 10 + a, sp, sym, agg.name)
+    val got = Parsers.parseRules(all.map { case (id, sp, _, agg) =>
+        s"""{"ruleId":$id,"ruleState":"ACTIVE","windowType":"global","groupingKeyNames":["t_a"],"aggregatorFunctionType":"${agg.toLowerCase}","aggregateFieldName":"v","limitOperatorType":"$sp","limit":1}"""
+      }.toDF("line"))
+      .select("rule_id", "cmp_op", "agg_type").as[(Int, String, String)].collect().toSet
+    assert(got == all.map { case (id, _, sym, agg) => (id, sym, agg) }.toSet)
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.cep.{Alignment, CepQuery, Metrics}
 import graft.model._
-import graft.streaming.StatefulCep
+import graft.streaming.{DynamicRules, StatefulCep}
 
 /** Per-event stateful engine (transformWithState on the RocksDB state
   * store): windows emit exactly once when the watermark passes their
@@ -32,11 +32,19 @@ class StatefulCepSpec extends AnyFunSuite {
   private val demoRule = Rule(1, RuleState.Active, WindowType.Tumbling, 2, 0,
     Seq("t_group"), AggType.Sum, "cpu_usage", CmpOp.Gt, BigDecimal(11))
 
+  /** The engine's one way in: the rule frame published as a snapshot by
+    * DynamicRules.persist into a fresh directory, fanned out from it. */
+  private def fannedOut(metrics: DataFrame, rules: DataFrame): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cep_rules_").toString
+    DynamicRules.persist(spark, dir, 1L, rules.as[Metrics.RuleRow].collect().toSeq)
+    DynamicRules.fanOut(metrics, dir)
+  }
+
   test("stateful engine: watermark-driven exactly-once window emission + late-data drop") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
     val rules = Metrics.rulesToDF(spark, Seq(demoRule))
-    val out = StatefulCep.run(StatefulCep.fanOut(toMetricFrame(mem.toDF()), rules))
+    val out = StatefulCep.run(fannedOut(toMetricFrame(mem.toDF()), rules))
     val q = out.writeStream.format("memory").queryName("stateful_cep")
       .outputMode("append").start()
     try {
@@ -67,7 +75,7 @@ class StatefulCepSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
     val rules = Metrics.rulesToDF(spark, Seq(demoRule))
-    val out = StatefulCep.run(StatefulCep.fanOut(toMetricFrame(mem.toDF()), rules))
+    val out = StatefulCep.run(fannedOut(toMetricFrame(mem.toDF()), rules))
     val q = out.writeStream.format("memory").queryName("stateful_cep_timers")
       .outputMode("append").start()
     def timerCounts(afterBatch: Long): (Long, Long, Long) = {
@@ -152,7 +160,7 @@ class StatefulCepSpec extends AnyFunSuite {
       .select(col("rule_id"), col("group_id"), unix_millis(col("window_start")),
         col("result"))
       .as[(Int, String, Long, Double)].collect().toSet
-    val folded = StatefulCep.fanOut(metrics, ruleFrame).as[CepEvent].collect()
+    val folded = fannedOut(metrics, ruleFrame).as[CepEvent].collect()
       .groupBy(e => (e.rule_id, e.group_id)).toSeq.flatMap { case (key, evs) =>
         val st = StatefulCep.foldEvents(null, evs.sortBy(_.ev_ms).iterator, Long.MinValue)
         StatefulCep.fireReady(key, st, Long.MaxValue)._1
@@ -342,7 +350,7 @@ class StatefulCepSpec extends AnyFunSuite {
         Ev(t0 + 130000, "a", 7), Ev(t0 + 140000, "b", 5))
       val rules = Metrics.rulesToDF(spark, Seq(rule))
       val out = StatefulCep.run(
-        StatefulCep.fanOut(toMetricFrame(mem.toDF()), rules), Alignment.FirstEvent)
+        fannedOut(toMetricFrame(mem.toDF()), rules), Alignment.FirstEvent)
       val q = out.writeStream.format("memory").queryName(table)
         .outputMode("append").start()
       try {
@@ -386,6 +394,35 @@ class StatefulCepSpec extends AnyFunSuite {
     assert(backStarts.forall(ws => ws <= 100000L && 100000L < ws + 240000L))
   }
 
+  test("FirstEvent alignment: a new key's grid does not depend on the row order of its first batch") {
+    import graft.streaming.StatefulCep.CepEvent
+    // The earliest event is neither first nor last in the frame, and no
+    // other event lies on its grid: anchoring on whichever row comes
+    // first after the shuffle would shift every window.
+    val events = Seq(Ev(t0 + 130000, "a", 7), Ev(t0, "a", 3), Ev(t0 + 50000, "a", 12))
+    val slid = Rule(2, RuleState.Active, WindowType.Sliding, 2, 1, Seq("t_group"),
+      AggType.Sum, "cpu_usage", CmpOp.Gt, BigDecimal(-1))
+    for ((rule, anchor) <- Seq(
+        demoRule.copy(limit = BigDecimal(-1)) -> t0, slid -> (t0 - 120000L))) {
+      val metrics = toMetricFrame(events.toDF())
+      val batch = CepQuery.planRule(metrics, rule, Alignment.FirstEvent)
+        .select(unix_millis(col("window_start")), col("result"))
+        .as[(Long, Double)].collect().toSet
+      val fanned = fannedOut(metrics, Metrics.rulesToDF(spark, Seq(rule)))
+        .as[CepEvent].collect()
+      assert(fanned.length == 3 && batch.nonEmpty)
+      fanned.permutations.foreach { order =>
+        val st = StatefulCep.foldEvents(null, order.iterator, Long.MinValue,
+          Alignment.FirstEvent)
+        val fired = StatefulCep.fireReady((rule.ruleId, "a"), st, Long.MaxValue)._1
+          .map(r => (r.window_start, r.result)).toSet
+        val seen = order.map(_.ev_ms - t0).mkString(",")
+        assert(st.anchor == anchor, s"${rule.windowType.name} anchor, order $seen")
+        assert(fired == batch, s"${rule.windowType.name} windows, order $seen")
+      }
+    }
+  }
+
   test("global rules: append engines never emit (documented routing), declarative path serves them") {
     // The documented mode contract (CepRunner Scaladoc): global
     // (All-window) rules must route to the declarative update-mode
@@ -396,7 +433,7 @@ class StatefulCepSpec extends AnyFunSuite {
       Seq("t_group"), AggType.Sum, "cpu_usage", CmpOp.Gt, BigDecimal(-1))
     val rules = Metrics.rulesToDF(spark, Seq(globalRule))
     val mem = MemoryStream[Ev]
-    val out = StatefulCep.run(StatefulCep.fanOut(toMetricFrame(mem.toDF()), rules))
+    val out = StatefulCep.run(fannedOut(toMetricFrame(mem.toDF()), rules))
     val q = out.writeStream.format("memory").queryName("stateful_global")
       .outputMode("append").start()
     try {
@@ -424,7 +461,7 @@ class StatefulCepSpec extends AnyFunSuite {
       Ev(t0, "a", 3), Ev(t0 + 30000, "a", 12), Ev(t0 + 50000, "b", 20),
       Ev(t0 + 130000, "a", 7), Ev(t0 + 140000, "b", 5))
     val rules = Metrics.rulesToDF(spark, Seq(rule))
-    val out = run(StatefulCep.fanOut(toMetricFrame(mem.toDF()), rules))
+    val out = run(fannedOut(toMetricFrame(mem.toDF()), rules))
     val q = out.writeStream.format("memory").queryName(table)
       .outputMode("append").start()
     try {

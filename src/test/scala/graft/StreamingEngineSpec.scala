@@ -370,7 +370,9 @@ class StreamingEngineSpec extends AnyFunSuite {
     val batch = toMetricFrame(demoEvents.toDF()).unionByName(noMeasure)
     val dyn = graft.streaming.DynamicRules.fanOut(batch, tmp)
       .as[graft.streaming.StatefulCep.CepEvent].collect().toSet
-    val stat = graft.streaming.StatefulCep.fanOut(batch, rules.toDF())
+    // planAll's own rule-match join and projection, plus the group id.
+    val stat = CepQuery.prepareFanned(CepQuery.fanOutJoin(batch, rules.toDF()))
+      .withColumn("group_id", CepQuery.groupId).drop("group_vals")
       .as[graft.streaming.StatefulCep.CepEvent].collect().toSet
     assert(dyn.nonEmpty && dyn == stat)
     assert(dyn.map(_.rule_id) == Set(1, 2)) // ACTIVE + matchable only
@@ -511,6 +513,49 @@ class StreamingEngineSpec extends AnyFunSuite {
         .collect().toSet
       assert(got == Set((1, "1_business", 16.0), (1, "1_work", 16.0)))
     } finally engine.shutdown()
+  }
+
+  test("a rule line with a missing or non-numeric limit reaches neither the rule book nor the one-pass query") {
+    implicit val sqlCtx = spark.sqlContext
+    val tmp = java.nio.file.Files.createTempDirectory("graft_nolimit_").toString
+    val srcDir = s"$tmp/in"
+    val ruleDir = s"$tmp/rules"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
+    // SUM > 0 fires on every demo window, so a rule read as limit 0
+    // would show in the output.
+    def ruleJson(id: Int, limit: String): String =
+      s"""{"ruleId":$id,"ruleState":"ACTIVE","windowType":"tumbling","windowMinutes":2,"windowSlideMinute":0,"groupingKeyNames":["t_group"],"aggregatorFunctionType":"SUM","aggregateFieldName":"cpu_usage","limitOperatorType":">"$limit}"""
+    val ruleMem = MemoryStream[String]
+    val book = new RuleBook
+    val engine = new StreamingEngine(
+      spark,
+      () => graft.parse.Parsers.parseMetrics(
+        graft.streaming.CepRunner.fileLines(spark, srcDir)),
+      book,
+      StreamingEngine.SinkConfig(
+        format = "parquet", outputMode = "append",
+        checkpointRoot = Some(s"$tmp/ckpt"), pathRoot = Some(s"$tmp/out")))
+    val q = engine.startOnePassDynamic(ruleDir)
+    val control = engine.attachRuleStreamDynamic(
+      ruleMem.toDF().withColumnRenamed("value", "line"), ruleDir)
+    try {
+      ruleMem.addData(ruleJson(1, ""","limit":11"""), ruleJson(2, ""),
+        ruleJson(3, ""","limit":"high""""), ruleJson(4, ""","limit":null"""))
+      control.processAllAvailable()
+      assert(book.snapshot.keySet == Set(1))
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$srcDir/a.jsonl"),
+        (demoEvents :+ Ev(t0 + 600000, "business", 1))
+          .map(e => s"""{"eventTime":${e.ms},"t_group":"${e.g}","cpu_usage":${e.cpu}}""")
+          .mkString("\n").getBytes)
+      engine.awaitQuiescence()
+      assert(q.isActive && q.exception.isEmpty)
+      val got = spark.read.parquet(s"$tmp/out/cep_one_pass")
+        .select("rule_id", "group_id", "result").as[(Int, String, Double)]
+        .collect().toSet
+      assert(got == Set((1, "1_business", 16.0), (1, "1_work", 16.0)))
+    } finally {
+      control.stop(); engine.shutdown()
+    }
   }
 
   test("one-pass streaming snapshot plan (planAll) runs in update mode") {
