@@ -118,16 +118,6 @@ object StreamBench {
       val start = System.nanoTime()
       try {
         (0 until batches).foreach { b => mem.addData(b); q.processAllAvailable() }
-        if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-          q.recentProgress.foreach { p =>
-            val so = p.stateOperators.headOption.map(s =>
-              s" state[rows=${s.numRowsTotal} upd=${s.numRowsUpdated}" +
-                s" updMs=${s.allUpdatesTimeMs} rmMs=${s.allRemovalsTimeMs}" +
-                s" commitMs=${s.commitTimeMs} mem=${s.memoryUsedBytes}" +
-                s" custom=${s.customMetrics}]").getOrElse("")
-            println(
-              s"[dedup-progress] rows=${p.numInputRows} durationMs=${p.durationMs}$so")
-          }
       } finally q.stop()
       (nDocs / ((System.nanoTime() - start) / 1e9), nDocs.toLong)
     }

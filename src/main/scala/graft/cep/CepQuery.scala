@@ -37,7 +37,8 @@ import graft.model._
   * anchor argument is the alignment: 0 for the epoch grid, the
   * (rule, group)'s earliest event for the reference's grids. The
   * stateful engine ([[graft.streaming.StatefulCep]]) calls the same
-  * function per event.
+  * function per event, and its closed windows become results through
+  * planAll's own [[judgeWindows]].
   *
   * Scale posture: the only shuffle is the final hash aggregation on
   * (ruleId, groupValues, windowStart) — exactly the reference's
@@ -335,11 +336,8 @@ object CepQuery {
 
   /** planAll steps 4-5 — the single hash-aggregation shuffle keyed
     * like the reference's keyBy(groupId) (rule attributes ride along,
-    * constant per rule_id), then the aggregate and the HAVING
-    * comparator, both data, as CASEs over every [[AggType]] and
-    * [[CmpOp]] built from `Partials.result` and [[cmpColumn]] (the per-rule
-    * plan's own spellings; an unknown agg type falls back to MAX, an
-    * unknown comparator to `!=`), and the output projection. */
+    * constant per rule_id), the window's partials, then
+    * [[judgeWindows]] and the output projection. */
   private def aggregateAndEmit(windowed: DataFrame): DataFrame = {
     val p = partials(col("v"))
     val agged = windowed
@@ -348,20 +346,30 @@ object CepQuery {
       .agg(p.sumV.as("sum_v"), p.cnt.as("cnt_v"), p.minV.as("min_v"),
         p.maxV.as("max_v"))
 
-    val perWindow = Partials(col("sum_v"), col("cnt_v"), col("min_v"), col("max_v"))
-    val withResult = agged.withColumn("result",
-      dispatch(AggType.all, col("agg_type"), (a: AggType) => a.name,
-        AggType.Max)(perWindow.result))
-
-    val kept = withResult.filter(
-      dispatch(CmpOp.all, col("cmp_op"), (o: CmpOp) => o.symbol, CmpOp.Ne)(
-        cmpColumn(_, col("result"), col("limit"))))
-
-    kept.select(
+    judgeWindows(agged).select(
       col("rule_id"),
       groupId.as("group_id"),
       timestamp_millis(col("ws_ms")).as("window_start"),
       timestamp_millis(col("ws_ms") + col("w_ms")).as("window_end"),
       col("result"))
+  }
+
+  /** The one place a closed window becomes an alert (reference
+    * Trigger.java:14-19, Rule.java:39-86), for [[planAll]] after its
+    * hash aggregate and [[graft.streaming.StatefulCep.run]] after
+    * `transformWithState`. Over rows of partials (`sum_v` DOUBLE,
+    * `cnt_v`, `min_v`, `max_v`) and rule parameters (`agg_type`,
+    * `cmp_op`, `limit`) it adds `result` and keeps the rows passing
+    * HAVING, as CASEs over every [[AggType]] and [[CmpOp]] built from
+    * `Partials.result` and [[cmpColumn]] (unknown agg type → MAX,
+    * unknown comparator → `!=`). */
+  private[graft] def judgeWindows(windows: DataFrame): DataFrame = {
+    val perWindow = Partials(col("sum_v"), col("cnt_v"), col("min_v"), col("max_v"))
+    windows
+      .withColumn("result",
+        dispatch(AggType.all, col("agg_type"), (a: AggType) => a.name,
+          AggType.Max)(perWindow.result))
+      .filter(dispatch(CmpOp.all, col("cmp_op"), (o: CmpOp) => o.symbol, CmpOp.Ne)(
+        cmpColumn(_, col("result"), col("limit"))))
   }
 }

@@ -449,24 +449,6 @@ object Domains {
       .otherwise(host(pageUrl))
   }
 
-  /** The registrable-domain LINK GRAPH of an HTML page corpus:
-    * `(src_domain, dst_domain, n_links)` aggregated over every
-    * [[graft.functions.html_links]] outlink. Intra-domain edges are
-    * dropped by default (`includeInternal = true` keeps them — e.g.
-    * for per-site nav profiling); `skipNofollow = true` drops links
-    * whose `rel` carries the `nofollow` token (publishers' "don't
-    * count this endorsement" signal — the standard choice when the
-    * graph feeds a ranking). Rows with an unparseable page URL or
-    * link target (null domain on either side) are dropped. Pages
-    * declaring `<base href>` resolve their RELATIVE links against
-    * the base, per the HTML spec (`honorBaseHref = false` restores
-    * page-host resolution for corpora known base-free — it saves the
-    * one extra regexp per page, nothing else).
-    *
-    * Shape at 100 TB: link extraction is the zero-shuffle html_links
-    * scan; the single shuffle is the (src, dst)-keyed count with
-    * map-side partial aggregation, and the output is domain-graph-
-    * sized (orders of magnitude below the page corpus). */
   /** One row per (page, link): `(_page_url, _l, _base)`. The base
     * extraction MUST ride inside the generator expression: a plain
     * `select(url, base, explode(links))` lets Catalyst float the
@@ -513,6 +495,24 @@ object Domains {
     withRegistrableDomain(links, host(col("_page_url")), src, suffixes),
     linkTargetHost(col("_page_url"), col("_l.href"), col("_base")), dst, suffixes)
 
+  /** The registrable-domain LINK GRAPH of an HTML page corpus:
+    * `(src_domain, dst_domain, n_links)` aggregated over every
+    * [[graft.functions.html_links]] outlink. Intra-domain edges are
+    * dropped by default (`includeInternal = true` keeps them — e.g.
+    * for per-site nav profiling); `skipNofollow = true` drops links
+    * whose `rel` carries the `nofollow` token (publishers' "don't
+    * count this endorsement" signal — the standard choice when the
+    * graph feeds a ranking). Rows with an unparseable page URL or
+    * link target (null domain on either side) are dropped. Pages
+    * declaring `<base href>` resolve their RELATIVE links against
+    * the base, per the HTML spec (`honorBaseHref = false` restores
+    * page-host resolution for corpora known base-free — it saves the
+    * one extra regexp per page, nothing else).
+    *
+    * Shape at 100 TB: link extraction is the zero-shuffle html_links
+    * scan; the single shuffle is the (src, dst)-keyed count with
+    * map-side partial aggregation, and the output is domain-graph-
+    * sized (orders of magnitude below the page corpus). */
   def outlinkDomainEdges(pages: DataFrame, urlCol: Column, htmlCol: Column,
       includeInternal: Boolean = false, skipNofollow: Boolean = false,
       multiPartSuffixes: Seq[String] = DefaultMultiPartSuffixes,

@@ -74,25 +74,25 @@ object CepRunner {
   }
 
   /** args: [host] [metricPort] [rulePort] [mode]; mode `per-rule`
-    * (default — one query per ACTIVE rule, update-mode console) or
-    * `dynamic` (the production default: ONE append-mode
-    * transformWithState query over the whole rule book, checkpointed;
-    * rule changes are published as [[DynamicRules]] snapshots and take
-    * effect on the next micro-batch with the query running — zero
-    * downtime, the reference's broadcast-state semantics).
+    * (one update-mode console query per ACTIVE rule) or `dynamic` (ONE
+    * append-mode transformWithState query over the whole rule book,
+    * checkpointed; rule changes are published as [[DynamicRules]]
+    * snapshots and take effect on the next micro-batch with the query
+    * running — zero downtime, the reference's broadcast-state
+    * semantics). Any other mode fails before a session starts.
     *
-    * Global (All-window) rules: use `per-rule`. A global window never
-    * closes, so the append-mode stateful engine (`dynamic`) never
-    * emits for it — matching the reference's observable behavior (its
-    * global trigger never fires, SURVEY §2.4); the per-rule
-    * declarative path runs global rules in UPDATE mode, emitting the
-    * running aggregate per micro-batch, which is the output a user
-    * deploying a global rule actually wants. */
+    * `per-rule` is the CLI default because global (All-window) rules
+    * emit only there: it runs them in UPDATE mode, emitting the
+    * running aggregate per micro-batch. A global window never closes,
+    * so `dynamic` never emits for it, matching the reference (its
+    * global trigger never fires, SURVEY §2.4). */
   def main(args: Array[String]): Unit = {
+    val mode = args.lift(3).getOrElse("per-rule")
+    require(mode == "per-rule" || mode == "dynamic",
+      s"unknown mode $mode (have: per-rule, dynamic)")
     val host = args.headOption.getOrElse("localhost")
     val metricPort = args.lift(1).map(_.toInt).getOrElse(9999)
     val rulePort = args.lift(2).map(_.toInt).getOrElse(8888)
-    val mode = args.lift(3).getOrElse("per-rule")
     val spark = graft.GraftSession.local(graft.GraftSession.envCpus(8))
 
     val book = new RuleBook
@@ -110,7 +110,7 @@ object CepRunner {
         engine.startOnePassDynamic(ruleDir)
         engine.attachRuleStreamDynamic(
           socketLines(spark, host, rulePort), ruleDir)
-      case _ =>
+      case "per-rule" =>
         val engine = new StreamingEngine(spark, metricSource, book,
           StreamingEngine.SinkConfig(format = "console", outputMode = "update"))
         engine.attachRuleStream(socketLines(spark, host, rulePort))

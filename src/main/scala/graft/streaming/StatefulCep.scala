@@ -1,10 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.CepExprImpl
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 import org.apache.spark.unsafe.types.UTF8String
-import graft.cep.Alignment
+import graft.cep.{Alignment, CepQuery}
 import graft.model.WindowType
 
 /** Per-event, per-(rule,group) stateful window engine on Spark 4's
@@ -34,10 +35,10 @@ import graft.model.WindowType
   * covering starts come from `CepExprImpl.starts`, the core of the
   * `window_starts` expression that [[graft.cep.CepQuery]] calls, on
   * the key's grid (anchor 0, or the first event's grid under
-  * [[graft.cep.Alignment.FirstEvent]]). Result and HAVING at fire time
-  * ([[result]], [[passes]]) are a Scala fold over the state, pinned
-  * to the batch plan for every agg type × comparator by
-  * StatefulCepSpec.
+  * [[graft.cep.Alignment.FirstEvent]]). The processor emits closed
+  * windows unjudged ([[ClosedWindow]]); `result` and HAVING come after
+  * it, in the same incremental plan, from planAll's own
+  * [[graft.cep.CepQuery.judgeWindows]].
   *
   * State per key is bounded: one (sum, count, min, max) quadruple per
   * OPEN window — never the raw events (AVG divides sum by count, so no
@@ -112,7 +113,15 @@ object StatefulCep {
       w_ms: Long, agg_type: String, cmp_op: String, limit: Double,
       windows: List[WindowAgg], closedBelow: Long, anchor: Long)
 
-  /** Emitted result row (same shape as CepQuery.planAll output). */
+  /** A window the watermark closed, unjudged: bounds in ms, the
+    * [[WindowAgg]] partials and the key's current rule parameters —
+    * the columns [[graft.cep.CepQuery.judgeWindows]] reads. */
+  final case class ClosedWindow(
+      rule_id: Int, group_id: String, window_start: Long, window_end: Long,
+      sum_v: Double, cnt_v: Long, min_v: Double, max_v: Double,
+      agg_type: String, cmp_op: String, limit: Double)
+
+  /** Result row of [[run]]: planAll's columns, window bounds in ms. */
   final case class CepResult(
       rule_id: Int, group_id: String, window_start: Long, window_end: Long,
       result: Double)
@@ -132,22 +141,6 @@ object StatefulCep {
   private def fold(w: WindowAgg, v: Double): WindowAgg =
     WindowAgg(w.ws_ms, w.sum + dec6(v), w.cnt + 1,
       math.min(w.mn, v), math.max(w.mx, v))
-
-  private def result(aggType: String, w: WindowAgg): Double = aggType match {
-    case "SUM" => w.sum.toDouble
-    case "AVG" => w.sum.toDouble / w.cnt
-    case "MIN" => w.mn
-    case _ => w.mx
-  }
-
-  private def passes(cmp: String, r: Double, limit: Double): Boolean = cmp match {
-    case ">" => r > limit
-    case "<" => r < limit
-    case ">=" => r >= limit
-    case "<=" => r <= limit
-    case "=" => r == limit
-    case _ => r != limit
-  }
 
   /** Fold one batch of events into open windows (reference
     * Window.receive, Window.java:40-47). Late events — window end at or
@@ -194,17 +187,15 @@ object StatefulCep {
 
   /** Fire every window whose end the watermark has passed (reference
     * Trigger.trigger + evict, Trigger.java:14-19), in window order,
-    * applying the threshold (HAVING) at fire time. Returns the
+    * unjudged, with the key's newest rule parameters. Returns the
     * emissions and the surviving state (open windows only, eviction
     * frontier advanced). */
   private[graft] def fireReady(
-      key: (Int, String), st: KeyState, wm: Long): (List[CepResult], KeyState) = {
+      key: (Int, String), st: KeyState, wm: Long): (List[ClosedWindow], KeyState) = {
     val (toFire, open) = st.windows.partition(w => w.ws_ms + st.w_ms <= wm)
-    val out = for {
-      w <- toFire.sortBy(_.ws_ms)
-      r = result(st.agg_type, w)
-      if passes(st.cmp_op, r, st.limit)
-    } yield CepResult(key._1, key._2, w.ws_ms, w.ws_ms + st.w_ms, r)
+    val out = toFire.sortBy(_.ws_ms).map(w =>
+      ClosedWindow(key._1, key._2, w.ws_ms, w.ws_ms + st.w_ms,
+        w.sum.toDouble, w.cnt, w.mn, w.mx, st.agg_type, st.cmp_op, st.limit))
     val closedBelow =
       if (toFire.isEmpty) st.closedBelow
       else math.max(st.closedBelow, toFire.map(_.ws_ms + st.w_ms).max)
@@ -222,7 +213,7 @@ object StatefulCep {
     * end fire it inline. `enc` comes from [[run]] (see "Per-task
     * cost" above). */
   private class CepProcessor(align: Alignment, enc: Encoder[KeyState])
-      extends StatefulProcessor[(Int, String), CepEvent, CepResult] {
+      extends StatefulProcessor[(Int, String), CepEvent, ClosedWindow] {
 
     @transient private var state: ValueState[KeyState] = _
 
@@ -246,7 +237,7 @@ object StatefulCep {
 
     override def handleInputRows(
         key: (Int, String), rows: Iterator[CepEvent],
-        tv: TimerValues): Iterator[CepResult] = {
+        tv: TimerValues): Iterator[ClosedWindow] = {
       val wm = tv.getCurrentWatermarkInMs()
       val st0 = currentOrNull
       val st = foldEvents(st0, rows, wm, align)
@@ -258,7 +249,7 @@ object StatefulCep {
 
     override def handleExpiredTimer(
         key: (Int, String), tv: TimerValues,
-        timer: ExpiredTimerInfo): Iterator[CepResult] = {
+        timer: ExpiredTimerInfo): Iterator[ClosedWindow] = {
       val st = currentOrNull
       if (st == null) return Iterator.empty
       // The expired timer IS the one we registered, and it is gone.
@@ -276,12 +267,20 @@ object StatefulCep {
   def run(fannedOut: DataFrame,
       align: Alignment = Alignment.Epoch): Dataset[CepResult] = {
     implicit val eEnc = Encoders.product[CepEvent]
-    implicit val rEnc = Encoders.product[CepResult]
+    implicit val wEnc = Encoders.product[ClosedWindow]
     implicit val kEnc = Encoders.tuple(Encoders.scalaInt, Encoders.STRING)
-    fannedOut
+    judged(fannedOut
       .as[CepEvent]
       .groupByKey(e => (e.rule_id, e.group_id))
       .transformWithState(new CepProcessor(align, Encoders.product[KeyState]),
         TimeMode.EventTime(), OutputMode.Append())
+      .toDF())
   }
+
+  /** [[ClosedWindow]] rows judged by planAll's own spelling. */
+  private[graft] def judged(closed: DataFrame): Dataset[CepResult] =
+    CepQuery.judgeWindows(closed)
+      .select(col("rule_id"), col("group_id"), col("window_start"),
+        col("window_end"), col("result"))
+      .as(Encoders.product[CepResult])
 }

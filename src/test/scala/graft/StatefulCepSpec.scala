@@ -160,12 +160,17 @@ class StatefulCepSpec extends AnyFunSuite {
       .select(col("rule_id"), col("group_id"), unix_millis(col("window_start")),
         col("result"))
       .as[(Int, String, Long, Double)].collect().toSet
-    val folded = fannedOut(metrics, ruleFrame).as[CepEvent].collect()
+    val closed = fannedOut(metrics, ruleFrame).as[CepEvent].collect()
       .groupBy(e => (e.rule_id, e.group_id)).toSeq.flatMap { case (key, evs) =>
         val st = StatefulCep.foldEvents(null, evs.sortBy(_.ev_ms).iterator, Long.MinValue)
         StatefulCep.fireReady(key, st, Long.MaxValue)._1
-          .map(r => (r.rule_id, r.group_id, r.window_start, r.result))
-      }.toSet
+      }
+    // The processor fires every closed window unjudged; the threshold
+    // is run's shared CepQuery.judgeWindows, downstream.
+    assert(closed.size == rules.size * 3)
+    val folded = StatefulCep.judged(closed.toDF())
+      .select(col("rule_id"), col("group_id"), col("window_start"), col("result"))
+      .as[(Int, String, Long, Double)].collect().toSet
     assert(folded == batch)
 
     // Each rule emits all three windows or none, as its comparator says.
@@ -414,8 +419,10 @@ class StatefulCepSpec extends AnyFunSuite {
       fanned.permutations.foreach { order =>
         val st = StatefulCep.foldEvents(null, order.iterator, Long.MinValue,
           Alignment.FirstEvent)
-        val fired = StatefulCep.fireReady((rule.ruleId, "a"), st, Long.MaxValue)._1
-          .map(r => (r.window_start, r.result)).toSet
+        val fired = StatefulCep.judged(
+            StatefulCep.fireReady((rule.ruleId, "a"), st, Long.MaxValue)._1.toDF())
+          .select(col("window_start"), col("result"))
+          .as[(Long, Double)].collect().toSet
         val seen = order.map(_.ev_ms - t0).mkString(",")
         assert(st.anchor == anchor, s"${rule.windowType.name} anchor, order $seen")
         assert(fired == batch, s"${rule.windowType.name} windows, order $seen")

@@ -480,6 +480,66 @@ class StreamingEngineSpec extends AnyFunSuite {
     }
   }
 
+  test("a rule upsert while a window is open changes its aggregator and threshold: it fires once, judged by the newest rule") {
+    implicit val sqlCtx = spark.sqlContext
+    val tmp = java.nio.file.Files.createTempDirectory("graft_upsert_").toString
+    val srcDir = s"$tmp/in"
+    val ruleDir = s"$tmp/rules"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
+    def writeLines(name: String, evs: Seq[Ev]): Unit =
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(s"$srcDir/$name"),
+        evs.map(e => s"""{"eventTime":${e.ms},"t_group":"${e.g}","cpu_usage":${e.cpu}}""")
+          .mkString("\n").getBytes)
+    def ruleJson(agg: String, op: String, limit: Int): String =
+      s"""{"ruleId":1,"ruleState":"ACTIVE","windowType":"tumbling","windowMinutes":2,"windowSlideMinute":0,"groupingKeyNames":["t_group"],"aggregatorFunctionType":"$agg","aggregateFieldName":"cpu_usage","limitOperatorType":"$op","limit":$limit}"""
+    val ruleMem = MemoryStream[String]
+    val book = new RuleBook
+    val engine = new StreamingEngine(
+      spark,
+      () => graft.parse.Parsers.parseMetrics(
+        graft.streaming.CepRunner.fileLines(spark, srcDir)),
+      book,
+      StreamingEngine.SinkConfig(
+        format = "parquet", outputMode = "append",
+        checkpointRoot = Some(s"$tmp/ckpt"), pathRoot = Some(s"$tmp/out")))
+    val q = engine.startOnePassDynamic(ruleDir)
+    val control = engine.attachRuleStreamDynamic(
+      ruleMem.toDF().withColumnRenamed("value", "line"), ruleDir)
+    try {
+      ruleMem.addData(ruleJson("SUM", ">", 5))
+      control.processAllAvailable()
+      // First half under SUM > 5: business 9+2, work 1+5, both above.
+      writeLines("a1.jsonl", Seq(Ev(t0, "business", 9), Ev(t0 + 1000, "work", 1),
+        Ev(t0 + 2000, "business", 2), Ev(t0 + 3000, "work", 5)))
+      engine.awaitQuiescence()
+      ruleMem.addData(ruleJson("MAX", ">=", 9))
+      control.processAllAvailable()
+      // Second half, then a closer: under MAX >= 9, business (max 9,
+      // from the first half, at the limit) passes and work (max 8)
+      // fails, though both windows' sums (16, 14) pass SUM > 5.
+      writeLines("a2.jsonl", Seq(Ev(t0 + 4000, "business", 5),
+        Ev(t0 + 5000, "work", 8), Ev(t0 + 600000, "business", 1)))
+      engine.awaitQuiescence()
+      assert(q.isActive && q.exception.isEmpty)
+      val wsA = Math.floorDiv(t0, 120000L) * 120000L
+      val got = spark.read.parquet(s"$tmp/out/cep_one_pass")
+        .select("rule_id", "group_id", "window_start", "result")
+        .as[(Int, String, Long, Double)].collect().toSeq
+      assert(got == Seq((1, "1_business", wsA, 9.0)))
+    } finally {
+      control.stop(); engine.shutdown()
+    }
+  }
+
+  test("CepRunner fails on an unknown mode, naming both modes, before it starts anything") {
+    val e = intercept[IllegalArgumentException] {
+      graft.streaming.CepRunner.main(Array("localhost", "1", "1", "dynamc"))
+    }
+    assert(e.getMessage.contains("dynamc") && e.getMessage.contains("per-rule") &&
+      e.getMessage.contains("dynamic"))
+  }
+
   test("a rule with zero width or zero slide yields no windows; the one-pass query and the other rules run on") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_degenerate_").toString
     val srcDir = s"$tmp/in"
