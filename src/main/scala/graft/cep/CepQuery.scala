@@ -1,8 +1,11 @@
 package graft.cep
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import graft.cep.Metrics.RuleRow
 import graft.model._
 
 /** Compiles [[graft.model.Rule]]s into Spark logical plans.
@@ -44,7 +47,8 @@ import graft.model._
   * (ruleId, groupValues, windowStart) — exactly the reference's
   * `keyBy(groupId)` (CEPTaskRunner.java:46) — and Spark performs
   * partial (map-side) aggregation before it. Rules are broadcast, never
-  * shuffled. No per-group driver state, threads, or collect().
+  * shuffled. The one driver read is planAll's collect of the rule book
+  * (KBs of control data); no per-group driver state or threads.
   */
 object CepQuery {
 
@@ -162,8 +166,8 @@ object CepQuery {
     * windows on the `align`ed grid + CASE-dispatched agg and
     * comparator.
     *
-    * `ruleFrame` must have [[Metrics.RuleRowSchema]] columns (see
-    * [[Rules.toDF]]). Output:
+    * `ruleFrame` must have [[Metrics.RuleRow]]'s columns (see
+    * [[Metrics.rulesToDF]]). Output:
     * {{{ rule_id INT, group_id STRING, window_start TIMESTAMP,
     *     window_end TIMESTAMP, result DOUBLE }}}
     * Global windows emit NULL window bounds. `group_id` is the
@@ -242,30 +246,41 @@ object CepQuery {
     * no candidate is produced twice. Keyless rules (match everything)
     * pivot on a sentinel appended to every metric's key list.
     *
-    * The pivot is each rule's RAREST grouping key across the book
-    * (ties lexicographic): when rules are heterogeneous (half group by
-    * t_group, half by t_type), a fixed first-key pivot would hash
-    * every metric against every rule sharing that key, while the
-    * rarest key spreads the build side across distinct probe values.
-    * The statistics are two aggregations over the rule frame — KBs of
-    * control data on the broadcast side, never the metric stream.
+    * The rule book is KBs of control data (the reference broadcasts it
+    * to every task), so its ACTIVE rules are collected to the driver
+    * once — no Spark job for a local rule frame, one for any other —
+    * and the pivots are plain Scala over those [[Metrics.RuleRow]]s.
+    * A rule whose key list is null or holds a null can match no tag
+    * map and is left out. Each rule's pivot is its RAREST grouping key
+    * across the book: the key the fewest ACTIVE rules group by (a key
+    * listed twice counts twice), ties lexicographic. When rules are
+    * heterogeneous (half group by t_group, half by t_type), a fixed
+    * first-key pivot would hash every metric against every rule
+    * sharing that key, while the rarest key spreads the build side
+    * across distinct probe values. The broadcast side is those rows
+    * with `_pivot` filled in, a local relation, so its build subtree
+    * has no exchange (PlanShapeSpec's one-shuffle pin).
     *
-    * The metric side explodes only the pivot values SOME rule uses
-    * (an `array_intersect` against the collected distinct pivots
-    * before the explode): with a homogeneous book that is ONE row per
-    * metric — fewer row copies than both the naive explode (tag keys
-    * + sentinel per metric) and the old nested-loop join's R predicate
-    * evaluations. The tag-key array is materialized per METRIC before
-    * the join: inlining map_keys(tags) into the join input would
-    * re-extract it per exploded row. StreamingEngineSpec pins
+    * The metric side explodes only the pivot values SOME rule uses:
+    * with a homogeneous book that is ONE row per metric — fewer row
+    * copies than both the naive explode (tag keys + sentinel per
+    * metric) and the old nested-loop join's R predicate evaluations.
+    * The tag-key array is materialized per METRIC before the join:
+    * inlining map_keys(tags) into the join input would re-extract it
+    * per exploded row. StreamingEngineSpec pins
     * [[graft.streaming.DynamicRules.fanOut]] to this join. */
   private[graft] def fanOutJoin(metricFrame: DataFrame, ruleFrame: DataFrame): DataFrame = {
-    val rules = withRarestKeyPivot(
-      ruleFrame.filter(col("rule_state") === RuleState.Active.name))
-    // Driver-side control read, like the pivot histogram: the handful
-    // of distinct pivot values prunes the metric-side explode.
-    val pivotVals = rules.select(col("_pivot")).distinct()
-      .collect().map(_.getString(0)).sorted
+    val ruleRow = Encoders.product[RuleRow]
+    val book = ruleFrame.filter(col("rule_state") === RuleState.Active.name)
+      .as(ruleRow).collect().toSeq
+      .filter(r => r.grouping_key_names != null && !r.grouping_key_names.contains(null))
+    val freq = book.flatMap(_.grouping_key_names).groupMapReduce(identity)(_ => 1)(_ + _)
+    val pivots = book.map(_.grouping_key_names.minByOption(k => (freq(k), k))
+      .getOrElse(KeylessPivot))
+    val rules = metricFrame.sparkSession.createDataFrame(
+      book.zip(pivots).map { case (r, p) => Row.fromSeq(r.productIterator.toSeq :+ p) }.asJava,
+      ruleRow.schema.add("_pivot", StringType))
+    val pivotVals = pivots.distinct.sorted
     metricFrame.withColumn("_tag_keys", map_keys(col("tags")))
       .withColumn("_pivot",
         // Set-equal to array_intersect(tag_keys ++ [sentinel],
@@ -273,38 +288,12 @@ object CepQuery {
         // pivot literals with array_contains probes costs no per-row
         // hash-set allocation, and with a homogeneous book it is one
         // containment check per metric.
-        explode(filter(typedlit(pivotVals.toSeq),
+        explode(filter(typedlit(pivotVals),
           p => (p === KeylessPivot) || array_contains(col("_tag_keys"), p))))
       .join(broadcast(rules), "_pivot")
       .filter(graft.functions.array_contains_all(col("_tag_keys"),
         col("grouping_key_names")))
       .drop("_pivot", "_tag_keys")
-  }
-
-  /** Attach `_pivot` = the rule's grouping key with the lowest
-    * rule-frequency in the book (ties lexicographic; sentinel for
-    * keyless rules). The frequency histogram is collected to the
-    * driver — rules are KBs of CONTROL data (the same contract as
-    * RuleBook's collect), and keeping the statistic driver-side keeps
-    * the broadcast build subtree exchange-free, preserving the
-    * one-shuffle-per-plan promise PlanShapeSpec pins. The per-rule
-    * argmin folds over the (≤ a handful of) grouping keys with a
-    * literal frequency map. */
-  private def withRarestKeyPivot(activeRules: DataFrame): DataFrame = {
-    val freqs: Map[String, Long] = activeRules
-      .select(explode(col("grouping_key_names")).as("_k"))
-      .groupBy(col("_k")).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    if (freqs.isEmpty) // no keyed rule in the book
-      return activeRules.withColumn("_pivot", lit(KeylessPivot))
-    val freqMap = typedlit(freqs)
-    val best = aggregate(col("grouping_key_names"),
-      struct(lit(Long.MaxValue).as("f"), lit(KeylessPivot).as("k")),
-      (acc, k) => {
-        val cand = struct(element_at(freqMap, k).as("f"), k.as("k"))
-        when(cand < acc, cand).otherwise(acc)
-      })
-    activeRules.withColumn("_pivot", best.getField("k"))
   }
 
   /** planAll step 3 — the per-(metric, rule) columns every CEP plan

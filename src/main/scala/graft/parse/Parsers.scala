@@ -51,7 +51,9 @@ object Parsers {
     * `groupingKeyNames` may be either a JSON array or a bare string
     * (coerced to a one-element list). Comparator accepts both word and
     * symbol spellings (those of [[graft.model.CmpOp]]) and is normalized
-    * to the symbol. Invalid lines drop; every row reads `.as[RuleRow]`. */
+    * to the symbol. Invalid lines drop, among them a rule whose key list
+    * is missing (it would read `[null]`), malformed or holds a null;
+    * every row reads `.as[RuleRow]`. */
   def parseRules(lines: DataFrame, lineCol: String = "line"): DataFrame = {
     // Case-insensitive field access: parse to a map and lower-case keys.
     val m0 = from_json(col(lineCol), MapType(StringType, StringType))
@@ -88,9 +90,12 @@ object Parsers {
       // is the same observable behavior, surfaced earlier. Likewise a
       // windowed rule with a non-positive width/slide (the reference's
       // assigners divide by them; missing JSON fields default to 0)
-      // could only ever divide-by-zero — reject it here.
+      // could only ever divide-by-zero — reject it here, and a rule
+      // whose key list is null or holds a null too: no tag map contains
+      // a null key (Rule.java:63-66), so it could never match.
       .filter(col("rule_id").isNotNull && col("rule_state").isNotNull &&
         col("cmp_op").isNotNull && col("limit").isNotNull &&
+        forall(col("grouping_key_names"), _.isNotNull) &&
         col("agg_type").isin(AggType.all.map(_.name): _*) &&
         (col("window_type") === Global.name || col("window_minutes") > 0) &&
         (col("window_type") =!= Sliding.name || col("window_slide_minute") > 0))

@@ -312,10 +312,15 @@ class CepQuerySpec extends AnyFunSuite {
       timestamp_millis(lit(t0)).as("eventTime"),
       col("kv").as("tags"),
       map(lit("cpu_usage"), lit(1.0)).as("metrics"))
-    val got = CepQuery.fanOutJoin(metricDF, Metrics.rulesToDF(spark, rules))
-      .select(col("mid"), col("rule_id")).as[(Long, Int)].collect()
-    assert(got.length == got.toSet.size, "a (metric, rule) pair fanned out twice")
-    assert(got.toSet == expected)
+    // The book as a local relation, and as a frame whose collect runs
+    // Spark jobs (the rule book read must not depend on its storage).
+    val book = Metrics.rulesToDF(spark, rules)
+    for (ruleFrame <- Seq(book, book.repartition(3))) {
+      val got = CepQuery.fanOutJoin(metricDF, ruleFrame)
+        .select(col("mid"), col("rule_id")).as[(Long, Int)].collect()
+      assert(got.length == got.toSet.size, "a (metric, rule) pair fanned out twice")
+      assert(got.toSet == expected)
+    }
   }
 
   test("rule match requires ALL grouping keys present in tags (fan-out join predicate)") {
@@ -325,5 +330,67 @@ class CepQuerySpec extends AnyFunSuite {
     val rules = Metrics.rulesToDF(spark, Seq(demoRule, needsMissingTag.copy(ruleId = 9)))
     val all = CepQuery.planAll(frame, rules)
     assert(all.select("rule_id").distinct().as[Int].collect().toSet == Set(1))
+  }
+
+  test("building planAll starts no Spark job over a local rule book, at most one over any other") {
+    // 64 ACTIVE rules with mixed key sets, so the rarest-key pivot has
+    // work to do. The book is read once on the driver while the plan is
+    // built: a local relation is collected without a job, and any other
+    // frame with the one job of its collect.
+    val rules = (1 to 64).map { i =>
+      demoRule.copy(ruleId = i,
+        groupingKeyNames = if (i % 2 == 0) Seq(s"t_k${i % 8}") else Seq(s"t_k${i % 8}", "t_group"))
+    }
+    val local = Metrics.rulesToDF(spark, rules)
+    val nonLocal = spark.createDataset(
+      spark.sparkContext.parallelize(rules.map(Metrics.toRow), 2)).toDF()
+    val frame = metricFrame(demoEvents)
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    def jobsWhile(group: String)(body: => Unit): Int = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      // Listener events arrive in order: once a marker job's start is
+      // seen, every job the body started has been counted.
+      val marker = s"$group-marker"
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains(marker), "listener never saw the marker job")
+      groups.toArray.count(_ == group)
+    }
+    sc.addSparkListener(listener)
+    try {
+      for (align <- Seq(Alignment.Epoch, Alignment.FirstEvent)) {
+        assert(jobsWhile(s"planAll-local-$align")(CepQuery.planAll(frame, local, align)) == 0)
+        assert(jobsWhile(s"planAll-rdd-$align")(CepQuery.planAll(frame, nonLocal, align)) <= 1)
+      }
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a rule line without groupingKeyNames drops at parse; planAll over the book keeps the valid rule") {
+    // A missing key list would parse as [null]: no tag map holds a
+    // null key (Rule.java:63-66), so the rule can never apply, and it
+    // must not stop planAll for the rest of the book — parsed, or
+    // handed to planAll as a frame that skipped the parser.
+    def line(id: Int, keys: String): String =
+      s"""{"ruleId":$id,"ruleState":"ACTIVE","windowType":"tumbling","windowMinutes":2,"windowSlideMinute":0,$keys"aggregatorFunctionType":"SUM","aggregateFieldName":"cpu_usage","limitOperatorType":">","limit":11}"""
+    def run(rules: DataFrame): Set[(Int, String, Long, Double)] =
+      CepQuery.planAll(metricFrame(demoEvents), rules)
+        .select(col("rule_id"), col("group_id"), unix_millis(col("window_start")),
+          col("result"))
+        .as[(Int, String, Long, Double)].collect().toSet
+    def parsed(lines: String*): DataFrame = graft.parse.Parsers.parseRules(lines.toDF("line"))
+    val valid = line(1, """"groupingKeyNames":["t_group"],""")
+    val expected = run(parsed(valid))
+    assert(expected.map(r => (r._2, r._4)) == Set(("1_business", 16.0), ("1_work", 16.0)))
+    assert(run(parsed(valid, line(2, ""))) == expected)
+    assert(run(Metrics.rulesToDF(spark, Seq(demoRule,
+      demoRule.copy(ruleId = 2, groupingKeyNames = Seq(null))))) == expected)
   }
 }

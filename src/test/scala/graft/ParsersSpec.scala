@@ -63,7 +63,12 @@ class ParsersSpec extends AnyFunSuite {
     val lines = Seq(
       """{"ruleId":1,"ruleState":"ACTIVE","windowType":"tumbling","windowMinutes":1,"windowSlideMinute":0,"groupingKeyNames":["t_a"],"aggregatorFunctionType":"SUM","aggregateFieldName":"v","limitOperatorType":"APPROXIMATELY","limit":1}""",
       """{"ruleId":2,"ruleState":"ACTIVE","windowType":"tumbling","windowMinutes":1,"windowSlideMinute":0,"groupingKeyNames":["t_a"],"aggregatorFunctionType":"MEDIAN","aggregateFieldName":"v","limitOperatorType":">","limit":1}""",
-      """{"ruleId":3,"ruleState":"ACTIVE","windowType":"tumbling","windowMinutes":1,"windowSlideMinute":0,"groupingKeyNames":["t_a"],"aggregatorFunctionType":"MAX","aggregateFieldName":"v","limitOperatorType":">","limit":1}""")
+      """{"ruleId":3,"ruleState":"ACTIVE","windowType":"tumbling","windowMinutes":1,"windowSlideMinute":0,"groupingKeyNames":["t_a"],"aggregatorFunctionType":"MAX","aggregateFieldName":"v","limitOperatorType":">","limit":1}""",
+      // Nor can a rule whose key list is missing (it would read
+      // [null]), malformed, or holds a null: no tag map has a null key.
+      """{"ruleId":4,"ruleState":"ACTIVE","windowType":"tumbling","windowMinutes":1,"windowSlideMinute":0,"aggregatorFunctionType":"MAX","aggregateFieldName":"v","limitOperatorType":">","limit":1}""",
+      """{"ruleId":5,"ruleState":"ACTIVE","windowType":"tumbling","windowMinutes":1,"windowSlideMinute":0,"groupingKeyNames":"[t_a","aggregatorFunctionType":"MAX","aggregateFieldName":"v","limitOperatorType":">","limit":1}""",
+      """{"ruleId":6,"ruleState":"ACTIVE","windowType":"tumbling","windowMinutes":1,"windowSlideMinute":0,"groupingKeyNames":["t_a",null],"aggregatorFunctionType":"MAX","aggregateFieldName":"v","limitOperatorType":">","limit":1}""")
       .toDF("line")
     val kept = Parsers.parseRules(lines).select("rule_id").as[Int].collect().toSeq
     assert(kept == Seq(3))
