@@ -293,11 +293,12 @@ object SparkEntry {
   private def parseMetricQuery(spark: SparkSession, dir: String): DataFrame = {
     // Spread the narrow events scan before the JSON round-trip (r15):
     // serialize + key-routing parse is this query's entire cost and is
-    // pure per-row projection (bit-identical under any partitioning;
-    // no aggregation anywhere downstream), so unlike the CEP WINDOW
-    // queries — whose float sums must keep their deterministic
-    // single-exchange input order — it is safe to parallelize. No-op
-    // at scale (Spread.ifNarrow).
+    // pure per-row projection, bit-identical under any partitioning.
+    // (Partitioning cannot change the CEP window queries' results
+    // either: SUM/AVG add exact decimal(38,6) values and MIN/MAX ignore
+    // order, which PlanShapeSpec's repartition-invariance spec pins;
+    // planAll spreads its own narrow input.) No-op at scale
+    // (Spread.ifNarrow).
     val lines = graft.ops.Spread.ifNarrow(events(spark, dir), col("event_id"))
       .select(
         to_json(struct(

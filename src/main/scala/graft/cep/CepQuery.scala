@@ -32,8 +32,8 @@ import graft.model._
   *    the reference's 1→N fan-out, windows are computed arithmetically
   *    (width is per-rule *data*, so the built-in `window()` cannot be
   *    used), and agg/comparator dispatch is a `CASE` expression. At
-  *    100 TB this is the plan you want: one scan + one shuffle for the
-  *    whole rule set, instead of N scans.
+  *    100 TB this is the plan you want: one scan + one aggregation
+  *    shuffle for the whole rule set, instead of N scans.
   *
   * Arithmetic windows (planAll, and planRule under first-event
   * alignment) come from one native function, `window_starts`, whose
@@ -43,12 +43,14 @@ import graft.model._
   * function per event, and its closed windows become results through
   * planAll's own [[judgeWindows]].
   *
-  * Scale posture: the only shuffle is the final hash aggregation on
+  * Scale posture: the only shuffle at scale is the final hash aggregation on
   * (ruleId, groupValues, windowStart) — exactly the reference's
   * `keyBy(groupId)` (CEPTaskRunner.java:46) — and Spark performs
   * partial (map-side) aggregation before it. Rules are broadcast, never
   * shuffled. The one driver read is planAll's collect of the rule book
   * (KBs of control data); no per-group driver state or threads.
+  * Streams shuffle only there too; a NARROW batch input (fewer splits
+  * than cores) is spread across the cores first (see [[planAll]]).
   */
 object CepQuery {
 
@@ -175,16 +177,27 @@ object CepQuery {
     * Under [[Alignment.FirstEvent]] each (rule, group) derives its grid
     * origin from its earliest event; the window function computing it
     * hash-partitions on (rule, group), which the final aggregation
-    * reuses, so the plan still shuffles exactly once. That spelling is
-    * batch-only (streams forbid plain window functions): on streams,
-    * first-event alignment is [[graft.streaming.StatefulCep.run]]'s
-    * argument.
+    * reuses, so the plan still has exactly one aggregation shuffle.
+    * That spelling is batch-only (streams forbid plain window
+    * functions): on streams, first-event alignment is
+    * [[graft.streaming.StatefulCep.run]]'s argument.
+    *
+    * A narrow batch `metricFrame` (only narrow nodes, fewer splits than
+    * `defaultParallelism`: a one-file JSON input is one split) is
+    * hash-spread on `eventTime`, the one scalar every metric row has,
+    * before the fan-out ([[graft.ops.Spread.ifNarrow]]). Otherwise the
+    * 1→N fan-out, the window explode and the partial aggregation all
+    * run in that one task. A wide input and a stream get no spread.
+    * The spread changes no result: SUM/AVG add exact decimals
+    * and MIN/MAX ignore order (PlanShapeSpec's repartition-invariance
+    * spec).
     */
   def planAll(metricFrame: DataFrame, ruleFrame: DataFrame,
       align: Alignment = Alignment.Epoch): DataFrame =
     aggregateAndEmit(assignWindows(
-      prepareFanned(fanOutJoin(metricFrame, ruleFrame)), align,
-      Seq(col("rule_id"), col("group_vals"))))
+      prepareFanned(fanOutJoin(
+        graft.ops.Spread.ifNarrow(metricFrame, col("eventTime")), ruleFrame)),
+      align, Seq(col("rule_id"), col("group_vals"))))
 
   /** Window assignment, arithmetically (width/slide are per-row data):
     * one native call per row computes the starts covering `ev_ms`
@@ -259,7 +272,7 @@ object CepQuery {
     * sharing that key, while the rarest key spreads the build side
     * across distinct probe values. The broadcast side is those rows
     * with `_pivot` filled in, a local relation, so its build subtree
-    * has no exchange (PlanShapeSpec's one-shuffle pin).
+    * has no exchange (PlanShapeSpec's one-aggregation-shuffle pin).
     *
     * The metric side explodes only the pivot values SOME rule uses:
     * with a homogeneous book that is ONE row per metric — fewer row

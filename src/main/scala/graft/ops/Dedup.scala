@@ -373,23 +373,30 @@ object Dedup {
       .filter(col("containment") >= threshold)
   }
 
-  /** The shingle-keyed candidate SELF-joins take a `SHUFFLE_HASH`
+  /** The df-capped branch's candidate SELF-join takes a `SHUFFLE_HASH`
     * hint (r15 optimization, guide §3.1): a shuffled-hash join skips
     * the per-partition sort a sort-merge join pays on BOTH sides of the
-    * candidate generation — the family's largest shuffle — and its
-    * build side is one AQE-sized post-shuffle partition of the shingle
-    * index (advisory-bytes bounded, skew-split still applies to SHJ).
-    * Measured on the alternated-JVM A/B (see OPTIMIZATION_r15.md):
-    * ngram-family rows improve double-digit percent with no
-    * incremental/e2e regression — the r14 GLOBAL preferSortMergeJoin
-    * experiment was mixed precisely because it also rewrote the
-    * write-bound rows, which this per-site hint leaves alone. */
+    * candidate generation — the family's largest shuffle. Its build
+    * side is one post-shuffle partition of the shingle index, held in
+    * memory and never spilled. AQE coalesces partitions by bytes but
+    * splits one only past its skew threshold (256 MB and 5× the median
+    * by default), so below that a hot shingle's rows all land in one
+    * build partition: what bounds the build side is the cap, since
+    * every shingle left in the capped index has at most `maxShingleDf`
+    * rows. The uncapped branch has no such bound (a boilerplate
+    * shingle's every occurrence lands in one build partition), so it
+    * keeps the sort-merge join, which spills. Measured on the alternated-JVM A/B
+    * (see OPTIMIZATION_r15.md): ngram-family rows, all capped, improve
+    * double-digit percent with no incremental/e2e regression — the r14
+    * GLOBAL preferSortMergeJoin experiment was mixed precisely because
+    * it also rewrote the write-bound rows, which this per-site hint
+    * leaves alone. */
   private def pairsFromIndex(sh: DataFrame, threshold: Double,
       maxShingleDf: Int, persist: Persistence,
       maxBroadcastHotShingles: Long): DataFrame = {
     if (maxShingleDf == Int.MaxValue) {
       sh.as("x")
-        .join(sh.as("y").hint("SHUFFLE_HASH"),
+        .join(sh.as("y"),
           col("x.shingle") === col("y.shingle") && col("x.doc_id") < col("y.doc_id"))
         .groupBy(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
         .agg(count(lit(1)).as("n_common"),

@@ -373,6 +373,72 @@ class CepQuerySpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
+  test("planAll spreads only a narrow batch metric input across the cores before its fan-out") {
+    // backfill_batch's shape: JSON lines in ONE text file, parsed by
+    // Parsers.parseMetrics. The file is one input split, so without a
+    // spread the scan's single task would also run the 1→N fan-out,
+    // the window explode and the partial aggregation.
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted,
+      SparkListenerStageSubmitted}
+    import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+    val cores = spark.sparkContext.defaultParallelism
+    val json = (0 until 2000).map(i =>
+      s"""{"eventTime":${t0 + i * 997L},"t_group":"g${i % 16}","cpu_usage":${i % 10}}""")
+    val file = java.nio.file.Files.createTempDirectory("cep-narrow").resolve("metrics.jsonl")
+    java.nio.file.Files.write(file, json.asJava)
+    def parsed(lines: DataFrame): DataFrame = graft.parse.Parsers.parseMetrics(lines)
+    val metrics = parsed(spark.read.text(file.toString).select(col("value").as("line")))
+    val rules = Metrics.rulesToDF(spark, Seq(demoRule, demoRule.copy(ruleId = 2,
+      windowType = WindowType.Sliding, windowMinutes = 3, windowSlideMinute = 1,
+      aggregatorFunctionType = AggType.Avg, limitOperatorType = CmpOp.Ge, limit = BigDecimal(0))))
+
+    // Every stage the collect runs, in completion order: (tasks,
+    // input records, shuffle records written).
+    val group = "planAll-narrow"
+    val ours = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Long)]()
+    val spread = SparkTestSession.listening(group, new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          ours.add(e.stageInfo.stageId)
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (ours.contains(e.stageInfo.stageId)) {
+          val m = e.stageInfo.taskMetrics
+          done.add((e.stageInfo.numTasks, m.inputMetrics.recordsRead,
+            m.shuffleWriteMetrics.recordsWritten))
+        }
+    })(CepQuery.planAll(metrics, rules).collect().toSet)
+    val stages = done.asScala.toSeq
+    val scan = stages.filter(_._2 > 0)
+    assert(scan.map(_._1) == Seq(1), s"the text scan is not one task: $stages")
+    // The fan-out and partial aggregation run in the stage that writes
+    // the aggregation's shuffle: the last map stage to finish.
+    val fanOut = stages.filter(_._3 > 0).last
+    assert(fanOut._1 == cores,
+      s"the fan-out ran ${fanOut._1} tasks, not $cores: $stages")
+    assert(spread.nonEmpty)
+
+    // An input already at least as wide as the cores plans no spread
+    // (its only REPARTITION_BY_NUM is its own round-robin) and gives
+    // the same windows.
+    val wide = CepQuery.planAll(metrics.repartition(2 * cores), rules)
+    val widePlan = wide.queryExecution.executedPlan.toString
+    assert("Exchange [^\n]*REPARTITION_BY_NUM".r.findAllIn(widePlan).size == 1 &&
+      !widePlan.contains("hashpartitioning(eventTime"),
+      s"a wide metric input was spread again:\n$widePlan")
+    assert(wide.collect().toSet == spread)
+
+    // A stream is never spread (StreamBench runs planAll on streams).
+    implicit val sqlCtx = spark.sqlContext
+    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[String]
+    val stream = CepQuery.planAll(parsed(mem.toDF().select(col("value").as("line"))), rules)
+    assert(stream.isStreaming)
+    assert(stream.queryExecution.logical.collectFirst {
+      case r: RepartitionByExpression => r }.isEmpty,
+      s"a streaming metric input was spread:\n${stream.queryExecution.logical}")
+  }
+
   test("a rule line without groupingKeyNames drops at parse; planAll over the book keeps the valid rule") {
     // A missing key list would parse as [null]: no tag map holds a
     // null key (Rule.java:63-66), so the rule can never apply, and it

@@ -14,12 +14,17 @@ import org.scalatest.funsuite.AnyFunSuite
   *    LSH twin is the scale path). The CEP rule fan-out is NOT in this
   *    set anymore: the pivot-key spelling makes it a BroadcastHashJoin
   *    (O(M·R) predicate loop → O(M + matches) hash probes);
-  *  - every one-pass/static CEP plan shuffles exactly once (the hash
-  *    aggregation keyed like the reference's keyBy(groupId)); the
-  *    stateless parse queries shuffle zero times. This pins both the
-  *    single-shuffle promise AND that first-event alignment's window
-  *    function reuses the aggregation's partitioning instead of adding
-  *    an exchange.
+  *  - every one-pass/static CEP plan has exactly one aggregation
+  *    shuffle (the hash aggregation keyed like the reference's
+  *    keyBy(groupId)); the stateless parse queries have none. This pins
+  *    both the single-shuffle promise AND that first-event alignment's
+  *    window function reuses the aggregation's partitioning instead of
+  *    adding an exchange. A spread of a narrow scan is counted apart
+  *    and allowed only on the scan, and only for the parse queries and
+  *    planAll;
+  *  - only the df-capped near-dup candidate self-join is a
+  *    ShuffledHashJoin: its non-spilling build side is bounded by the
+  *    cap, which the uncapped branch does not have.
   */
 class PlanShapeSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -284,6 +289,44 @@ class PlanShapeSpec extends AnyFunSuite {
       s"dedup_minhash verification joins drifted off sort-merge:\n$p")
   }
 
+  test("only the df-capped near-dup candidate self-join takes the SHUFFLE_HASH hint") {
+    // A shuffled-hash join holds its build side, one post-shuffle
+    // partition, in memory without spilling. The df cap bounds every
+    // shingle's rows there by maxShingleDf; without the cap a hot
+    // (boilerplate) shingle's every occurrence is one build side, so
+    // the uncapped branch keeps the spilling sort-merge join. Broadcast
+    // is off while both run: the sf0.001 index is small enough to
+    // broadcast, an index at scale is not. The capped branch's
+    // candidate join runs inside the checkpoint of its candidates, so
+    // every plan a run starts is read from its SQL execution event.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val sqlStarts = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => started.add(s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    def plansOf(maxShingleDf: Int): String = {
+      started.clear()
+      SparkTestSession.listening("dedup-hint", sqlStarts)(
+        graft.ops.Dedup.ngramJaccardPairs(docs, 3, 0.8, maxShingleDf).count())
+      started.toArray.mkString("\n")
+    }
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(threshold)
+    val (uncapped, capped) = try {
+      spark.conf.set(threshold, "-1")
+      (plansOf(Int.MaxValue), plansOf(10))
+    } finally saved.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
+    assert(uncapped.contains("SortMergeJoin") && !uncapped.contains("ShuffledHashJoin"),
+      s"uncapped ngramJaccardPairs: the candidate join is not sort-merge:\n$uncapped")
+    assert(capped.contains("ShuffledHashJoin"),
+      s"capped ngramJaccardPairs lost its shuffled-hash candidate join:\n$capped")
+  }
+
   test("hotKeys computes its total from the counts frame via AQE exchange reuse (one input pass)") {
     // The share denominator re-aggregates the groupBy output instead of
     // re-scanning the raw input; the two plan branches sit on the same
@@ -381,34 +424,41 @@ class PlanShapeSpec extends AnyFunSuite {
       s"join_asof: ${exchanges("join_asof")} exchanges")
   }
 
-  test("CEP plans shuffle exactly once (parse queries: zero data shuffles)") {
-    // r15: cep_parse_metric spreads its narrow scan (pure per-row
-    // JSON round-trip — partitioning-independent), so parse queries
-    // may carry ONE REPARTITION_BY_NUM exchange directly on the scan.
-    // The WINDOW queries carry no spread: their one aggregation
-    // exchange already redistributes the fanned-out rows by
-    // (rule, group, window), so a spread above it would shuffle the
-    // metric stream a second time. This is a cost pin, not a
-    // correctness one: SUM/AVG add exact decimal(38,6) values and
-    // MIN/MAX ignore order, so results do not depend on partitioning
-    // (the repartition-invariance spec below pins that).
-    val shuffleCounts = plans.view.filterKeys(_.startsWith("cep_")).mapValues(p =>
-      "Exchange hashpartitioning[^\n]*".r.findAllIn(p)
-        .count(!_.contains("REPARTITION_BY_NUM"))).toMap
-    shuffleCounts.foreach { case (name, n) =>
+  test("CEP plans: one aggregation shuffle; planAll spreads only on the metric scan") {
+    // Every CEP window query has exactly one hash exchange: the
+    // aggregation keyed like the reference's keyBy(groupId), which
+    // first-event alignment's window function reuses. The parse
+    // queries have none. A spread (REPARTITION_BY_NUM, planned only
+    // over a narrow batch input) is counted apart:
+    //  - the parse queries and planAll (cep_multi_rule*) may carry one,
+    //    on the metric scan with no join, generate or aggregate below
+    //    it. A narrow input would otherwise run planAll's 1→N fan-out,
+    //    window explode and partial aggregation in one task; on a wide
+    //    input there is no spread at all;
+    //  - planRule's rows go straight from the scan into the
+    //    aggregation's map side with no fan-out to spread, so a spread
+    //    there would only shuffle the metric stream twice.
+    // The pins are about cost, not correctness: SUM/AVG add exact
+    // decimal(38,6) values and MIN/MAX ignore order, so results do not
+    // depend on partitioning (the repartition-invariance spec below).
+    val cep = plans.keys.filter(_.startsWith("cep_"))
+    for (name <- cep) {
+      val n = "Exchange hashpartitioning[^\n]*".r.findAllIn(plans(name))
+        .count(!_.contains("REPARTITION_BY_NUM"))
       val expected = if (name.startsWith("cep_parse")) 0 else 1
       assert(n == expected, s"$name: $n shuffle exchanges, expected $expected")
-    }
-    plans.keys.filter(_.startsWith("cep_")).foreach { name =>
-      if (name.startsWith("cep_parse")) assertSpreadOnScanOnly(name)
+      if (name.startsWith("cep_parse") || name.startsWith("cep_multi_rule"))
+        assertSpreadOnScanOnly(name)
       else assert(!plans(name).contains("REPARTITION_BY_NUM"),
-        s"$name: a spread exchange appeared upstream of a CEP window " +
+        s"$name: a spread exchange appeared upstream of a planRule " +
           s"aggregation — the metric stream would be shuffled twice:\n${plans(name)}")
     }
+    assert(cep.count(_.startsWith("cep_multi_rule")) == 2,
+      "the planAll gates were renamed; this pin no longer reaches them")
   }
 
   test("CEP window results are invariant under repartitioning the metric frame (x1, x4, x32; 3 runs)") {
-    // The invariant behind the no-spread pin above: exact decimal sums
+    // The invariant behind the spread pins above: exact decimal sums
     // and order-free MIN/MAX make every window result independent of
     // how the metric rows are partitioned and in which order the
     // aggregation sees them — in both alignments and both plans.
