@@ -47,26 +47,32 @@ import graft.model._
   * (ruleId, groupValues, windowStart) — exactly the reference's
   * `keyBy(groupId)` (CEPTaskRunner.java:46) — and Spark performs
   * partial (map-side) aggregation before it. Rules are broadcast, never
-  * shuffled. The one driver read is planAll's collect of the rule book
-  * (KBs of control data); no per-group driver state or threads.
-  * Streams shuffle only there too; a NARROW batch input (fewer splits
-  * than cores) is spread across the cores first (see [[planAll]]).
+  * shuffled: into the fan-out, and once more after the aggregate,
+  * where each window's rule parameters (constant per rule id) join
+  * back on `rule_id` instead of riding in the aggregation key. The one
+  * driver read is planAll's collect of the rule book (KBs of control
+  * data); no per-group driver state or threads. Streams shuffle only
+  * there too; a NARROW batch input (fewer splits than cores) is spread
+  * across the cores first (see [[planAll]]).
   */
 object CepQuery {
 
-  /** Decimal type used for exact, order-independent SUM/AVG.
-    * Summing doubles is order-dependent across partitions; summing
-    * decimals is exact, so results are deterministic under any
-    * parallelism — required both for the DuckDB oracle hash-match and
-    * for run-to-run stability on a real cluster. */
+  /** Decimal type of exact, order-independent sums. Summing doubles is
+    * order-dependent across partitions; summing decimals is exact, so
+    * results are deterministic under any parallelism — required both
+    * for the DuckDB oracle hash-match and for run-to-run stability on a
+    * real cluster. The CEP plans' SUM is `sum(cast(v AS SumDecimal))`
+    * computed by [[graft.functions.limb_sum]]; other queries spell the
+    * cast. */
   val SumDecimal = "decimal(38,6)"
 
   /** `metrics['field']` as a double column. */
   def measure(field: String): Column = element_at(col("metrics"), field)
 
-  /** A window's partial aggregates — SUM (pre-cast to decimal for
-    * exactness, returned as DOUBLE), COUNT, MIN and MAX. Every
-    * [[AggType]]'s result is a function of them. */
+  /** A window's partial aggregates — SUM (exactly
+    * `sum(cast(v AS decimal(38,6)))` through the fixed-width
+    * [[graft.functions.limb_sum]], returned as DOUBLE), COUNT, MIN and
+    * MAX. Every [[AggType]]'s result is a function of them. */
   private final case class Partials(sumV: Column, cnt: Column,
       minV: Column, maxV: Column) {
     def result(agg: AggType): Column = agg match {
@@ -78,7 +84,7 @@ object CepQuery {
   }
 
   private def partials(v: Column): Partials =
-    Partials(sum(v.cast(SumDecimal)).cast("double"), count(v), min(v), max(v))
+    Partials(graft.functions.limb_sum(v).cast("double"), count(v), min(v), max(v))
 
   /** The aggregate column for a given agg type over value column `v`
     * (result is DOUBLE). */
@@ -191,13 +197,22 @@ object CepQuery {
     * The spread changes no result: SUM/AVG add exact decimals
     * and MIN/MAX ignore order (PlanShapeSpec's repartition-invariance
     * spec).
+    *
+    * The ACTIVE rules' ids must be unique: a window's rule parameters
+    * join back on `rule_id` after the aggregate. A book that repeats
+    * one fails here, while the plan is built, naming the repeated ids.
     */
   def planAll(metricFrame: DataFrame, ruleFrame: DataFrame,
-      align: Alignment = Alignment.Epoch): DataFrame =
+      align: Alignment = Alignment.Epoch): DataFrame = {
+    val book = activeBook(ruleFrame)
+    val repeated = book.groupBy(_.rule_id).collect { case (id, rs) if rs.size > 1 => id }
+    require(repeated.isEmpty,
+      s"planAll: ACTIVE rule ids must be unique; repeated: ${repeated.toSeq.sorted.mkString(", ")}")
     aggregateAndEmit(assignWindows(
       prepareFanned(fanOutJoin(
-        graft.ops.Spread.ifNarrow(metricFrame, col("eventTime")), ruleFrame)),
-      align, Seq(col("rule_id"), col("group_vals"))))
+        graft.ops.Spread.ifNarrow(metricFrame, col("eventTime")), book)),
+      align, Seq(col("rule_id"), col("group_vals"))), book)
+  }
 
   /** Window assignment, arithmetically (width/slide are per-row data):
     * one native call per row computes the starts covering `ev_ms`
@@ -260,9 +275,9 @@ object CepQuery {
     * pivot on a sentinel appended to every metric's key list.
     *
     * The rule book is KBs of control data (the reference broadcasts it
-    * to every task), so its ACTIVE rules are collected to the driver
-    * once — no Spark job for a local rule frame, one for any other —
-    * and the pivots are plain Scala over those [[Metrics.RuleRow]]s.
+    * to every task), so its ACTIVE rules arrive collected on the driver
+    * ([[activeBook]]) and the pivots are plain Scala over those
+    * [[Metrics.RuleRow]]s.
     * A rule whose key list is null or holds a null can match no tag
     * map and is left out. Each rule's pivot is its RAREST grouping key
     * across the book: the key the fewest ACTIVE rules group by (a key
@@ -282,17 +297,15 @@ object CepQuery {
     * inlining map_keys(tags) into the join input would re-extract it
     * per exploded row. StreamingEngineSpec pins
     * [[graft.streaming.DynamicRules.fanOut]] to this join. */
-  private[graft] def fanOutJoin(metricFrame: DataFrame, ruleFrame: DataFrame): DataFrame = {
-    val ruleRow = Encoders.product[RuleRow]
-    val book = ruleFrame.filter(col("rule_state") === RuleState.Active.name)
-      .as(ruleRow).collect().toSeq
+  private[graft] def fanOutJoin(metricFrame: DataFrame, activeRules: Seq[RuleRow]): DataFrame = {
+    val book = activeRules
       .filter(r => r.grouping_key_names != null && !r.grouping_key_names.contains(null))
     val freq = book.flatMap(_.grouping_key_names).groupMapReduce(identity)(_ => 1)(_ + _)
     val pivots = book.map(_.grouping_key_names.minByOption(k => (freq(k), k))
       .getOrElse(KeylessPivot))
     val rules = metricFrame.sparkSession.createDataFrame(
       book.zip(pivots).map { case (r, p) => Row.fromSeq(r.productIterator.toSeq :+ p) }.asJava,
-      ruleRow.schema.add("_pivot", StringType))
+      ruleRowEncoder.schema.add("_pivot", StringType))
     val pivotVals = pivots.distinct.sorted
     metricFrame.withColumn("_tag_keys", map_keys(col("tags")))
       .withColumn("_pivot",
@@ -309,6 +322,19 @@ object CepQuery {
       .drop("_pivot", "_tag_keys")
   }
 
+  /** Derived once: deriving a product encoder runs Scala reflection,
+    * which every planAll build would pay again. */
+  private lazy val ruleRowEncoder = Encoders.product[RuleRow]
+
+  /** The ACTIVE rules of a rule frame, collected to the driver: no
+    * Spark job for a local rule frame, one for any other. */
+  private[graft] def activeBook(ruleFrame: DataFrame): Seq[RuleRow] =
+    ruleFrame.filter(col("rule_state") === RuleState.Active.name)
+      .as(ruleRowEncoder).collect().toSeq
+
+  /** A rule's window width in ms. */
+  private val wMs: Column = (col("window_minutes").cast("long") * 60000L).as("w_ms")
+
   /** planAll step 3 — the per-(metric, rule) columns every CEP plan
     * reads: rule parameters, window width/slide in ms, the group's tag
     * values, event time and the measure `v`. A metric lacking the
@@ -322,7 +348,7 @@ object CepQuery {
         col("rule_id"),
         col("agg_type"), col("cmp_op"), col("limit"),
         col("window_type"),
-        (col("window_minutes").cast("long") * 60000L).as("w_ms"),
+        wMs,
         (col("window_slide_minute").cast("long") * 60000L).as("s_ms"),
         graft.functions.map_values_for_keys(col("tags"), col("grouping_key_names"))
           .as("group_vals"),
@@ -336,19 +362,23 @@ object CepQuery {
   private[graft] val groupId: Column =
     concat_ws("_", col("rule_id").cast("string"), col("group_vals"))
 
-  /** planAll steps 4-5 — the single hash-aggregation shuffle keyed
-    * like the reference's keyBy(groupId) (rule attributes ride along,
-    * constant per rule_id), the window's partials, then
+  /** planAll steps 4-5 — the single hash-aggregation shuffle on
+    * (rule_id, group_vals, ws_ms), keyed like the reference's
+    * keyBy(groupId), and the window's partials. The rule parameters
+    * [[judgeWindows]] reads (`agg_type`, `cmp_op`, `limit`) and `w_ms`
+    * are constant per rule, so they stay out of the aggregation key:
+    * they join back from the broadcast `book` on `rule_id`. Then
     * [[judgeWindows]] and the output projection. */
-  private def aggregateAndEmit(windowed: DataFrame): DataFrame = {
+  private def aggregateAndEmit(windowed: DataFrame, book: Seq[RuleRow]): DataFrame = {
     val p = partials(col("v"))
     val agged = windowed
-      .groupBy(col("rule_id"), col("group_vals"), col("ws_ms"),
-        col("agg_type"), col("cmp_op"), col("limit"), col("w_ms"))
+      .groupBy(col("rule_id"), col("group_vals"), col("ws_ms"))
       .agg(p.sumV.as("sum_v"), p.cnt.as("cnt_v"), p.minV.as("min_v"),
         p.maxV.as("max_v"))
+    val params = windowed.sparkSession.createDataset(book)(ruleRowEncoder)
+      .select(col("rule_id"), col("agg_type"), col("cmp_op"), col("limit"), wMs)
 
-    judgeWindows(agged).select(
+    judgeWindows(agged.join(broadcast(params), "rule_id")).select(
       col("rule_id"),
       groupId.as("group_id"),
       timestamp_millis(col("ws_ms")).as("window_start"),

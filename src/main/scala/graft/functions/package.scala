@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.sqrt
-import org.apache.spark.sql.graft.{AsciiClassCountsColumns, AudioFpColumns, BpeEncodeColumns, BpeTokenCountColumns, DhashColumns, HashedTokenCountsColumns, CepExprColumns, CompressRatioColumns, GramStatsColumns, LshBucketsColumns, MarkerCountsColumns, MatrixMaxCosColumns, MatrixRowDotColumns, MetricRouteColumns, MinhashColumns, RollingHashColumns, SimhashColumns, SparseLongDotColumns, TopKColumns, TrigramScoresColumns, VecDotColumns, VecUnitColumns, WordShinglesColumns}
+import org.apache.spark.sql.graft.{AsciiClassCountsColumns, AudioFpColumns, BpeEncodeColumns, BpeTokenCountColumns, DhashColumns, HashedTokenCountsColumns, CepExprColumns, LimbSumColumns, CompressRatioColumns, GramStatsColumns, LshBucketsColumns, MarkerCountsColumns, MatrixMaxCosColumns, MatrixRowDotColumns, MetricRouteColumns, MinhashColumns, RollingHashColumns, SimhashColumns, SparseLongDotColumns, TopKColumns, TrigramScoresColumns, VecDotColumns, VecUnitColumns, WordShinglesColumns}
 
 /** Public column-function surface for graft's native Catalyst
   * expressions (implementations under org.apache.spark.sql.graft). */
@@ -229,6 +229,11 @@ package object functions {
   def window_starts(windowType: Column, evMs: Column, wMs: Column, sMs: Column,
       anchor: Column): Column =
     CepExprColumns.windowStarts(windowType, evMs, wMs, sMs, anchor)
+
+  /** Exact `sum(cast(v AS decimal(38,6)))` of a DOUBLE column with a
+    * fixed-width long-limb buffer (decimal(38,6) result) — see
+    * [[org.apache.spark.sql.graft.LimbSum]]. */
+  def limb_sum(v: Column): Column = LimbSumColumns.limbSum(v)
 
   /** Map values for an array of keys, in key order (codegen'd) — see
     * [[org.apache.spark.sql.graft.MapValuesForKeys]]. */

@@ -59,12 +59,23 @@ object Domains {
     * no filter on the domain crosses; below a plain projection Catalyst
     * would substitute the host's URL regex back into each of the
     * domain's six reads (link-graph aggregates then outgrew 64 KB of
-    * generated code and ran without whole-stage codegen). */
+    * generated code and ran without whole-stage codegen).
+    *
+    * `filtered = true` is for callers that filter on the domain: it
+    * keeps only rows with a non-null domain, testing the host (a domain
+    * is null exactly when its host is), and the domain comes out of a
+    * second one-row generator, so a later filter on it (and the
+    * not-null constraints Catalyst infers from one) reads the column
+    * instead of evaluating the domain once more below the projection. */
   private[graft] def withRegistrableDomain(df: DataFrame, hostCol: Column,
-      name: String, multiPartSuffixes: Seq[String] = DefaultMultiPartSuffixes): DataFrame = {
+      name: String, multiPartSuffixes: Seq[String] = DefaultMultiPartSuffixes,
+      filtered: Boolean = false): DataFrame = {
     val h = Iterator.from(0).map(i => s"_host_$i").find(!df.columns.contains(_)).get
-    df.select(col("*"), inline(array(struct(hostCol.as(h)))))
-      .withColumn(name, registrableDomain(col(h), multiPartSuffixes)).drop(h)
+    val hosted = df.select(col("*"), inline(array(struct(hostCol.as(h)))))
+    val domain = registrableDomain(col(h), multiPartSuffixes)
+    (if (filtered)
+      hosted.filter(col(h).isNotNull).select(col("*"), inline(array(struct(domain.as(name)))))
+    else hosted.withColumn(name, domain)).drop(h)
   }
 
   /** Input frame + `host` and `domain` columns — the standard prefix
@@ -489,11 +500,13 @@ object Domains {
     }
   }
 
-  /** [[linkBaseRows]] plus the domains of each link's page and target. */
+  /** [[linkBaseRows]] plus the domains of each link's page and target,
+    * for the links where both are non-null. */
   private def withLinkDomains(links: DataFrame, src: String, dst: String,
       suffixes: Seq[String]): DataFrame = withRegistrableDomain(
-    withRegistrableDomain(links, host(col("_page_url")), src, suffixes),
-    linkTargetHost(col("_page_url"), col("_l.href"), col("_base")), dst, suffixes)
+    withRegistrableDomain(links, host(col("_page_url")), src, suffixes, filtered = true),
+    linkTargetHost(col("_page_url"), col("_l.href"), col("_base")), dst, suffixes,
+    filtered = true)
 
   /** The registrable-domain LINK GRAPH of an HTML page corpus:
     * `(src_domain, dst_domain, n_links)` aggregated over every
@@ -524,7 +537,6 @@ object Domains {
     val edges = withLinkDomains(l2, "src_domain", "dst_domain",
         multiPartSuffixes)
       .select(col("src_domain"), col("dst_domain"))
-      .filter(col("src_domain").isNotNull && col("dst_domain").isNotNull)
     val e = if (includeInternal) edges
       else edges.filter(col("src_domain") =!= col("dst_domain"))
     e.groupBy("src_domain", "dst_domain").agg(count(lit(1)).as("n_links"))
@@ -777,7 +789,6 @@ object Domains {
     else l
     val pairs = withLinkDomains(l2, "_src", "domain", multiPartSuffixes)
       .select(col("_src"), col("domain"), col("_l.anchor").as("_anchor"))
-      .filter(col("_src").isNotNull && col("domain").isNotNull)
     val external = if (includeInternal) pairs
       else pairs.filter(col("_src") =!= col("domain"))
     // array_distinct BEFORE the explode: one occurrence per term per

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.graft.CepExprImpl
+import org.apache.spark.sql.graft.{CepExprImpl, LimbSumImpl}
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.cep.{Alignment, CepQuery}
@@ -87,11 +87,13 @@ object StatefulCep {
       agg_type: String, cmp_op: String, limit: Double)
 
   /** Running aggregate of one open window. `sum` is a BigDecimal of
-    * the per-event values rounded to 6 decimal places — exactly
-    * [[graft.cep.CepQuery.SumDecimal]]'s cast-then-sum — so SUM/AVG
-    * are order-independent and bit-equal to the declarative plans
-    * (double accumulation would make threshold comparisons at the
-    * limit boundary fold-order-dependent). */
+    * the per-event values rounded to 6 decimal places ([[dec6]]) — the
+    * same exact sum the declarative plans' fixed-width limb aggregate
+    * (`graft.functions.limb_sum`) computes — so SUM/AVG are
+    * order-independent and bit-equal to the declarative plans (double
+    * accumulation would make threshold comparisons at the limit
+    * boundary fold-order-dependent). The limbs are the batch plans'
+    * buffer only; this state holds the BigDecimal. */
   final case class WindowAgg(
       ws_ms: Long, sum: BigDecimal, cnt: Long, mn: Double, mx: Double)
 
@@ -134,9 +136,10 @@ object StatefulCep {
   }
 
   /** `v` rounded the way CepQuery.SumDecimal's cast rounds (HALF_UP to
-    * 6 decimal places) before entering the running sum. */
-  private def dec6(v: Double): BigDecimal =
-    BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP)
+    * 6 decimal places) before entering the running sum: the declarative
+    * plans' own conversion, `LimbSumImpl.dec6` (an integral |v| ≤ 2^53
+    * in integer arithmetic, with no decimal string). */
+  private[graft] def dec6(v: Double): BigDecimal = BigDecimal(LimbSumImpl.dec6(v))
 
   private def fold(w: WindowAgg, v: Double): WindowAgg =
     WindowAgg(w.ws_ms, w.sum + dec6(v), w.cnt + 1,

@@ -36,6 +36,13 @@ import graft.parse.Parsers
   *    whose fan-out resolves rules per micro-batch from a
   *    [[DynamicRules]] snapshot — rule swaps take effect with the
   *    query running, the reference's zero-downtime semantics.
+  *
+  * Checkpoints: the per-rule queries (and a `CepQuery.planAll` stream)
+  * keep the window SUM as `limb_sum`'s three long limbs in their
+  * aggregation state. A checkpoint written before that buffer replaced
+  * the decimal(38,6) sum fails state-schema validation on restart;
+  * drop it and replay. The one-pass query's [[StatefulCep.KeyState]]
+  * did not change, so its checkpoints still restore.
   */
 final class StreamingEngine(
     spark: SparkSession,

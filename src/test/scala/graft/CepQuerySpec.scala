@@ -316,7 +316,7 @@ class CepQuerySpec extends AnyFunSuite {
     // Spark jobs (the rule book read must not depend on its storage).
     val book = Metrics.rulesToDF(spark, rules)
     for (ruleFrame <- Seq(book, book.repartition(3))) {
-      val got = CepQuery.fanOutJoin(metricDF, ruleFrame)
+      val got = CepQuery.fanOutJoin(metricDF, CepQuery.activeBook(ruleFrame))
         .select(col("mid"), col("rule_id")).as[(Long, Int)].collect()
       assert(got.length == got.toSet.size, "a (metric, rule) pair fanned out twice")
       assert(got.toSet == expected)
@@ -371,6 +371,30 @@ class CepQuerySpec extends AnyFunSuite {
         assert(jobsWhile(s"planAll-rdd-$align")(CepQuery.planAll(frame, nonLocal, align)) <= 1)
       }
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("planAll fails while it is built on a rule book repeating an ACTIVE rule id, naming the ids") {
+    // Window rule parameters join back on rule_id after the aggregate,
+    // so an id held by two ACTIVE rules is refused before any plan runs.
+    // A PAUSE row may share an id: only ACTIVE rules reach the plan.
+    val rules = Seq(demoRule, demoRule.copy(ruleId = 7), demoRule.copy(limit = BigDecimal(3)),
+      demoRule.copy(ruleId = 7, aggregatorFunctionType = AggType.Max),
+      demoRule.copy(ruleId = 5), demoRule.copy(ruleId = 5, ruleState = RuleState.Pause))
+    val frame = metricFrame(demoEvents)
+    for (align <- Seq(Alignment.Epoch, Alignment.FirstEvent)) {
+      val group = s"planAll-repeated-ids-$align"
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val err = SparkTestSession.listening(group, new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
+      })(intercept[IllegalArgumentException](
+        CepQuery.planAll(frame, Metrics.rulesToDF(spark, rules), align)))
+      assert(err.getMessage.contains("repeated: 1, 7"), err.getMessage)
+      assert(jobs.get == 0, "the repeated ids must be caught before anything runs")
+    }
+    // Without the repeats the same book plans and runs.
+    val unique = Metrics.rulesToDF(spark, rules.distinctBy(_.ruleId))
+    assert(CepQuery.planAll(frame, unique).count() > 0)
   }
 
   test("planAll spreads only a narrow batch metric input across the cores before its fan-out") {

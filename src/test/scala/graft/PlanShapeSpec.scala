@@ -439,7 +439,7 @@ class PlanShapeSpec extends AnyFunSuite {
     //    aggregation's map side with no fan-out to spread, so a spread
     //    there would only shuffle the metric stream twice.
     // The pins are about cost, not correctness: SUM/AVG add exact
-    // decimal(38,6) values and MIN/MAX ignore order, so results do not
+    // 6-decimal values (limb_sum) and MIN/MAX ignore order, so results do not
     // depend on partitioning (the repartition-invariance spec below).
     val cep = plans.keys.filter(_.startsWith("cep_"))
     for (name <- cep) {
@@ -458,10 +458,11 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("CEP window results are invariant under repartitioning the metric frame (x1, x4, x32; 3 runs)") {
-    // The invariant behind the spread pins above: exact decimal sums
-    // and order-free MIN/MAX make every window result independent of
-    // how the metric rows are partitioned and in which order the
-    // aggregation sees them — in both alignments and both plans.
+    // The invariant behind the spread pins above: exact 6-decimal sums
+    // (limb_sum's long limbs) and order-free MIN/MAX make every window
+    // result independent of how the metric rows are partitioned and in
+    // which order the aggregation sees them — in both alignments and
+    // both plans.
     import graft.cep.{Alignment, CepQuery, Metrics}
     val metrics = Metrics.eventsAsMetrics(SparkEntry.events(spark, sfDir))
     val rules = Metrics.rulesToDF(spark, SparkEntry.flagshipRules)

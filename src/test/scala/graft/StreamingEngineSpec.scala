@@ -371,7 +371,8 @@ class StreamingEngineSpec extends AnyFunSuite {
     val dyn = graft.streaming.DynamicRules.fanOut(batch, tmp)
       .as[graft.streaming.StatefulCep.CepEvent].collect().toSet
     // planAll's own rule-match join and projection, plus the group id.
-    val stat = CepQuery.prepareFanned(CepQuery.fanOutJoin(batch, rules.toDF()))
+    val stat = CepQuery.prepareFanned(
+        CepQuery.fanOutJoin(batch, CepQuery.activeBook(rules.toDF())))
       .withColumn("group_id", CepQuery.groupId).drop("group_vals")
       .as[graft.streaming.StatefulCep.CepEvent].collect().toSet
     assert(dyn.nonEmpty && dyn == stat)
