@@ -29,10 +29,8 @@ object Decontamination {
     * default; [[Shingler.Char]] switches every path to codepoint
     * n-grams for unsegmented scripts (pick a larger `n` — the
     * published 13-word choice corresponds to ~50+ codepoints). */
-  private def gramHashes(n: Int, shingler: Shingler) = shingler match {
-    case Shingler.Word => graft.functions.word_shingle_hashes(col("text"), n)
-    case Shingler.Char => graft.functions.char_shingle_hashes(col("text"), n)
-  }
+  private def gramHashes(n: Int, shingler: Shingler) =
+    shingler.gramHashes(col("text"), n)
 
   /** (doc_id, n_hits): training docs sharing ≥1 word n-gram with the
     * eval corpus, with the count of DISTINCT shared grams. Docs also

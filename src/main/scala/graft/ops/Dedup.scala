@@ -225,28 +225,21 @@ object Dedup {
     * and the wider width removes. */
   private def shingleKeyArray(text: Column, n: Int, hashBits: Int,
       shingler: Shingler = Shingler.Word): Column =
-    (hashBits, shingler) match {
-      case (64, Shingler.Word) =>
-        array_distinct(graft.functions.word_shingle_hashes(text, n))
-      case (64, Shingler.Char) =>
-        array_distinct(graft.functions.char_shingle_hashes(text, n))
-      case (128, Shingler.Word) =>
+    hashBits match {
+      case 64 => array_distinct(shingler.gramHashes(text, n))
+      case 128 =>
         // One native pass (tokenize + gram-concat once, hash twice) —
         // the arrays_zip-of-two-runs spelling tokenized and rebuilt
         // every gram string twice, doubling the CPU-dense shingling
         // stage. Bit-identical output (spec-pinned).
-        array_distinct(graft.functions.word_shingle_hash_pairs(text, n))
-      case (128, Shingler.Char) =>
-        array_distinct(graft.functions.char_shingle_hash_pairs(text, n))
-      case (32, Shingler.Word) =>
-        array_distinct(transform(
-          graft.functions.word_shingle_hashes(text, n),
+        array_distinct(shingler match {
+          case Shingler.Word => graft.functions.word_shingle_hash_pairs(text, n)
+          case Shingler.Char => graft.functions.char_shingle_hash_pairs(text, n)
+        })
+      case 32 =>
+        array_distinct(transform(shingler.gramHashes(text, n),
           h => h.bitwiseAND(lit(0xFFFFFFFFL))))
-      case (32, Shingler.Char) =>
-        array_distinct(transform(
-          graft.functions.char_shingle_hashes(text, n),
-          h => h.bitwiseAND(lit(0xFFFFFFFFL))))
-      case (other, _) =>
+      case other =>
         throw new IllegalArgumentException(
           s"hashBits must be 32, 64, or 128, got $other")
     }
@@ -806,13 +799,10 @@ object Dedup {
   /** (doc_id, sig) one-pass native MinHash signatures. */
   private def minhashSignatures(docs: DataFrame, n: Int,
       numHashes: Int, shingler: Shingler = Shingler.Word): DataFrame = {
-    val grams = shingler match {
-      case Shingler.Word => graft.functions.word_shingles(col("text"), n)
-      case Shingler.Char => graft.functions.char_shingles(col("text"), n)
-    }
     Spread.keyed(docs, col("doc_id"))
       .select(col("doc_id"),
-        graft.functions.minhash_signature(array_distinct(grams), numHashes)
+        graft.functions.minhash_signature(
+          array_distinct(shingler.grams(col("text"), n)), numHashes)
           .as("sig"))
       .filter(col("sig").isNotNull)
   }
@@ -850,34 +840,27 @@ object Dedup {
     * ingest loop on codepoint grams); [[dedupAgainstIndex]] validates
     * its own parameters against it and fails LOUDLY on mismatch —
     * mismatched banding or gram mode would otherwise silently match
-    * nothing, the inverted failure direction for a dedup guard. */
+    * nothing, the inverted failure direction for a dedup guard.
+    * `params/` is the commit marker, first-deleted and last-written
+    * ([[IndexParams]] holds the protocol and its rationale). */
   def saveDedupIndex(docs: DataFrame, path: String, n: Int = 3,
       numHashes: Int = 64, bands: Int = 16, bandBuckets: Int = 64,
       shingler: Shingler = Shingler.Word,
       persist: Persistence = Persistence.Local): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // Params FIRST-deleted, LAST-written. Params-last alone only
-    // protects first-time builds: a REBUILD with the SAME params over
-    // an existing index that dies between the artifact overwrites
-    // would leave old params validating mixed old/new artifacts (the
-    // guard compares values, which match). Deleting params up front
-    // makes any mid-rebuild crash leave a params-less artifact, which
-    // the probe/append guard refuses loudly.
-    val paramsPath = new org.apache.hadoop.fs.Path(s"$path/params")
-    val fs = paramsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(paramsPath)) fs.delete(paramsPath, true)
-    writeIndexArtifacts(docs, path, n, numHashes, bands, bandBuckets,
-      mode = "overwrite", shingler, persist)
-    Seq((n, numHashes, bands, bandBuckets, shinglerName(shingler)))
-      .toDF("n", "num_hashes", "bands", "band_buckets", "shingler")
-      .write.mode("overwrite").parquet(s"$path/params")
+    IndexParams.commit(path,
+      Seq((n, numHashes, bands, bandBuckets, shingler.name)).toDF(
+        "n", "num_hashes", "bands", "band_buckets", "shingler"))(
+      writeIndexArtifacts(docs, path, n, numHashes, bands, bandBuckets,
+        mode = "overwrite", shingler, persist))
   }
 
-  private def shinglerName(s: Shingler): String = s match {
-    case Shingler.Word => "word"
-    case Shingler.Char => "char"
-  }
+  /** The schema [[saveDedupIndex]] writes `params/` with; an index from
+    * before gram-mode tracking has no `shingler` column, which this
+    * schema reads as null. */
+  private val paramsDdl =
+    "n INT, num_hashes INT, bands INT, band_buckets INT, shingler STRING"
 
   /** Rolling append to a [[saveDedupIndex]] artifact — the daily
     * half of the incremental workflow: after a batch is deduped
@@ -906,7 +889,8 @@ object Dedup {
   }
 
   /** The three index-artifact frames (shingles / sigs / banded keys)
-    * derived from `docs` alone — exposed so PlanShapeSpec can pin that
+    * derived from `docs` alone: what a build writes, and the batch side
+    * of [[dedupAgainstIndex]]. Exposed so PlanShapeSpec can pin that
     * a rolling APPEND's write jobs never scan the existing index (the
     * only index read in the append path is the one-row params guard). */
   private[graft] def indexArtifactFrames(docs: DataFrame, n: Int,
@@ -925,10 +909,6 @@ object Dedup {
     // bit-identical. Signatures are checkpointed too: the band write
     // would otherwise recompute the full MinHash pass sigs already
     // paid.
-    val grams = shingler match {
-      case Shingler.Word => graft.functions.word_shingles(col("text"), n)
-      case Shingler.Char => graft.functions.char_shingles(col("text"), n)
-    }
     // Plain keyed repartition, deliberately NOT Spread.keyed: the
     // index build is write-bound, not compute-bound (A/B measured:
     // pinning 32 partitions cost 12–37% on the incremental rows —
@@ -944,7 +924,8 @@ object Dedup {
     // to reliable storage anyway. Results are identical either way
     // (spec-pinned).
     val gramsF = persist(docs.repartition(col("doc_id"))
-      .select(col("doc_id"), array_distinct(grams).as("grams")))
+      .select(col("doc_id"),
+        array_distinct(shingler.grams(col("text"), n)).as("grams")))
     val shingles = gramsF
       .select(col("doc_id"),
         array_distinct(transform(col("grams"), g => xxhash64(g)))
@@ -985,23 +966,12 @@ object Dedup {
   }
 
   /** Loud params check shared by the probe and the rolling append:
-    * mismatched banding silently matches nothing — the inverted
-    * failure direction for a dedup guard. */
+    * mismatched banding or gram mode silently matches nothing — the
+    * inverted failure direction for a dedup guard. */
   private def validateIndexParams(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, n: Int, numHashes: Int, bands: Int,
       bandBuckets: Int, shingler: Shingler = Shingler.Word): Unit = {
-    val paramsPath = new org.apache.hadoop.fs.Path(s"$indexPath/params")
-    val fs = paramsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(paramsPath),
-      s"no params/ under $indexPath — either the index predates " +
-        "parameter tracking or a rebuild died before its final " +
-        "params write (params commit last); re-run saveDedupIndex " +
-        "to rebuild before probing")
-    // ONE head() over all columns — this guard runs on the daily
-    // probe/append hot path, so it must not cost two driver jobs.
-    val params = spark.read.parquet(s"$indexPath/params")
-    val hasMode = params.columns.contains("shingler")
-    val row = params.head()
+    val row = IndexParams.read(spark, indexPath, paramsDdl, "saveDedupIndex")
     val saved = org.apache.spark.sql.Row(
       row.getAs[Int]("n"), row.getAs[Int]("num_hashes"),
       row.getAs[Int]("bands"), row.getAs[Int]("band_buckets"))
@@ -1011,14 +981,13 @@ object Dedup {
         s"bandBuckets) = $saved but the caller asked for " +
         s"(${n}, ${numHashes}, ${bands}, ${bandBuckets}) — mismatched " +
         "banding silently matches nothing; rebuild or re-parameterize")
-    // Gram mode: an index predating mode tracking is a word index
-    // (the only mode that existed); char probes against it must fail
-    // loudly, not silently match nothing.
+    // Gram mode: an index predating mode tracking (null here) is a
+    // word index, the only mode that existed.
     val savedMode =
-      if (hasMode) row.getAs[String]("shingler") else "word"
-    require(savedMode == shinglerName(shingler),
+      Option(row.getAs[String]("shingler")).getOrElse(Shingler.Word.name)
+    require(savedMode == shingler.name,
       s"index at $indexPath was built with $savedMode shingles but the " +
-        s"caller asked for ${shinglerName(shingler)} — mismatched gram " +
+        s"caller asked for ${shingler.name} — mismatched gram " +
         "modes silently match nothing; rebuild or re-parameterize")
   }
 
@@ -1031,7 +1000,13 @@ object Dedup {
     * or the cheaper signature-agreement estimate (`false`: mean of
     * equal signature components — unbiased for true Jaccard, ±1σ ≈
     * sqrt(J(1−J)/numHashes); no shingle index read). Output:
-    * (doc_id, dup_of, jaccard) — batch doc × corpus doc. */
+    * (doc_id, dup_of, jaccard) — batch doc × corpus doc.
+    *
+    * The batch side is [[indexArtifactFrames]] of `newDocs`, the very
+    * frames a build writes, so probe and index cannot disagree on a
+    * hash; it shares the build's intermediates and so its `persist`.
+    * Each artifact is read back with its batch frame's schema (no
+    * schema-inference job). */
   def dedupAgainstIndex(newDocs: DataFrame, indexPath: String,
       threshold: Double = 0.5, n: Int = 3, numHashes: Int = 64,
       bands: Int = 16, bandBuckets: Int = 64, exactVerify: Boolean = true,
@@ -1040,40 +1015,21 @@ object Dedup {
     val spark = newDocs.sparkSession
     validateIndexParams(spark, indexPath, n, numHashes, bands, bandBuckets,
       shingler)
-    // The batch is shingled ONCE (lazily persisted distinct-gram
-    // arrays; the sig materialization below also materializes it):
-    // signatures and the exact-verify probe index both derive from
-    // it, where they previously re-tokenized the batch separately —
-    // same bit-exact hash spelling as [[indexArtifactFrames]].
-    val probeGrams = shingler match {
-      case Shingler.Word => graft.functions.word_shingles(col("text"), n)
-      case Shingler.Char => graft.functions.char_shingles(col("text"), n)
-    }
-    val gramsF = persist.lazily(newDocs.repartition(col("doc_id"))
-      .select(col("doc_id"), array_distinct(probeGrams).as("grams")))
-    val sig = persist(gramsF
-      .select(col("doc_id"),
-        graft.functions.minhash_signature(col("grams"), numHashes).as("sig"))
-      .filter(col("sig").isNotNull))
-    val cand = bandedFrame(sig, numHashes, bands)
-      .withColumn("bucket", pmod(col("band_hash"), lit(bandBuckets)).cast("int"))
-      .as("x")
-      .join(spark.read.parquet(s"$indexPath/bands").as("y"),
+    val (newIdx, sig, banded) = indexArtifactFrames(newDocs, n, numHashes,
+      bands, bandBuckets, shingler, persist)
+    def artifact(name: String, like: DataFrame) =
+      spark.read.schema(like.schema).parquet(s"$indexPath/$name")
+    val cand = banded.as("x")
+      .join(artifact("bands", banded).as("y"),
         col("x.bucket") === col("y.bucket") &&
           col("x.band_idx") === col("y.band_idx") &&
           col("x.band_hash") === col("y.band_hash"))
       .select(col("x.doc_id").as("new_id"), col("y.doc_id").as("dup_of"))
       .distinct()
     if (exactVerify) {
-      val newIdx = gramsF
-        .select(col("doc_id"),
-          array_distinct(transform(col("grams"), g => xxhash64(g)))
-            .as("sh_arr"))
-        .select(col("doc_id"), explode(col("sh_arr")).as("shingle"),
-          size(col("sh_arr")).as("n_sh"))
       cand
         .join(newIdx.as("a"), col("new_id") === col("a.doc_id"))
-        .join(spark.read.parquet(s"$indexPath/shingles").as("b"),
+        .join(artifact("shingles", newIdx).as("b"),
           col("dup_of") === col("b.doc_id") &&
             col("a.shingle") === col("b.shingle"))
         .groupBy(col("new_id"), col("dup_of"))
@@ -1087,7 +1043,7 @@ object Dedup {
       cand
         .join(sig.select(col("doc_id").as("new_id"), col("sig").as("sig_a")),
           Seq("new_id"))
-        .join(spark.read.parquet(s"$indexPath/sigs")
+        .join(artifact("sigs", sig)
             .select(col("doc_id").as("dup_of"), col("sig").as("sig_b")),
           Seq("dup_of"))
         .select(col("new_id").as("doc_id"), col("dup_of"),
@@ -1282,10 +1238,7 @@ object Dedup {
       shingler: Shingler = Shingler.Word): DataFrame = {
     require(n >= 1, s"gram length must be positive, got $n")
     require(maxGramOcc >= 2, s"maxGramOcc must allow a duplicate, got $maxGramOcc")
-    val gramHash = shingler match {
-      case Shingler.Word => graft.functions.word_shingle_hashes(col("text"), n)
-      case Shingler.Char => graft.functions.char_shingle_hashes(col("text"), n)
-    }
+    val gramHash = shingler.gramHashes(col("text"), n)
     // Materialized: both the gram aggregate and the position join
     // consume this frame — unpersisted, Spark would tokenize+shingle
     // the whole corpus twice. Under Shingler.Char, `pos`/span bounds

@@ -265,41 +265,30 @@ object Similarity {
     * (`nProbe/k` of the corpus bytes) instead of filtering a full
     * scan. This is the durable artifact a 100 TB pipeline builds once
     * and probes for weeks; [[Persistence.Reliable]] inside a session
-    * is the ephemeral cousin. */
+    * is the ephemeral cousin. A one-row `params/` (n_clusters, dim)
+    * commits the build: first-deleted, last-written ([[IndexParams]]),
+    * so [[appendToIvfIndex]] and [[loadIvfIndex]] refuse a half-written
+    * rebuild. */
   def saveIvfIndex(index: IvfIndex, path: String): Unit = {
     val spark = index.assigned.sparkSession
     import spark.implicits._
-    // Params FIRST-deleted, LAST-written: params-last alone only
-    // protects first-time builds — a REBUILD over an existing index
-    // (the retrain-after-drift case) that dies between the artifact
-    // overwrites and the params write would leave the OLD params
-    // validating NEW centroids over OLD assigned/ (shape-compatible,
-    // so readCentroidModel passes and probes return garbage).
-    // Deleting params up front makes any mid-rebuild crash leave a
-    // params-less artifact, which the guard refuses loudly.
-    val paramsPath = new org.apache.hadoop.fs.Path(s"$path/params")
-    val fs = paramsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(paramsPath)) fs.delete(paramsPath, true)
-    spark.createDataFrame(
-        index.centroids.zipWithIndex.toSeq
-          .map { case (c, i) => (i, c.toSeq) })
-      .toDF("cid", "centroid")
-      .repartition(1) // k×dim doubles: one tiny file
-      .write.mode("overwrite").parquet(path + "/centroids")
-    // Cluster by the partition value before the partitioned write
-    // (guide §6): each cid's rows land in one task, so a save emits
-    // one file per cluster instead of tasks×clusters small files that
-    // every later probe lists and opens.
-    index.assigned.repartition(col("cid"))
-      .write.mode("overwrite").partitionBy("cid").parquet(path + "/assigned")
-    // Params LAST: the commit marker (the saveDedupIndex protocol). A
-    // rebuild that dies mid-write leaves stale (or no) params over
-    // partial artifacts, so the append/load guard fails loudly instead
-    // of assigning against a half-written model.
-    Seq((index.centroids.length,
-        index.centroids.headOption.map(_.length).getOrElse(0)))
-      .toDF("n_clusters", "dim")
-      .write.mode("overwrite").parquet(path + "/params")
+    IndexParams.commit(path,
+      Seq((index.centroids.length,
+          index.centroids.headOption.map(_.length).getOrElse(0)))
+        .toDF("n_clusters", "dim")) {
+      spark.createDataFrame(
+          index.centroids.zipWithIndex.toSeq
+            .map { case (c, i) => (i, c.toSeq) })
+        .toDF("cid", "centroid")
+        .repartition(1) // k×dim doubles: one tiny file
+        .write.mode("overwrite").parquet(path + "/centroids")
+      // Cluster by the partition value before the partitioned write
+      // (guide §6): each cid's rows land in one task, so a save emits
+      // one file per cluster instead of tasks×clusters small files that
+      // every later probe lists and opens.
+      index.assigned.repartition(col("cid"))
+        .write.mode("overwrite").partitionBy("cid").parquet(path + "/assigned")
+    }
   }
 
   /** Rolling append to a [[saveIvfIndex]] artifact — the daily-ingest
@@ -333,19 +322,14 @@ object Similarity {
 
   /** Loud artifact guard shared by append and load: params must exist
     * (they commit last — absence means a dead rebuild or a
-    * pre-params artifact) and must match the centroid matrix shape. */
+    * pre-params artifact) and must match the centroid matrix shape.
+    * Both tables are read with the schemas [[saveIvfIndex]] writes. */
   private def readCentroidModel(spark: org.apache.spark.sql.SparkSession,
       path: String): Array[Array[Double]] = {
-    val paramsPath = new org.apache.hadoop.fs.Path(s"$path/params")
-    val fs = paramsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(paramsPath),
-      s"no params/ under $path — either the index predates parameter " +
-        "tracking or a rebuild died before its final params write " +
-        "(params commit last); re-run saveIvfIndex before appending " +
-        "or probing")
-    val saved = spark.read.parquet(s"$path/params")
-      .select("n_clusters", "dim").head()
-    val centroids = spark.read.parquet(path + "/centroids")
+    val saved = IndexParams.read(spark, path, "n_clusters INT, dim INT",
+      "saveIvfIndex")
+    val centroids = spark.read.schema("cid INT, centroid ARRAY<DOUBLE>")
+      .parquet(path + "/centroids")
       .collect()
       .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
       .sortBy(_._1).map(_._2)

@@ -3,12 +3,23 @@ package graft.ops
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Gram tokenization mode of the n-gram dedup/novelty family. */
-sealed abstract class Shingler
+/** Gram tokenization mode of the n-gram dedup/novelty family: the one
+  * place a mode picks its gram columns. */
+sealed abstract class Shingler(val name: String) {
+  /** The n-gram strings of `text`. */
+  def grams(text: Column, n: Int): Column
+  /** xxhash64 of each n-gram of `text`, in gram order. */
+  def gramHashes(text: Column, n: Int): Column
+}
 object Shingler {
   /** Word n-grams over whitespace tokens — the default, right for
     * space-segmented scripts. */
-  case object Word extends Shingler
+  case object Word extends Shingler("word") {
+    def grams(text: Column, n: Int): Column =
+      graft.functions.word_shingles(text, n)
+    def gramHashes(text: Column, n: Int): Column =
+      graft.functions.word_shingle_hashes(text, n)
+  }
   /** CODEPOINT n-grams over the whitespace-normalized lowercased text
     * ([[TextOps.normalized]]) — the mode for unsegmented scripts
     * (CJK and friends), where whitespace tokenization yields one
@@ -18,7 +29,12 @@ object Shingler {
     * Char grams run hotter (common substrings cross word boundaries),
     * so `maxShingleDf` matters more — measure with
     * [[TextAnalysis.heavyGrams]] first. */
-  case object Char extends Shingler
+  case object Char extends Shingler("char") {
+    def grams(text: Column, n: Int): Column =
+      graft.functions.char_shingles(text, n)
+    def gramHashes(text: Column, n: Int): Column =
+      graft.functions.char_shingle_hashes(text, n)
+  }
 }
 
 /** Shared text primitives for the dedup / text-analysis operators.

@@ -223,9 +223,6 @@ object StatefulCep {
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       state = getHandle.getValueState[KeyState]("cepWindows", enc, TTLConfig.NONE)
 
-    private def currentOrNull: KeyState =
-      if (state.exists()) state.get() else null
-
     /** Persist survivors, or clear everything; the timer moves only
       * when the earliest open window end does (`oldEnd` is where it
       * sits now, None when no timer is armed). */
@@ -242,7 +239,7 @@ object StatefulCep {
         key: (Int, String), rows: Iterator[CepEvent],
         tv: TimerValues): Iterator[ClosedWindow] = {
       val wm = tv.getCurrentWatermarkInMs()
-      val st0 = currentOrNull
+      val st0 = state.get() // null for a key with no state: one read
       val st = foldEvents(st0, rows, wm, align)
       if (st == null) return Iterator.empty
       val (out, kept) = fireReady(key, st, wm)
@@ -253,7 +250,7 @@ object StatefulCep {
     override def handleExpiredTimer(
         key: (Int, String), tv: TimerValues,
         timer: ExpiredTimerInfo): Iterator[ClosedWindow] = {
-      val st = currentOrNull
+      val st = state.get()
       if (st == null) return Iterator.empty
       // The expired timer IS the one we registered, and it is gone.
       val (out, kept) = fireReady(key, st, tv.getCurrentWatermarkInMs())

@@ -1576,6 +1576,66 @@ class OpsSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("gram mode"))
   }
 
+  test("dedup index whose params predate gram-mode tracking probes and appends as word; a char probe fails loudly") {
+    // An index written before the `shingler` column existed has a
+    // four-column params table; the guard must read it as a word index.
+    def tmp(tag: String): java.nio.file.Path = {
+      val p = java.nio.file.Files.createTempDirectory(tag)
+      p.toFile.deleteOnExit(); p
+    }
+    val dir = tmp("graft_idx_old_params").toString
+    val base = docs.filter(col("doc_id") % 3 =!= 0)
+      .select(col("doc_id"), col("text"))
+    val delta = docs.filter(col("doc_id") % 3 === 0)
+      .select((col("doc_id") + 1000L).as("doc_id"), col("text"))
+    val probe = docs.filter(col("doc_id") % 6 === 0)
+      .select((col("doc_id") + 5000L).as("doc_id"), col("text"))
+    def run() = Dedup.dedupAgainstIndex(probe, dir, 0.8, 3, 64, 16)
+      .as[(Long, Long, Double)].collect().toSet
+    Dedup.saveDedupIndex(base, dir, 3, 64, 16)
+    val current = run()
+    Seq((3, 64, 16, 64)).toDF("n", "num_hashes", "bands", "band_buckets")
+      .write.mode("overwrite").parquet(s"$dir/params")
+    assert(run() == current)
+    Dedup.appendToDedupIndex(delta, dir, 3, 64, 16)
+    val grown = run()
+    assert(grown.exists(_._2 >= 1000L), "the word append did not land")
+    assert(current.subsetOf(grown))
+    val ex = intercept[IllegalArgumentException] {
+      Dedup.dedupAgainstIndex(probe, dir, 0.8, 3, 64, 16,
+        shingler = Shingler.Char)
+    }
+    assert(ex.getMessage.contains("gram mode"))
+  }
+
+  test("building an index probe and running the append guard start no schema-read jobs") {
+    // Artifacts are read back with the schema that wrote them: the only
+    // `parquet at …` job left is the partition listing of bands/.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    def tmp(tag: String): java.nio.file.Path = {
+      val p = java.nio.file.Files.createTempDirectory(tag)
+      p.toFile.deleteOnExit(); p
+    }
+    val dir = tmp("graft_idx_reads").toString
+    val base = docs.select(col("doc_id"), col("text"))
+    val batch = base.limit(5)
+    Dedup.saveDedupIndex(base, dir, 3, 64, 16)
+    val reads = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        e.stageInfos.map(_.name).filter(_.startsWith("parquet at "))
+          .foreach(reads.add)
+    }
+    SparkTestSession.listening("index-reads", listener) {
+      Dedup.dedupAgainstIndex(batch, dir, 0.8, 3, 64, 16)
+      intercept[IllegalArgumentException] {
+        Dedup.appendToDedupIndex(batch, dir, 3, 64, bands = 8)
+      }
+    }
+    assert(reads.size <= 1,
+      s"schema-read jobs while building the probe: ${reads.toArray.mkString(", ")}")
+  }
+
   test("interval join: unbounded sentinel interval fails loudly, capped guard passes") {
     val left = Seq((1L, "u1", 100L)).toDF("event_id", "user", "ts")
     val open = Seq(("u1", 0L, Long.MaxValue)) // "still open" sentinel
