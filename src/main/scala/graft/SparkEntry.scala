@@ -190,7 +190,7 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------------------
-  // Flagship: N dynamic rules in ONE pass (CepQuery.planAll) — broadcast
+  // Flagship: N dynamic rules in ONE pass (CepQuery.planAll) — the matcher's
   // rule fan-out + arithmetic windows + CASE-dispatched agg/comparator.
   // Thresholds chosen to emit rows at sf0.001 (driver smoke) and sf0.01.
   // ---------------------------------------------------------------------------

@@ -157,15 +157,16 @@ object StreamBench {
     }
 
     // Large-book scale proof for the O(M + matches) fan-out claim
-    // (CepQuery.fanOutJoin): nBig ACTIVE rules with MIXED key sets —
-    // half keyed on one of 64 distinct tag names, half on (that name,
-    // t_group) so the rarest-key pivot has real work to do — against
-    // events each carrying t_group plus exactly ONE of the 64 names.
-    // An event therefore matches ~nBig/64 rules: growing the book 16×
-    // grows matches (semantic output) 16× but the probe side not at
-    // all. Sub-linear throughput degradation vs the same-shape small
-    // book is the claim; the pivots are plain Scala over the one
-    // collected rule book (reported as plan-construction ms).
+    // (DynamicRules.Matcher, planAll's fan-out): nBig ACTIVE rules
+    // with MIXED key sets — half keyed on one of 64 distinct tag names,
+    // half on (that name, t_group) so the rarest-key index has real
+    // work to do — against events each carrying t_group plus exactly
+    // ONE of the 64 names. An event therefore matches ~nBig/64 rules:
+    // growing the book 16× grows matches (semantic output) 16× but the
+    // index probes not at all. Sub-linear throughput degradation vs the
+    // same-shape small book is the claim; the index is built from the
+    // one collected rule book while the plan is built (reported as
+    // plan-construction ms).
     def runBigBook(nBig: Int): (Double, Long) = {
       val bigRules = (1 to nBig).map { i =>
         val kTag = s"t_k${i % 64}"

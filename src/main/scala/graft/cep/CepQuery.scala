@@ -1,12 +1,11 @@
 package graft.cep
 
-import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
 import graft.cep.Metrics.RuleRow
 import graft.model._
+import graft.streaming.DynamicRules
 
 /** Compiles [[graft.model.Rule]]s into Spark logical plans.
   *
@@ -27,13 +26,15 @@ import graft.model._
   *    the built-in `window()`/`groupBy` (whole-stage codegen, static
   *    window expansion); use when rules are few and known.
   *  - [[planAll]]: N rules → ONE pass over the metric stream. The rule
-  *    set is broadcast (reference: CEPTaskRunner.java:41,
-  *    PartitionEngine.java:26-51), the metric×rule hash join performs
-  *    the reference's 1→N fan-out, windows are computed arithmetically
-  *    (width is per-rule *data*, so the built-in `window()` cannot be
-  *    used), and agg/comparator dispatch is a `CASE` expression. At
-  *    100 TB this is the plan you want: one scan + one aggregation
-  *    shuffle for the whole rule set, instead of N scans.
+  *    book rides in every task (reference: CEPTaskRunner.java:41,
+  *    PartitionEngine.java:26-51), where the streaming engine's own
+  *    [[graft.streaming.DynamicRules.Matcher]] performs the
+  *    reference's 1→N fan-out and stamps each event's `group_id`;
+  *    windows are computed arithmetically (width is per-rule *data*,
+  *    so the built-in `window()` cannot be used), and agg/comparator
+  *    dispatch is a `CASE` expression. At 100 TB this is the plan you
+  *    want: one scan + one aggregation shuffle for the whole rule set,
+  *    instead of N scans.
   *
   * Arithmetic windows (planAll, and planRule under first-event
   * alignment) come from one native function, `window_starts`, whose
@@ -44,12 +45,13 @@ import graft.model._
   * planAll's own [[judgeWindows]].
   *
   * Scale posture: the only shuffle at scale is the final hash aggregation on
-  * (ruleId, groupValues, windowStart) — exactly the reference's
+  * (ruleId, groupId, windowStart) — exactly the reference's
   * `keyBy(groupId)` (CEPTaskRunner.java:46) — and Spark performs
-  * partial (map-side) aggregation before it. Rules are broadcast, never
-  * shuffled: into the fan-out, and once more after the aggregate,
-  * where each window's rule parameters (constant per rule id) join
-  * back on `rule_id` instead of riding in the aggregation key. The one
+  * partial (map-side) aggregation before it. Rules are never
+  * shuffled: the fan-out's tasks carry the compiled book in their
+  * closure, and after the aggregate each window's rule parameters
+  * (constant per rule id) join back from a broadcast on `rule_id`
+  * instead of riding in the aggregation key. The one
   * driver read is planAll's collect of the rule book (KBs of control
   * data); no per-group driver state or threads. Streams shuffle only
   * there too; a NARROW batch input (fewer splits than cores) is spread
@@ -170,7 +172,7 @@ object CepQuery {
       lit(rule.limit.underlying)))
   }
 
-  /** N rules → ONE pass: broadcast hash-join fan-out + arithmetic
+  /** N rules → ONE pass: the rule matcher's fan-out + arithmetic
     * windows on the `align`ed grid + CASE-dispatched agg and
     * comparator.
     *
@@ -178,8 +180,16 @@ object CepQuery {
     * [[Metrics.rulesToDF]]). Output:
     * {{{ rule_id INT, group_id STRING, window_start TIMESTAMP,
     *     window_end TIMESTAMP, result DOUBLE }}}
-    * Global windows emit NULL window bounds. `group_id` is the
-    * reference's `ruleId_tagVal1_tagVal2…` (PartitionEngine.java:72-81).
+    * Global windows emit NULL window bounds.
+    *
+    * The fan-out is [[graft.streaming.DynamicRules.Matcher]] over the
+    * collected ACTIVE book: the matcher that
+    * [[graft.streaming.DynamicRules.fanOut]] runs over a published
+    * snapshot, so both engines match the same rules and key the same
+    * groups. `group_id` is the reference's `ruleId_tagVal1_tagVal2…`
+    * (PartitionEngine.java:72-81) and the aggregation keys on it, so
+    * tag tuples that join to one id (`("a_b","c")` and `("a","b_c")`)
+    * are one group, as in the reference.
     * Under [[Alignment.FirstEvent]] each (rule, group) derives its grid
     * origin from its earliest event; the window function computing it
     * hash-partitions on (rule, group), which the final aggregation
@@ -208,10 +218,10 @@ object CepQuery {
     val repeated = book.groupBy(_.rule_id).collect { case (id, rs) if rs.size > 1 => id }
     require(repeated.isEmpty,
       s"planAll: ACTIVE rule ids must be unique; repeated: ${repeated.toSeq.sorted.mkString(", ")}")
-    aggregateAndEmit(assignWindows(
-      prepareFanned(fanOutJoin(
-        graft.ops.Spread.ifNarrow(metricFrame, col("eventTime")), book)),
-      align, Seq(col("rule_id"), col("group_vals"))), book)
+    val matcher = new DynamicRules.Matcher(book)
+    val fanned = DynamicRules.matched(
+      graft.ops.Spread.ifNarrow(metricFrame, col("eventTime")))(() => matcher)
+    aggregateAndEmit(assignWindows(fanned, align, Seq(col("rule_id"), col("group_id"))), book)
   }
 
   /** Window assignment, arithmetically (width/slide are per-row data):
@@ -241,85 +251,15 @@ object CepQuery {
         graft.functions.window_starts(col("window_type"), col("ev_ms"),
           col("w_ms"), col("s_ms"), anchor)))
       // explode_outer, deliberately: plain explode makes the optimizer
-      // infer a `size(ws_ms) > 0` filter and push the whole window-array
-      // expression into the broadcast join condition, evaluating it
-      // twice per (metric, rule) pair. The filter below keeps the null
-      // row only for global rules: a tumbling or sliding rule that
-      // covers the event with no window (w < s sliding, a non-positive
-      // width or slide) must contribute to no window.
+      // infer a `size(ws_ms) > 0` filter over the whole window-array
+      // expression, evaluating it twice per (metric, rule) row. The
+      // filter below keeps the null row only for global rules: a
+      // tumbling or sliding rule that covers the event with no window
+      // (w < s sliding, a non-positive width or slide) must contribute
+      // to no window.
       .filter(col("ws_ms").isNotNull || !col("window_type").isin(
         WindowType.Tumbling.name, WindowType.Sliding.name))
       .drop("_anchor")
-  }
-
-  /** Pivot-key sentinel for rules with no grouping keys (they match
-    * every metric; the sentinel gives them a hash-joinable key). A tag
-    * named "" cannot collide: the exploded key list is de-duplicated. */
-  private val KeylessPivot = ""
-
-  /** planAll steps 1-2 — rule-match fan-out + per-(metric, rule)
-    * derived columns, as a broadcast HASH join. The match semantics
-    * are the reference's (Rule.java:63-66): rule is ACTIVE and every
-    * grouping key is present in the event's tag map.
-    *
-    * The naive spelling is a broadcast nested-loop theta-join on
-    * `containsAll(tag_keys, grouping_key_names)`: every metric row
-    * evaluates the subset predicate against EVERY rule — O(M·R), the
-    * term that explodes when the rule book grows to thousands. Instead
-    * each rule is keyed by ONE pivot grouping key and each metric
-    * explodes its (few, distinct) tag keys, so a (metric, rule)
-    * candidate is produced by one hash-table probe — O(M·keys-per-tag-
-    * map + matches) — and only candidates pay the full containsAll
-    * verification. Map keys are distinct, and a rule has one pivot, so
-    * no candidate is produced twice. Keyless rules (match everything)
-    * pivot on a sentinel appended to every metric's key list.
-    *
-    * The rule book is KBs of control data (the reference broadcasts it
-    * to every task), so its ACTIVE rules arrive collected on the driver
-    * ([[activeBook]]) and the pivots are plain Scala over those
-    * [[Metrics.RuleRow]]s.
-    * A rule whose key list is null or holds a null can match no tag
-    * map and is left out. Each rule's pivot is its RAREST grouping key
-    * across the book: the key the fewest ACTIVE rules group by (a key
-    * listed twice counts twice), ties lexicographic. When rules are
-    * heterogeneous (half group by t_group, half by t_type), a fixed
-    * first-key pivot would hash every metric against every rule
-    * sharing that key, while the rarest key spreads the build side
-    * across distinct probe values. The broadcast side is those rows
-    * with `_pivot` filled in, a local relation, so its build subtree
-    * has no exchange (PlanShapeSpec's one-aggregation-shuffle pin).
-    *
-    * The metric side explodes only the pivot values SOME rule uses:
-    * with a homogeneous book that is ONE row per metric — fewer row
-    * copies than both the naive explode (tag keys + sentinel per
-    * metric) and the old nested-loop join's R predicate evaluations.
-    * The tag-key array is materialized per METRIC before the join:
-    * inlining map_keys(tags) into the join input would re-extract it
-    * per exploded row. StreamingEngineSpec pins
-    * [[graft.streaming.DynamicRules.fanOut]] to this join. */
-  private[graft] def fanOutJoin(metricFrame: DataFrame, activeRules: Seq[RuleRow]): DataFrame = {
-    val book = activeRules
-      .filter(r => r.grouping_key_names != null && !r.grouping_key_names.contains(null))
-    val freq = book.flatMap(_.grouping_key_names).groupMapReduce(identity)(_ => 1)(_ + _)
-    val pivots = book.map(_.grouping_key_names.minByOption(k => (freq(k), k))
-      .getOrElse(KeylessPivot))
-    val rules = metricFrame.sparkSession.createDataFrame(
-      book.zip(pivots).map { case (r, p) => Row.fromSeq(r.productIterator.toSeq :+ p) }.asJava,
-      ruleRowEncoder.schema.add("_pivot", StringType))
-    val pivotVals = pivots.distinct.sorted
-    metricFrame.withColumn("_tag_keys", map_keys(col("tags")))
-      .withColumn("_pivot",
-        // Set-equal to array_intersect(tag_keys ++ [sentinel],
-        // pivotVals) — but iterating the (few, distinct, sorted)
-        // pivot literals with array_contains probes costs no per-row
-        // hash-set allocation, and with a homogeneous book it is one
-        // containment check per metric.
-        explode(filter(typedlit(pivotVals),
-          p => (p === KeylessPivot) || array_contains(col("_tag_keys"), p))))
-      .join(broadcast(rules), "_pivot")
-      .filter(graft.functions.array_contains_all(col("_tag_keys"),
-        col("grouping_key_names")))
-      .drop("_pivot", "_tag_keys")
   }
 
   /** Derived once: deriving a product encoder runs Scala reflection,
@@ -335,35 +275,8 @@ object CepQuery {
   /** A rule's window width in ms. */
   private val wMs: Column = (col("window_minutes").cast("long") * 60000L).as("w_ms")
 
-  /** planAll step 3 — the per-(metric, rule) columns every CEP plan
-    * reads: rule parameters, window width/slide in ms, the group's tag
-    * values, event time and the measure `v`. A metric lacking the
-    * rule's measure is no event of that rule and is dropped here:
-    * aggregates ignore a null anyway, and the stateful engine's
-    * [[graft.streaming.StatefulCep.CepEvent]] has no null measure (nor
-    * does [[graft.streaming.DynamicRules.fanOut]], pinned to this). */
-  private[graft] def prepareFanned(joined: DataFrame): DataFrame =
-    joined
-      .select(
-        col("rule_id"),
-        col("agg_type"), col("cmp_op"), col("limit"),
-        col("window_type"),
-        wMs,
-        (col("window_slide_minute").cast("long") * 60000L).as("s_ms"),
-        graft.functions.map_values_for_keys(col("tags"), col("grouping_key_names"))
-          .as("group_vals"),
-        col("eventTime"),
-        unix_millis(col("eventTime")).as("ev_ms"),
-        element_at(col("metrics"), col("agg_field")).as("v"))
-      .filter(col("v").isNotNull)
-
-  /** The reference's groupId, `ruleId_tagVal1_tagVal2…`
-    * (PartitionEngine.java:72-81), over [[prepareFanned]]'s columns. */
-  private[graft] val groupId: Column =
-    concat_ws("_", col("rule_id").cast("string"), col("group_vals"))
-
-  /** planAll steps 4-5 — the single hash-aggregation shuffle on
-    * (rule_id, group_vals, ws_ms), keyed like the reference's
+  /** The single hash-aggregation shuffle on
+    * (rule_id, group_id, ws_ms), keyed like the reference's
     * keyBy(groupId), and the window's partials. The rule parameters
     * [[judgeWindows]] reads (`agg_type`, `cmp_op`, `limit`) and `w_ms`
     * are constant per rule, so they stay out of the aggregation key:
@@ -372,7 +285,7 @@ object CepQuery {
   private def aggregateAndEmit(windowed: DataFrame, book: Seq[RuleRow]): DataFrame = {
     val p = partials(col("v"))
     val agged = windowed
-      .groupBy(col("rule_id"), col("group_vals"), col("ws_ms"))
+      .groupBy(col("rule_id"), col("group_id"), col("ws_ms"))
       .agg(p.sumV.as("sum_v"), p.cnt.as("cnt_v"), p.minV.as("min_v"),
         p.maxV.as("max_v"))
     val params = windowed.sparkSession.createDataset(book)(ruleRowEncoder)
@@ -380,7 +293,7 @@ object CepQuery {
 
     judgeWindows(agged.join(broadcast(params), "rule_id")).select(
       col("rule_id"),
-      groupId.as("group_id"),
+      col("group_id"),
       timestamp_millis(col("ws_ms")).as("window_start"),
       timestamp_millis(col("ws_ms") + col("w_ms")).as("window_end"),
       col("result"))

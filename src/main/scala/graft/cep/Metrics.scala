@@ -24,7 +24,7 @@ object Metrics {
       map(lit("value"), col("value")).as("metrics"))
 
   /** Flat, Encoder-friendly mirror of [[graft.model.Rule]] for use as a
-    * DataFrame (broadcast side of [[CepQuery.planAll]]). Comparator is
+    * DataFrame (the rule book of [[CepQuery.planAll]]). Comparator is
     * stored in symbol form. */
   final case class RuleRow(
       rule_id: Int,

@@ -50,14 +50,6 @@ object GraftFunctions {
       expectArgs("word_shingles", args, 2)
       WordShingles(args(0), litInt(args(1), "n"))
     },
-    "array_contains_all" -> { args =>
-      expectArgs("array_contains_all", args, 2)
-      ArrayContainsAll(args(0), args(1))
-    },
-    "map_values_for_keys" -> { args =>
-      expectArgs("map_values_for_keys", args, 2)
-      MapValuesForKeys(args(0), args(1))
-    },
     "window_starts" -> { args =>
       expectArgs("window_starts", args, 4)
       WindowStartsExpr(args :+ Literal(0L)) // the epoch grid

@@ -218,11 +218,6 @@ package object functions {
     * pass (codegen'd) — see [[org.apache.spark.sql.graft.MetricRoute]]. */
   def metric_route(m: Column): Column = MetricRouteColumns.metricRoute(m)
 
-  /** Every element of `needles` present in `haystack` (codegen'd) —
-    * see [[org.apache.spark.sql.graft.ArrayContainsAll]]. */
-  def array_contains_all(haystack: Column, needles: Column): Column =
-    CepExprColumns.arrayContainsAll(haystack, needles)
-
   /** Covering window starts on the grid with origin `anchor` (0 = the
     * epoch grid; codegen'd) — see
     * [[org.apache.spark.sql.graft.WindowStartsExpr]]. */
@@ -234,11 +229,6 @@ package object functions {
     * fixed-width long-limb buffer (decimal(38,6) result) — see
     * [[org.apache.spark.sql.graft.LimbSum]]. */
   def limb_sum(v: Column): Column = LimbSumColumns.limbSum(v)
-
-  /** Map values for an array of keys, in key order (codegen'd) — see
-    * [[org.apache.spark.sql.graft.MapValuesForKeys]]. */
-  def map_values_for_keys(m: Column, keys: Column): Column =
-    CepExprColumns.mapValuesForKeys(m, keys)
 
   /** Oracle-portable md5 winnowed fingerprints (ARRAY<STRING> of hex
     * gram hashes) — see [[org.apache.spark.sql.graft.Md5WinnowFingerprint]]. */

@@ -509,13 +509,7 @@ object Dedup {
       cand: DataFrame, idx: DataFrame, threshold: Double,
       persist: Persistence = Persistence.Local,
       maxBroadcastCand: Long = 4L << 20): DataFrame = {
-    // Always at least localCheckpoint the candidates, even under
-    // Persistence.Off: the count gate plus the two/three consuming
-    // branches would otherwise recompute the entire candidate-
-    // generation plan per consumer. Off keeps governing the big
-    // shingle-index intermediates, where its small-corpus win lives.
-    val mat = if (persist == Persistence.Off) Persistence.Local else persist
-    val c0 = mat.lazily(cand)
+    val c0 = persist.lazily(cand)
     val selective = c0.count() <= maxBroadcastCand
     val (c, idxB) =
       if (selective)

@@ -16,7 +16,12 @@ import org.apache.spark.sql.DataFrame
   * store in production) via `checkpoint()`: an executor loss recomputes
   * nothing and loses nothing. At 100 TB the shingle/bucket index is
   * exactly the artifact you would persist to reliable storage anyway —
-  * this knob is that decision, made explicit per call. */
+  * this knob is that decision, made explicit per call.
+  *
+  * Both values materialize: there is no "recompute it" choice, since
+  * every consumer of such an intermediate (a count gate plus two or
+  * three join branches, or the next round of a loop) would otherwise
+  * re-run the whole plan that made it. */
 sealed trait Persistence {
   /** Eager: materializes now (its own job), returns the truncated frame. */
   def apply(df: DataFrame): DataFrame
@@ -37,15 +42,5 @@ object Persistence {
   case object Reliable extends Persistence {
     override def apply(df: DataFrame): DataFrame = df.checkpoint()
     override def lazily(df: DataFrame): DataFrame = df.checkpoint(eager = false)
-  }
-  /** No materialization: every consuming plan branch recomputes the
-    * intermediate from source. Measurably the faster choice for SMALL
-    * corpora (AB_r7 `span_persist`: the checkpoint job costs ~20% at
-    * sf0.1, where re-shingling is cheap and pipelines better) — but at
-    * scale the recompute doubles the CPU-dense stage, so the operators
-    * keep [[Local]] as their default. */
-  case object Off extends Persistence {
-    override def apply(df: DataFrame): DataFrame = df
-    override def lazily(df: DataFrame): DataFrame = df
   }
 }

@@ -26,9 +26,15 @@ import graft.streaming.StatefulCep.CepEvent
   *  - every fan-out task ([[fanOut]]) starts by listing that directory
   *    (one cheap metadata call against a dir holding a handful of
   *    files) and, only when the max version moved, re-reads the
-  *    snapshot into a per-executor-JVM cache. So a rule change is
-  *    picked up at the next micro-batch's task launch with no query
-  *    restart, no replanning, and no per-event cost.
+  *    snapshot and indexes it into a [[Matcher]] held in a
+  *    per-executor-JVM cache. So a rule change is picked up at the
+  *    next micro-batch's task launch with no query restart, no
+  *    replanning, and no per-event cost.
+  *
+  * The [[Matcher]] is the one metric × rule match of the engine:
+  * `CepQuery.planAll` fans out through it too, over its collected
+  * book, so the batch and stream engines cannot disagree on which
+  * rules an event matches or which group it lands in.
   *
   * The fanned-out events carry the full rule parameters (the
   * [[CepEvent]] contract), and the downstream stateful operator's
@@ -95,35 +101,77 @@ object DynamicRules {
     r.window_type, r.window_minutes.toLong * 60000L,
     r.window_slide_minute.toLong * 60000L, r.agg_type, r.cmp_op, r.limit)
 
-  /** version → compiled snapshot, one entry per rule directory, shared
-    * by every task in this executor JVM. */
-  private val cache = TrieMap.empty[String, (Long, Array[Compiled])]
+  /** The one rule matcher of both CEP engines, [[fanOut]] and
+    * `CepQuery.planAll`, over the ACTIVE rules of `rows`. A metric
+    * matches a rule when every grouping key of the rule is in its tag
+    * map (Rule.java:63-66); each match with a non-null measure is one
+    * [[CepEvent]], whose `group_id` is the reference's
+    * `ruleId_tagVal1_tagVal2…` (PartitionEngine.java:72-81, null tag
+    * values skipped). A rule whose key list is null or holds a null
+    * can match no tag map and is left out.
+    *
+    * Each rule is indexed under its RAREST grouping key across the
+    * book (the key the fewest rules group by, ties lexicographic), so
+    * a metric probes the index once per tag key, and only the rules
+    * found there and the keyless ones pay the full key check. A rule
+    * sits under one key and a map's keys are distinct, so no (metric,
+    * rule) pair comes out twice. */
+  private[graft] final class Matcher(rows: Seq[RuleRow]) extends Serializable {
+    private val (keyless, byPivot) = {
+      val book = rows.filter(r => r.rule_state == graft.model.RuleState.Active.name &&
+          r.grouping_key_names != null && !r.grouping_key_names.contains(null))
+        .sortBy(_.rule_id).map(compile)
+      val freq = book.flatMap(_.keys).groupMapReduce(identity)(_ => 1)(_ + _)
+      val (none, keyed) = book.partition(_.keys.isEmpty)
+      (none.toArray, keyed.groupBy(_.keys.minBy(k => (freq(k), k)))
+        .map { case (k, rs) => k -> rs.toArray })
+    }
 
-  /** The newest published snapshot, re-read only when the directory's
-    * max version moved. Called once per task. */
+    def events(m: MetricRow): Iterator[CepEvent] =
+      if (m.eventTime == null || m.tags == null || m.metrics == null) Iterator.empty
+      else (keyless.iterator ++ m.tags.keysIterator.flatMap(k =>
+          byPivot.get(k).fold(Iterator.empty[Compiled])(_.iterator)))
+        .filter(_.keys.forall(m.tags.contains))
+        .flatMap { r =>
+          m.metrics.get(r.aggField).flatMap(Option(_)).map { v =>
+            val gid = (Iterator(r.ruleId.toString) ++
+              r.keys.iterator.flatMap(k => Option(m.tags(k)))).mkString("_")
+            CepEvent(r.ruleId, gid, m.eventTime, m.eventTime.getTime, v.doubleValue,
+              r.windowType, r.wMs, r.sMs, r.aggType, r.cmpOp, r.limit)
+          }
+        }
+  }
+
+  private val NoRules = new Matcher(Nil)
+
+  /** version → the snapshot's [[Matcher]], one entry per rule
+    * directory, shared by every task in this executor JVM. */
+  private val cache = TrieMap.empty[String, (Long, Matcher)]
+
+  /** The newest published snapshot, re-read and re-indexed only when
+    * the directory's max version moved. Called once per task. */
   private[streaming] def currentRules(dir: String,
-      conf: Configuration): Array[Compiled] = {
+      conf: Configuration): Matcher = {
     val d = new Path(dir)
     val fs = d.getFileSystem(conf)
     // A directory that doesn't exist yet (fanOut before any persist —
     // fanOut is public API) is an empty book, same as an empty rule
     // frame in CepQuery.planAll, not a task failure.
-    if (!fs.exists(d)) return Array.empty
+    if (!fs.exists(d)) return NoRules
     val latest = fs.listStatus(d).foldLeft(-1L) { (acc, st) =>
       st.getPath.getName match {
         case SnapshotName(v) => math.max(acc, v.toLong)
         case _ => acc
       }
     }
-    if (latest < 0) return Array.empty
+    if (latest < 0) return NoRules
     cache.get(dir) match {
       case Some((v, rules)) if v == latest => rules
       case _ =>
         val in = new ObjectInputStream(fs.open(new Path(d, fileName(latest))))
         val rows = try in.readObject().asInstanceOf[Array[RuleRow]]
           finally in.close()
-        val rules = rows.filter(_.rule_state == graft.model.RuleState.Active.name)
-          .sortBy(_.rule_id).map(compile)
+        val rules = new Matcher(rows.toSeq)
         cache.put(dir, (latest, rules))
         rules
     }
@@ -138,16 +186,26 @@ object DynamicRules {
       tags: Map[String, String],
       metrics: Map[String, java.lang.Double])
 
-  /** The one way rules reach [[StatefulCep.run]]: metric ×
-    * current-snapshot rule match as a per-task loop, not planAll's
-    * plan-frozen broadcast join — whose rows (`prepareFanned(fanOutJoin)`
-    * plus `groupId`) the parity spec pins these to: a rule matches when
-    * every grouping key is present in the event's tag map; `group_id`
-    * is `ruleId_tagVal…` with null tag values skipped (concat_ws
-    * semantics); a missing or null measure produces no event. Rules
-    * are KBs and the loop is O(rules) per event with candidate check
-    * on (few) tag keys — the same work the reference's per-event
-    * broadcast-state lookup does (CEPEngine.java:36-64). */
+  /** Derived once: deriving a product encoder runs Scala reflection,
+    * which every plan build would pay again. */
+  private lazy val metricEnc = Encoders.product[MetricRow]
+  private lazy val eventEnc = Encoders.product[CepEvent]
+
+  /** Each metric of `metricFrame` fanned out to its rules by the
+    * [[Matcher]] that `rules` returns, called once per task. */
+  private[graft] def matched(metricFrame: DataFrame)(rules: () => Matcher): DataFrame =
+    metricFrame.select("eventTime", "tags", "metrics").as(metricEnc)
+      .mapPartitions { it =>
+        val m = rules()
+        it.flatMap(m.events)
+      }(eventEnc)
+      .toDF()
+
+  /** The one way rules reach [[StatefulCep.run]]: each task matches
+    * its metrics against the newest snapshot under `ruleDir`
+    * ([[currentRules]]), through the same [[Matcher]] as
+    * `CepQuery.planAll`, and the events are watermarked on
+    * `eventTime`. */
   def fanOut(metricFrame: DataFrame, ruleDir: String,
       watermarkDelay: String = "0 seconds"): DataFrame = {
     val spark = metricFrame.sparkSession
@@ -157,31 +215,7 @@ object DynamicRules {
     // micro-batch re-reading the whole conf from its closure.
     val conf = spark.sparkContext.broadcast(
       new SerializableConfiguration(spark.sessionState.newHadoopConf()))
-    implicit val mEnc = Encoders.product[MetricRow]
-    implicit val eEnc = Encoders.product[CepEvent]
-    metricFrame.select("eventTime", "tags", "metrics").as[MetricRow]
-      .mapPartitions { it =>
-        val rules = currentRules(ruleDir, conf.value.value)
-        it.flatMap { m =>
-          if (m.eventTime == null || m.tags == null || m.metrics == null)
-            Iterator.empty
-          else {
-            val evMs = m.eventTime.getTime
-            rules.iterator
-              .filter(r => r.keys.forall(m.tags.contains))
-              .flatMap { r =>
-                m.metrics.get(r.aggField).flatMap(Option(_)).map { v =>
-                  val gid = (Iterator(r.ruleId.toString) ++
-                    r.keys.iterator.flatMap(k => Option(m.tags(k))))
-                    .mkString("_")
-                  CepEvent(r.ruleId, gid, m.eventTime, evMs, v.doubleValue,
-                    r.windowType, r.wMs, r.sMs, r.aggType, r.cmpOp, r.limit)
-                }
-              }
-          }
-        }
-      }
+    matched(metricFrame)(() => currentRules(ruleDir, conf.value.value))
       .withWatermark("eventTime", watermarkDelay)
-      .toDF()
   }
 }

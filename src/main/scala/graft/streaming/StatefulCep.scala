@@ -74,9 +74,9 @@ import graft.model.WindowType
   */
 object StatefulCep {
 
-  /** One fanned-out event: metric × matched rule (a row of
-    * [[DynamicRules.fanOut]], the same rows as CepQuery.planAll's
-    * rule-match join and projection, steps 1-3).
+  /** One fanned-out event: metric × matched rule, as
+    * [[DynamicRules.Matcher]] emits it for [[DynamicRules.fanOut]] and
+    * CepQuery.planAll alike.
     * `eventTime` carries the watermark into the stateful operator
     * (Spark's event-time mode requires the watermarked column to reach
     * it); `ev_ms` is its millisecond copy for arithmetic. */

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.cep.{Alignment, CepQuery, Metrics}
 import graft.model._
+import graft.streaming.DynamicRules
 
 /** Engine semantics against the reference's own fixtures:
   * the resources/rules + resources/metrics demo (SURVEY §7.2) and the
@@ -47,8 +48,9 @@ class CepQuerySpec extends AnyFunSuite {
   test("keyless rule through planAll: sentinel pivot matches every metric, one global group") {
     // A rule with NO grouping keys has a vacuously-true key-subset
     // predicate (reference isHit over an empty key list): it must
-    // match every metric via the sentinel pivot and aggregate them as
-    // one group whose group_id is just the rule id. Also exercises a
+    // match every metric (the matcher keeps keyless rules as
+    // candidates of every metric) and aggregate them as one group
+    // whose group_id is just the rule id. Also exercises a
     // mixed book — the keyed rule must be unaffected.
     val keyless = demoRule.copy(ruleId = 7,
       groupingKeyNames = Seq.empty, limit = BigDecimal(0))
@@ -283,13 +285,13 @@ class CepQuerySpec extends AnyFunSuite {
     assert(fromAll.nonEmpty && fromAll == fromSingles)
   }
 
-  test("randomized fan-out: pivot hash join == brute-force subset predicate over random books") {
-    // The pivot machinery (rarest-key choice, sentinel, intersect
-    // pruning) must be invisible: for ANY tag map and ANY rule key
-    // set, a (metric, rule) pair joins iff the rule is ACTIVE and its
-    // keys are a subset of the metric's tags. Seeded random books
-    // exercise keyless rules, paused rules, shared/unshared pivot
-    // keys, and metrics missing pivot values entirely.
+  test("randomized fan-out: matcher == brute-force subset predicate") {
+    // The rarest-key index must be invisible: for ANY tag map and ANY
+    // rule key set, a (metric, rule) pair comes out of the one matcher
+    // (planAll's and DynamicRules.fanOut's) iff the rule is ACTIVE and
+    // its keys are a subset of the metric's tags, and never twice.
+    // Seeded random books exercise keyless rules, paused rules,
+    // shared/unshared index keys, and metrics missing them entirely.
     val rnd = new scala.util.Random(11)
     val keyPool = (0 until 6).map(i => s"k$i")
     val metrics = (1 to 40).map { id =>
@@ -307,17 +309,21 @@ class CepQuerySpec extends AnyFunSuite {
       r <- rules
       if r.ruleState == RuleState.Active && r.groupingKeyNames.forall(tags.contains)
     } yield (mid, r.ruleId)).toSet
+    // A metric's id rides as its event time offset.
     val metricDF = metrics.toDF("mid", "kv").select(
-      col("mid"),
-      timestamp_millis(lit(t0)).as("eventTime"),
+      timestamp_millis(lit(t0) + col("mid")).as("eventTime"),
       col("kv").as("tags"),
       map(lit("cpu_usage"), lit(1.0)).as("metrics"))
     // The book as a local relation, and as a frame whose collect runs
-    // Spark jobs (the rule book read must not depend on its storage).
+    // Spark jobs (the rule book read must not depend on its storage),
+    // each with and without its PAUSE rows (the matcher drops them).
     val book = Metrics.rulesToDF(spark, rules)
-    for (ruleFrame <- Seq(book, book.repartition(3))) {
-      val got = CepQuery.fanOutJoin(metricDF, CepQuery.activeBook(ruleFrame))
-        .select(col("mid"), col("rule_id")).as[(Long, Int)].collect()
+    val rows = Seq(book, book.repartition(3)).flatMap(f =>
+      Seq(CepQuery.activeBook(f), f.as[Metrics.RuleRow].collect().toSeq))
+    for (r <- rows) {
+      val matcher = new DynamicRules.Matcher(r)
+      val got = DynamicRules.matched(metricDF)(() => matcher)
+        .select(col("ev_ms") - t0, col("rule_id")).as[(Long, Int)].collect()
       assert(got.length == got.toSet.size, "a (metric, rule) pair fanned out twice")
       assert(got.toSet == expected)
     }

@@ -11,9 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - BroadcastNestedLoopJoin only where it is the declared design:
   *    sim_topk (broadcast bounded query vectors against the corpus),
   *    dedup_embedding (the exact all-pairs verification baseline; the
-  *    LSH twin is the scale path). The CEP rule fan-out is NOT in this
-  *    set anymore: the pivot-key spelling makes it a BroadcastHashJoin
-  *    (O(M·R) predicate loop → O(M + matches) hash probes);
+  *    LSH twin is the scale path). The CEP rule fan-out is no join at
+  *    all: it is one MapPartitions through the rule matcher, below
+  *    the aggregation, and planAll's only join is the broadcast
+  *    join-back of rule parameters above it;
   *  - every one-pass/static CEP plan has exactly one aggregation
   *    shuffle (the hash aggregation keyed like the reference's
   *    keyBy(groupId)); the stateless parse queries have none. This pins
@@ -71,10 +72,23 @@ class PlanShapeSpec extends AnyFunSuite {
       // r11: the temperature plan crossJoins its one-row weight-sum.
       "curation_mixture_temp")
 
-  test("the CEP rule fan-out is a broadcast HASH join on the pivot key") {
+  test("the CEP rule fan-out joins nothing below the aggregation") {
+    // The fan-out is one MapPartitions (the rule matcher) over the
+    // scan or its spread; the one join is the broadcast join-back of
+    // rule parameters on rule_id, above the aggregation exchange. The
+    // tree string prints a node's subtree after it, so the text from
+    // the aggregation exchange on is its input, plus the join-back's
+    // broadcast build side (a local relation, no join).
     for (q <- Seq("cep_multi_rule", "cep_multi_rule_first_aligned")) {
-      assert(plans(q).contains("BroadcastHashJoin"),
-        s"$q lost the hash-joinable pivot-key fan-out")
+      val plan = plans(q)
+      val (above, below) = plan.splitAt(plan.indexOf("Exchange hashpartitioning"))
+      assert(above.nonEmpty && below.nonEmpty, s"$q: no aggregation exchange:\n$plan")
+      assert(!below.contains("Join") && below.contains("MapPartitions"),
+        s"$q: the fan-out below the aggregation is not one MapPartitions:\n$plan")
+      assert("BroadcastHashJoin".r.findAllIn(plan).size == 1 &&
+        above.contains("BroadcastHashJoin"),
+        s"$q: expected exactly one broadcast join, above the aggregation:\n$plan")
+      assert(!plan.contains("BroadcastNestedLoopJoin"), s"$q plans a BNLJ:\n$plan")
     }
   }
 

@@ -128,6 +128,19 @@ class StatefulCepSpec extends AnyFunSuite {
       "stateful_parity_sliding", StatefulCep.run(_))
   }
 
+  test("colliding tag tuples are one group in both engines") {
+    // The tag tuples ("a_b","c") and ("a","b_c") both join to the
+    // group id 1_a_b_c. The reference keys its windows on that id
+    // (PartitionEngine.java:72-81), so both engines emit ONE window
+    // holding both events.
+    val rule = Rule(1, RuleState.Active, WindowType.Tumbling, 2, 0, Seq("k1", "k2"),
+      AggType.Sum, "cpu_usage", CmpOp.Gt, BigDecimal(-1))
+    val out = parityCheck(rule, "stateful_parity_collide", StatefulCep.run(_),
+      Seq(Ev(t0, "a_b|c", 1), Ev(t0 + 1000, "a|b_c", 2)), Ev(t0 + 3600000, "x|y", 0),
+      twoKeyFrame)
+    assert(out.map(r => (r._1, r._3)) == Set(("1_a_b_c", 3.0)))
+  }
+
   test("stateful Scala fold matches the batch plan for every AggType x CmpOp (limits below, at, above)") {
     import graft.cep.Metrics.RuleRow
     import graft.streaming.StatefulCep.CepEvent
@@ -460,30 +473,44 @@ class StatefulCepSpec extends AnyFunSuite {
     assert(batch == Map("9_a" -> 16.0, "9_b" -> 20.0))
   }
 
+  /** `g` as two tags, `k1|k2`. */
+  private def twoKeyFrame(df: DataFrame): DataFrame = {
+    val g = split(col("g"), "\\|")
+    df.select(
+      timestamp_millis(col("ms")).as("eventTime"),
+      map(lit("k1"), g(0), lit("k2"), g(1)).as("tags"),
+      map(lit("cpu_usage"), col("cpu").cast("double")).as("metrics"))
+  }
+
+  /** Streams `events`, then `advance` to push the watermark far ahead,
+    * through `run`, and requires the closed windows to equal planAll's
+    * over `events`; returns them as (group_id, window_start, result). */
   private def parityCheck(rule: Rule, table: String,
-      run: DataFrame => org.apache.spark.sql.Dataset[StatefulCep.CepResult]): Unit = {
+      run: DataFrame => org.apache.spark.sql.Dataset[StatefulCep.CepResult],
+      events: Seq[Ev] = Seq(
+        Ev(t0, "a", 3), Ev(t0 + 30000, "a", 12), Ev(t0 + 50000, "b", 20),
+        Ev(t0 + 130000, "a", 7), Ev(t0 + 140000, "b", 5)),
+      advance: Ev = Ev(t0 + 3600000, "a", 0),
+      frame: DataFrame => DataFrame = toMetricFrame): Set[(String, Long, Double)] = {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
-    val events = Seq(
-      Ev(t0, "a", 3), Ev(t0 + 30000, "a", 12), Ev(t0 + 50000, "b", 20),
-      Ev(t0 + 130000, "a", 7), Ev(t0 + 140000, "b", 5))
     val rules = Metrics.rulesToDF(spark, Seq(rule))
-    val out = run(fannedOut(toMetricFrame(mem.toDF()), rules))
+    val out = run(fannedOut(frame(mem.toDF()), rules))
     val q = out.writeStream.format("memory").queryName(table)
       .outputMode("append").start()
     try {
       mem.addData(events: _*)
       q.processAllAvailable()
-      mem.addData(Ev(t0 + 3600000, "a", 0)) // advance watermark far ahead
+      mem.addData(advance)
       q.processAllAvailable()
       val streamed = spark.table(table)
         .select("group_id", "window_start", "result")
         .as[(String, Long, Double)].collect().toSet
-      val batch = CepQuery.planAll(
-        toMetricFrame(events.toDF()), rules)
+      val batch = CepQuery.planAll(frame(events.toDF()), rules)
         .select(col("group_id"), unix_millis(col("window_start")), col("result"))
         .as[(String, Long, Double)].collect().toSet
       assert(streamed == batch)
+      streamed
     } finally q.stop()
   }
 }

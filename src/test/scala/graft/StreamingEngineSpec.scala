@@ -350,7 +350,8 @@ class StreamingEngineSpec extends AnyFunSuite {
     assert(out == Map("1_business" -> 16.0, "1_work" -> 16.0))
   }
 
-  test("dynamic fan-out matches the broadcast-join fan-out (ACTIVE-only) on a batch frame") {
+  test("DynamicRules.fanOut: ACTIVE matchable rules, keyless group id") {
+    import graft.streaming.StatefulCep.CepEvent
     val tmp = java.nio.file.Files.createTempDirectory("graft_dynrules_").toString
     val rules = Seq(
       graft.cep.Metrics.toRow(demoRule), // keyed, ACTIVE
@@ -362,22 +363,24 @@ class StreamingEngineSpec extends AnyFunSuite {
         groupingKeyNames = Seq("t_zone")))) // key absent from tags
     graft.streaming.DynamicRules.persist(spark, tmp, 1L, rules)
     // A metric that matches rules 1 and 2 by tags but lacks their
-    // measure fans out to no event on either path.
+    // measure fans out to no event.
     val noMeasure = Seq((t0 + 6000L, "business")).toDF("ms", "g").select(
       timestamp_millis(col("ms")).as("eventTime"),
       map(lit("t_group"), col("g")).as("tags"),
       map(lit("mem_usage"), lit(1.0)).as("metrics"))
     val batch = toMetricFrame(demoEvents.toDF()).unionByName(noMeasure)
     val dyn = graft.streaming.DynamicRules.fanOut(batch, tmp)
-      .as[graft.streaming.StatefulCep.CepEvent].collect().toSet
-    // planAll's own rule-match join and projection, plus the group id.
-    val stat = CepQuery.prepareFanned(
-        CepQuery.fanOutJoin(batch, CepQuery.activeBook(rules.toDF())))
-      .withColumn("group_id", CepQuery.groupId).drop("group_vals")
-      .as[graft.streaming.StatefulCep.CepEvent].collect().toSet
-    assert(dyn.nonEmpty && dyn == stat)
-    assert(dyn.map(_.rule_id) == Set(1, 2)) // ACTIVE + matchable only
-    assert(dyn.filter(_.rule_id == 2).map(_.group_id) == Set("2")) // keyless gid
+      .as[CepEvent].collect()
+    // Each demo event once per ACTIVE rule whose keys its tags hold,
+    // with rule 1's parameters and the reference's group id.
+    def event(e: Ev, rule: Int, gid: String): CepEvent =
+      CepEvent(rule, gid, new java.sql.Timestamp(e.ms), e.ms, e.cpu.toDouble,
+        "tumbling", 120000L, 0L, "SUM", ">", 11.0)
+    val expected = demoEvents.flatMap(e =>
+      Seq(event(e, 1, s"1_${e.g}"), event(e, 2, "2")))
+    assert(dyn.length == expected.length && dyn.toSet == expected.toSet)
+    assert(dyn.map(_.rule_id).toSet == Set(1, 2)) // ACTIVE + matchable only
+    assert(dyn.filter(_.rule_id == 2).map(_.group_id).toSet == Set("2")) // keyless gid
     assert(!dyn.exists(_.ev_ms == t0 + 6000L))
   }
 
